@@ -3,15 +3,21 @@ manifests with lineage and throughput metrics, enabling resume.
 
 North rule: "resumable from checkpoint with per-partition lineage +
 metrics". In this sandbox the table format is partitioned parquet laid out
-Iceberg-style (``tier=1h/bucket_date=YYYY-MM-DD/``); on a real cluster the
-writes map 1:1 onto ``df.writeTo(catalog.table).overwritePartitions()``
+Iceberg-style: the store root is ONE table partitioned by
+``(tier, bucket_date)`` (``tier=1h/bucket_date=YYYY-MM-DD/``), so every
+tier lands in one dynamic-partition-overwrite write; on a real cluster that
+write maps 1:1 onto ``df.writeTo(catalog.table).overwritePartitions()``
 with Iceberg snapshot ids replacing the manifest's ``snapshot_id``.
 
-Checkpoint granularity = one source day (the natural Iceberg partition of
-the raw table by ``days(warc_ts)``): each completed day writes a manifest
-JSON carrying {input fingerprint, partition range, row counts, points/sec}.
-``run_rollup`` skips days whose manifest exists and whose fingerprint
-matches — a killed job resumes from the next unprocessed partition.
+Checkpoint granularity = one partition: each fine-tier source day (the
+natural Iceberg partition of the raw table by ``days(warc_ts)``) and each
+coarse bucket date gets a manifest JSON carrying {input fingerprint,
+partition, row counts, points/sec}. Manifests are written after the write
+commits, each atomically (temp file + ``os.replace``), and their
+``output_rows`` come from the parquet footers of the files just written —
+metadata only, no Spark job. ``run_rollup`` skips days whose manifest
+exists and whose fingerprint matches — a killed job resumes from the next
+unprocessed partition.
 """
 
 from __future__ import annotations
@@ -19,10 +25,12 @@ from __future__ import annotations
 import datetime as _dt
 import hashlib
 import json
+import os
 import shutil
 import time
 import uuid
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,19 +45,21 @@ from pytimetk_spark.rollup.tiers import (
 
 @dataclass
 class PartitionManifest:
-    snapshot_id: str
     tier: str
-    partition: str  # source day YYYY-MM-DD
+    partition: str  # source day / bucket date YYYY-MM-DD
     input_fingerprint: str
     input_rows: int
-    output_rows: int
-    elapsed_sec: float
-    points_per_sec: float
-    written_at: float
+    # filled in after the write job commits
+    output_rows: int = 0
+    elapsed_sec: float = 0.0
+    points_per_sec: float = 0.0
+    written_at: float = 0.0
+    snapshot_id: str = field(default_factory=lambda: uuid.uuid4().hex)
 
 
 class TierStore:
-    """Directory layout:
+    """Directory layout (the base directory is one parquet table
+    partitioned by ``tier`` then ``bucket_date``):
     base/
       tier=1h/bucket_date=.../part-*.parquet
       _manifests/{tier}/{partition}.json
@@ -61,6 +71,18 @@ class TierStore:
 
     def tier_path(self, tier: str) -> str:
         return str(self.base / f"tier={tier}")
+
+    def partition_dir(self, tier: str, bucket_date: str) -> Path:
+        return Path(self.tier_path(tier)) / f"bucket_date={bucket_date}"
+
+    def partition_rows(self, tier: str, bucket_date: str) -> int:
+        """Rows in one tier partition, summed from its parquet footers."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(f).num_rows
+            for f in self.partition_dir(tier, bucket_date).glob("*.parquet")
+        )
 
     def manifest_path(self, tier: str, partition: str) -> Path:
         d = self.base / "_manifests" / tier
@@ -74,7 +96,12 @@ class TierStore:
         return PartitionManifest(**json.loads(p.read_text()))
 
     def write_manifest(self, m: PartitionManifest) -> None:
-        self.manifest_path(m.tier, m.partition).write_text(json.dumps(asdict(m)))
+        """Atomic: a write killed partway leaves the previous manifest (or
+        none) in place, never truncated JSON."""
+        p = self.manifest_path(m.tier, m.partition)
+        tmp = p.with_name(f".{p.name}.{uuid.uuid4().hex}.tmp")
+        tmp.write_text(json.dumps(asdict(m)))
+        os.replace(tmp, p)
 
     def manifests(self, tier: str) -> list[PartitionManifest]:
         d = self.base / "_manifests" / tier
@@ -89,7 +116,7 @@ class TierStore:
         return {m.partition for m in self.manifests(tier)}
 
     def drop_partition_dir(self, tier: str, bucket_date: str) -> bool:
-        p = Path(self.tier_path(tier)) / f"bucket_date={bucket_date}"
+        p = self.partition_dir(tier, bucket_date)
         if p.exists():
             shutil.rmtree(p)
             return True
@@ -156,20 +183,38 @@ def run_rollup(
     resume: bool = True,
     batch_days: int | None = None,
 ) -> list[PartitionManifest]:
-    """Roll the source into the fine tier, then rebuild coarser tiers FROM
-    the tier below (cheap — tier cardinality, and exact because stats
-    re-aggregate).
+    """Roll the source into the fine tier and every coarser tier FROM the
+    tier below (cheap — tier cardinality, and exact because stats
+    re-aggregate), in one Spark write job.
 
-    Scan discipline (round-2 rework): exactly TWO passes over the source
-    regardless of day count — one grouped aggregate for all per-day
-    fingerprints, one aggregation job covering every pending day (the
-    day filter is a partition-pruning predicate when the raw table is
-    laid out by ``days(warc_ts)``, the assumed Iceberg partitioning).
-    ``batch_days`` restores finer checkpoint granularity: pending days are
-    processed in chunks of that size (one job per chunk), trading extra
-    scans for smaller redo units after a mid-batch failure. Per-day
-    manifests are still written either way — a killed run resumes from
-    whichever days lack a matching fingerprint.
+    Scan discipline: one fingerprint pass (a grouped aggregate for all
+    per-day fingerprints) plus ONE write job, so a non-empty run starts two
+    SQL executions regardless of day or tier count. The write plans every
+    tier up front and dynamic-partition-overwrites all of them into the
+    store root, partitioned by ``(tier, bucket_date)``:
+
+    * the fine tier aggregates the pending days of the source (the day
+      filter is a partition-pruning predicate when the raw table is laid
+      out by ``days(warc_ts)``, the assumed Iceberg partitioning);
+    * each coarser tier re-aggregates the fresh rows of the tier below plus
+      the stored below-tier partitions of its changed buckets that this
+      job does not rewrite (read with a ``bucket_date`` partition filter).
+      The raw→fine exchange is shared by all tiers, so the raw relation is
+      scanned once.
+
+    Incremental maintenance: only the coarse partitions whose below-tier
+    inputs changed are rewritten (a late-arriving day reprocesses one 1d
+    and one 7d bucket, never the whole tier). Resume reconciliation: each
+    coarse manifest carries a fingerprint composed from the below-tier
+    manifests it aggregates (including the ones planned in this run); with
+    ``resume`` a coarse partition whose stored manifest is missing or
+    stale joins the plan even when no fresh rows feed it.
+
+    Manifests are written after the job commits; ``output_rows`` comes from
+    the written parquet footers. ``batch_days`` restores finer checkpoint
+    granularity: pending days are processed in chunks of that size, each
+    chunk running the same plan (one write job per chunk), trading extra
+    scans for smaller redo units after a mid-batch failure.
 
     Returns the manifests written this run (entries skipped via resume are
     not re-listed).
@@ -177,138 +222,114 @@ def run_rollup(
     if value_col is None:
         value_col = F.length("text")
 
-    written: list[PartitionManifest] = []
     fine = tiers[0]
     day_info = _day_fingerprints(source, ts_col)
-    pending = []
-    for day in sorted(day_info):
-        existing = store.read_manifest(fine, day) if resume else None
-        if existing and existing.input_fingerprint == day_info[day][0]:
-            continue  # already rolled up, inputs unchanged → resume skips
-        pending.append(day)
+    done = (
+        {m.partition: m.input_fingerprint for m in store.manifests(fine)}
+        if resume
+        else {}
+    )
+    # already rolled up with unchanged inputs → resume skips the day
+    pending = [d for d in sorted(day_info) if done.get(d) != day_info[d][0]]
 
-    chunk = batch_days if batch_days else max(len(pending), 1)
-    for i in range(0, len(pending), chunk):
-        batch = pending[i : i + chunk]
-        batch_dates = [_dt.date.fromisoformat(d) for d in batch]
-        t0 = time.time()
-        batch_df = source.filter(F.to_date(ts_col).isin(batch_dates))
-        tier_df = rollup_raw_to_tier(
-            batch_df, url_col, ts_col, value_col, TIER_FREQS[fine], salt_partials
-        ).withColumn("bucket_date", F.to_date("bucket_ts"))
-        tier_df.write.mode("overwrite").partitionBy("bucket_date").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(store.tier_path(fine))
-        elapsed = time.time() - t0
-        # per-day output rows from the written files (partition-pruned,
-        # parquet count pushdown — metadata-cheap)
-        out_counts = {
-            str(r["bucket_date"]): r["cnt"]
-            for r in spark.read.parquet(store.tier_path(fine))
-            .filter(F.col("bucket_date").isin(batch_dates))
-            .groupBy("bucket_date")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        total_out = sum(out_counts.values()) or 1
-        now = time.time()
-        for day in batch:
-            out_rows = out_counts.get(day, 0)
-            # amortized share of the batch job's wall-clock
-            day_elapsed = elapsed * (out_rows / total_out)
-            fingerprint, n_rows = day_info[day]
-            m = PartitionManifest(
-                snapshot_id=uuid.uuid4().hex,
-                tier=fine,
-                partition=day,
-                input_fingerprint=fingerprint,
-                input_rows=n_rows,
-                output_rows=out_rows,
-                elapsed_sec=day_elapsed,
-                points_per_sec=(out_rows / day_elapsed) if day_elapsed > 0 else 0.0,
-                written_at=now,
-            )
-            store.write_manifest(m)
-            written.append(m)
-
-    # coarser tiers: INCREMENTAL maintenance — only the coarse partitions
-    # whose below-tier inputs changed are re-aggregated and
-    # dynamic-partition-overwritten (the continuous-aggregate contract: a
-    # late-arriving day reprocesses one 1d bucket and one 7d bucket, never
-    # the whole tier). A fully-skipped resume run touches nothing.
-    #
-    # Resume reconciliation: `changed` from THIS run alone is not enough —
-    # a run killed after the fine parquet+manifests but before the coarse
-    # loop would leave coarse tiers permanently stale (the resumed run sees
-    # all fine fingerprints matching and writes nothing). So each coarse
-    # partition's manifest carries a fingerprint composed from the
-    # below-tier manifests it aggregates; on resume, partitions whose
-    # stored fingerprint is missing or differs from the expected one are
-    # added to the work list.
-    prev = fine
-    changed: list[_dt.date] = [
-        _dt.date.fromisoformat(m.partition) for m in written if m.tier == fine
-    ]
-    for tier in tiers[1:]:
-        freq = TIER_FREQS[tier]
-        below_manifests = store.manifests(prev)
-        by_coarse: dict[_dt.date, list[PartitionManifest]] = {}
-        for bm in below_manifests:
-            cd = _coarse_date(_dt.date.fromisoformat(bm.partition), freq)
-            by_coarse.setdefault(cd, []).append(bm)
-        expected_fp = {
-            cd: _compose_fingerprint(prev, ms) for cd, ms in by_coarse.items()
-        }
-        changed_set = {_coarse_date(d, freq) for d in changed}
-        if resume:
-            for cd, fp in expected_fp.items():
-                ex = store.read_manifest(tier, str(cd))
-                if ex is None or ex.input_fingerprint != fp:
-                    changed_set.add(cd)
-        coarse_dates = sorted(cd for cd in changed_set if cd in expected_fp)
-        if not coarse_dates:
-            prev = tier
-            changed = []
-            continue
-        t0 = time.time()
-        below = store.read_tier(spark, prev).drop("bucket_date")
-        from pytimetk_spark.functions.datetime import floor_date
-
-        coarse_key = F.to_date(floor_date(F.col("bucket_ts"), freq))
-        slice_df = below.filter(coarse_key.isin(coarse_dates))
-        coarse = rollup_tier_to_tier(slice_df, freq).withColumn(
-            "bucket_date", F.to_date("bucket_ts")
+    def fine_rows(days: list[str]) -> DataFrame:
+        rows = source.filter(
+            F.to_date(ts_col).isin([_dt.date.fromisoformat(d) for d in days])
         )
-        coarse.write.mode("overwrite").partitionBy("bucket_date").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(store.tier_path(tier))
-        elapsed = time.time() - t0
-        out_counts = {
-            str(r["bucket_date"]): r["cnt"]
-            for r in spark.read.parquet(store.tier_path(tier))
-            .filter(F.col("bucket_date").isin(coarse_dates))
-            .groupBy("bucket_date")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        total_out = sum(out_counts.values()) or 1
-        now = time.time()
-        for cd in coarse_dates:
-            out_rows = out_counts.get(str(cd), 0)
-            day_elapsed = elapsed * (out_rows / total_out)
-            m = PartitionManifest(
-                snapshot_id=uuid.uuid4().hex,
-                tier=tier,
-                partition=str(cd),
-                input_fingerprint=expected_fp[cd],
-                input_rows=-1,
-                output_rows=out_rows,
-                elapsed_sec=day_elapsed,
-                points_per_sec=(out_rows / day_elapsed) if day_elapsed > 0 else 0.0,
-                written_at=now,
-            )
-            store.write_manifest(m)
-            written.append(m)
-        prev = tier
-        changed = coarse_dates
+        return rollup_raw_to_tier(
+            rows, url_col, ts_col, value_col, TIER_FREQS[fine], salt_partials
+        )
+
+    chunk = batch_days or max(len(pending), 1)
+    written: list[PartitionManifest] = []
+    # an empty pending list still runs one plan: coarse reconciliation
+    for i in range(0, max(len(pending), 1), chunk):
+        batch = pending[i : i + chunk]
+        plan = {fine: [PartitionManifest(fine, d, *day_info[d]) for d in batch]}
+        frames = {fine: fine_rows(batch)} if batch else {}
+        _plan_coarse(spark, store, tiers, plan, frames, resume)
+        written += _write_planned(store, tiers, plan, frames)
     return written
+
+
+def _plan_coarse(
+    spark: SparkSession,
+    store: TierStore,
+    tiers: tuple[str, ...],
+    plan: dict[str, list[PartitionManifest]],
+    frames: dict[str, DataFrame],
+    resume: bool,
+) -> None:
+    """Extend ``plan`` / ``frames`` (fine tier already planned) with every
+    coarse partition to rewrite and the frame that produces it."""
+    for prev, tier in zip(tiers, tiers[1:]):
+        freq = TIER_FREQS[tier]
+        below = {m.partition: m for m in store.manifests(prev)}
+        below.update({m.partition: m for m in plan[prev]})
+        by_coarse: dict[_dt.date, list[PartitionManifest]] = {}
+        for m in below.values():
+            cd = _coarse_date(_dt.date.fromisoformat(m.partition), freq)
+            by_coarse.setdefault(cd, []).append(m)
+        expected = {cd: _compose_fingerprint(prev, ms) for cd, ms in by_coarse.items()}
+        todo = {
+            _coarse_date(_dt.date.fromisoformat(m.partition), freq)
+            for m in plan[prev]
+        }
+        if resume:
+            stored = {m.partition: m.input_fingerprint for m in store.manifests(tier)}
+            todo |= {cd for cd, fp in expected.items() if stored.get(str(cd)) != fp}
+        plan[tier] = [
+            PartitionManifest(tier, str(cd), expected[cd], -1) for cd in sorted(todo)
+        ]
+
+        fresh = {m.partition for m in plan[prev]}
+        kept = [
+            _dt.date.fromisoformat(m.partition)
+            for cd in sorted(todo)
+            for m in by_coarse[cd]
+            if m.partition not in fresh
+            and store.partition_dir(prev, m.partition).exists()
+        ]
+        inputs = [frames[prev]] if prev in frames else []
+        if kept:
+            inputs.append(
+                store.read_tier(spark, prev)
+                .filter(F.col("bucket_date").isin(kept))
+                .drop("bucket_date")
+            )
+        if inputs:
+            below_rows = reduce(DataFrame.unionByName, inputs)
+            frames[tier] = rollup_tier_to_tier(below_rows, freq)
+
+
+def _write_planned(
+    store: TierStore,
+    tiers: tuple[str, ...],
+    plan: dict[str, list[PartitionManifest]],
+    frames: dict[str, DataFrame],
+) -> list[PartitionManifest]:
+    """One dynamic-partition-overwrite job for every planned partition,
+    then the manifests with footer row counts."""
+    planned = [m for t in tiers for m in plan[t]]
+    if not planned:
+        return []
+    t0 = time.time()
+    parts = [frames[t].withColumn("tier", F.lit(t)) for t in tiers if t in frames]
+    if parts:
+        reduce(DataFrame.unionByName, parts).withColumn(
+            "bucket_date", F.to_date("bucket_ts")
+        ).write.mode("overwrite").partitionBy("tier", "bucket_date").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(str(store.base))
+    elapsed = time.time() - t0
+    for m in planned:
+        m.output_rows = store.partition_rows(m.tier, m.partition)
+    total_out = sum(m.output_rows for m in planned) or 1
+    now = time.time()
+    for m in planned:
+        # amortized share of the write job's wall-clock
+        m.elapsed_sec = elapsed * (m.output_rows / total_out)
+        m.points_per_sec = (m.output_rows / m.elapsed_sec) if m.elapsed_sec > 0 else 0.0
+        m.written_at = now
+        store.write_manifest(m)
+    return planned

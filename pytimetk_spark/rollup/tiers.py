@@ -72,7 +72,12 @@ def rollup_raw_to_tier(
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     value = value.cast("double").alias("__v__")
     bucket = floor_date(F.col(ts_col), freq).alias("bucket_ts")
-    base = df.select(F.col(url_col).alias("url"), bucket, value, F.col(ts_col).alias("__ts__"))
+    # no self-alias: a plan that reads this tier twice (run_rollup's write
+    # of 1h plus the 1d built from it) must canonicalize both copies alike,
+    # or the raw->tier exchange is not reused and the raw relation is
+    # scanned twice
+    url = F.col("url") if url_col == "url" else F.col(url_col).alias("url")
+    base = df.select(url, bucket, value, F.col(ts_col).alias("__ts__"))
 
     aggs = [
         F.count("__v__").alias("cnt"),
@@ -115,13 +120,7 @@ def _merge_aggs():
 def rollup_tier_to_tier(tier_df: DataFrame, to_freq: str) -> DataFrame:
     """Re-aggregate a finer tier into a coarser one (1h→1d, 1d→7d)."""
     coarse = floor_date(F.col("bucket_ts"), to_freq).alias("bucket_ts")
-    return (
-        tier_df.withColumn("__coarse__", coarse)
-        .drop("bucket_ts")
-        .withColumnRenamed("__coarse__", "bucket_ts")
-        .groupBy("url", "bucket_ts")
-        .agg(*_merge_aggs())
-    )
+    return tier_df.groupBy("url", coarse).agg(*_merge_aggs())
 
 
 def derived_stats(tier_df: DataFrame) -> DataFrame:

@@ -61,6 +61,70 @@ def test_tier_chain_single_shuffle(events, spark):
     assert "Exchange SinglePartition" not in plan
 
 
+def _tagged_executions(spark, description):
+    """Plan-graph nodes ``(name, desc)`` of every finished SQL execution
+    started under a job description, read from the status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = []
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.description() != description:
+            continue
+        nodes = []
+        graph = store.planGraph(e.executionId()).allNodes().iterator()
+        while graph.hasNext():
+            n = graph.next()
+            nodes.append((n.name(), n.desc()))
+        out.append(nodes)
+    return out
+
+
+def test_run_rollup_two_executions_one_raw_scan(spark, tmp_path):
+    """A non-empty run_rollup over 1h/1d/7d is one fingerprint pass plus
+    ONE write job for every tier; in the write, the 1d and 7d branches
+    reuse the raw->1h exchange, so the raw relation is scanned once, and a
+    coarse bucket's stored below-tier days are read by partition filter."""
+    from pytimetk_spark.rollup.store import TierStore, run_rollup
+    from pytimetk_spark.sources.webpages import generate_webpages
+
+    raw_path = str(tmp_path / "raw")
+    generate_webpages(
+        spark, n_urls=40, crawls_per_url=10, days=9, n_domains=5, seed=3
+    ).write.parquet(raw_path)
+    store = TierStore(str(tmp_path / "store"))
+    sc = spark.sparkContext
+
+    def traced_run(tag):
+        sc.setJobDescription(tag)
+        try:
+            run_rollup(spark, spark.read.parquet(raw_path), store)
+        finally:
+            sc.setJobDescription(None)
+        execs = _tagged_executions(spark, tag)
+        assert len(execs) == 2
+        writes = [
+            nodes for nodes in execs
+            if any("InsertIntoHadoopFsRelationCommand" in name for name, _ in nodes)
+        ]
+        assert len(writes) == 1
+        return [desc for name, desc in writes[0] if name.startswith("Scan")]
+
+    # backfill into an empty store: the raw relation is the only scan
+    assert len(traced_run("run_rollup-backfill")) == 1
+
+    # one late row: the write scans raw once and the stored 1d tier once,
+    # pruned to the touched week's other days by partition filter
+    spark.read.parquet(raw_path).limit(1).withColumn(
+        "text", F.concat(F.col("text"), F.lit("!"))
+    ).write.mode("append").parquet(raw_path)
+    scans = traced_run("run_rollup-late-row")
+    tier_scans = [d for d in scans if "bucket_ts" in d]
+    assert len(scans) == 2 and len(tier_scans) == 1
+    assert re.search(r"PartitionFilters: \[bucket_date#\d+ IN \(", tier_scans[0])
+
+
 def test_grouped_windows_never_single_partition(events):
     out = tk.augment_rolling(
         events, "ts", "value", window=5, window_func=["mean", "sum"],

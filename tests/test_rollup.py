@@ -304,6 +304,27 @@ def test_encode_blocks_multi_batch_carry(spark, web):
         spark.conf.set(key, old)
 
 
+def _assert_tier_matches_raw(spark, store, tier, raw, freq):
+    """A stored tier equals aggregating the raw rows directly."""
+    stored = store.read_tier(spark, tier).drop("bucket_date")
+    direct = rollup_raw_to_tier(raw, "url", "warc_ts", F.length("text"), freq)
+    keys = ["url", "bucket_ts"]
+    got = stored.toPandas().sort_values(keys).reset_index(drop=True)
+    want = direct.toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got[want.columns], want, check_exact=False, rtol=1e-12
+    )
+
+
+def _assert_manifest_rows(spark, store):
+    """Every manifest's output_rows (taken from parquet footers) equals the
+    rows stored in its tier/bucket_date partition."""
+    for tier in ("1h", "1d", "7d"):
+        counts = store.read_tier(spark, tier).groupBy("bucket_date").count()
+        stored = {str(r["bucket_date"]): r["count"] for r in counts.collect()}
+        assert {m.partition: m.output_rows for m in store.manifests(tier)} == stored
+
+
 def test_run_rollup_resume_and_retention(spark, web, tmp_path):
     store = TierStore(str(tmp_path / "tiers"))
     written = run_rollup(spark, web, store, value_col=F.length("text"))
@@ -313,6 +334,7 @@ def test_run_rollup_resume_and_retention(spark, web, tmp_path):
     assert n_days >= 20
     for m in written:
         assert m.points_per_sec > 0 and m.input_fingerprint
+    _assert_manifest_rows(spark, store)
 
     # resume: second run with identical input writes NOTHING — coarse
     # tiers are incrementally maintained, so no changed fine day means no
@@ -324,25 +346,22 @@ def test_run_rollup_resume_and_retention(spark, web, tmp_path):
     # fine partition plus the single 1d and 7d buckets containing it
     one = web.limit(1).withColumn("text", F.concat(F.col("text"), F.lit("!")))
     touched_day = str(one.select(F.to_date("warc_ts")).first()[0])
-    delta = run_rollup(
-        spark, web.unionByName(one), store, value_col=F.length("text")
-    )
+    updated = web.unionByName(one)
+    delta = run_rollup(spark, updated, store, value_col=F.length("text"))
     by_tier = {}
     for m in delta:
         by_tier.setdefault(m.tier, []).append(m.partition)
     assert by_tier["1h"] == [touched_day]
     assert len(by_tier["1d"]) == 1 and len(by_tier["7d"]) == 1
+    _assert_manifest_rows(spark, store)
+    # the rewritten 7d bucket merges the fresh 1d row of the touched day
+    # with the stored 1d rows of the week's other days
+    _assert_tier_matches_raw(spark, store, "7d", updated, "7D")
     # restore the original content for the assertions below
     run_rollup(spark, web, store, value_col=F.length("text"))
 
     # tier read-back: 1d tier equals direct aggregation of raw
-    d1 = store.read_tier(spark, "1d").drop("bucket_date")
-    direct = rollup_raw_to_tier(web, "url", "warc_ts", F.length("text"), "D")
-    got = d1.toPandas().sort_values(["url", "bucket_ts"]).reset_index(drop=True)
-    want = direct.toPandas().sort_values(["url", "bucket_ts"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got[want.columns], want, check_exact=False, rtol=1e-12
-    )
+    _assert_tier_matches_raw(spark, store, "1d", web, "D")
 
     # retention: drop 1h partitions older than cutoff
     import datetime as dt
@@ -363,10 +382,10 @@ def test_run_rollup_resume_and_retention(spark, web, tmp_path):
 
 
 def test_run_rollup_resume_rebuilds_stale_coarse_tiers(spark, web, tmp_path):
-    """A run killed after the fine tier's parquet+manifests but before the
-    coarse loop must NOT leave 1d/7d permanently stale on resume — the
+    """Missing or stale coarse tiers and manifests (a lost or partially
+    restored store) must NOT leave 1d/7d permanently stale on resume — the
     coarse manifests carry fingerprints composed from the below-tier
-    manifests, and resume reconciles them (ADVICE round-2, store.py)."""
+    manifests, and resume reconciles them from the stored tier below."""
     import json as _json
     import shutil as _sh
 
@@ -399,6 +418,64 @@ def test_run_rollup_resume_rebuilds_stale_coarse_tiers(spark, web, tmp_path):
 
     # fully consistent state: resume touches nothing at any tier
     assert run_rollup(spark, web, store, value_col=F.length("text")) == []
+
+
+def test_run_rollup_batch_days_and_salt(spark, web, tmp_path):
+    """Chunked and salted runs build the same tiers: each batch_days chunk
+    runs the whole plan, so a 7d bucket spanning two chunks is rebuilt
+    from the earlier chunk's stored 1d days plus the later chunk's fresh
+    ones."""
+    store = TierStore(str(tmp_path / "tiers"))
+    written = run_rollup(
+        spark, web, store, value_col=F.length("text"), batch_days=5,
+        salt_partials=4,
+    )
+    assert sorted(m.partition for m in written if m.tier == "1h") == sorted(
+        store.completed_partitions("1h")
+    )
+    _assert_manifest_rows(spark, store)
+    for tier, freq in (("1h", "h"), ("1d", "D"), ("7d", "7D")):
+        _assert_tier_matches_raw(spark, store, tier, web, freq)
+
+
+class _Killed(BaseException):
+    """Stands in for the process dying mid-write."""
+
+
+def test_manifest_write_killed_midway_keeps_old_manifest(
+    spark, web, tmp_path, monkeypatch
+):
+    """Manifests are replaced atomically: a write killed partway leaves
+    the previous manifest readable, and the next run resumes and repairs
+    every tier."""
+    from pathlib import Path
+
+    store = TierStore(str(tmp_path / "tiers"))
+    run_rollup(spark, web, store, value_col=F.length("text"))
+    one = web.limit(1).withColumn("text", F.concat(F.col("text"), F.lit("!")))
+    day = str(one.select(F.to_date("warc_ts")).first()[0])
+    before = store.read_manifest("1h", day)
+    updated = web.unionByName(one)
+
+    real_write_text = Path.write_text
+
+    def killed(self, data, *args, **kwargs):
+        real_write_text(self, data[: len(data) // 2], *args, **kwargs)
+        raise _Killed()
+
+    monkeypatch.setattr(Path, "write_text", killed)
+    with pytest.raises(_Killed):
+        run_rollup(spark, updated, store, value_col=F.length("text"))
+    monkeypatch.undo()
+
+    assert store.read_manifest("1h", day) == before
+    resumed = run_rollup(spark, updated, store, value_col=F.length("text"))
+    assert [m.partition for m in resumed if m.tier == "1h"] == [day]
+    assert {m.tier for m in resumed} == {"1h", "1d", "7d"}
+    _assert_manifest_rows(spark, store)
+    for tier, freq in (("1h", "h"), ("1d", "D"), ("7d", "7D")):
+        _assert_tier_matches_raw(spark, store, tier, updated, freq)
+    assert run_rollup(spark, updated, store, value_col=F.length("text")) == []
 
 
 def test_text_invariant_through_pipeline(spark, web, tmp_path):

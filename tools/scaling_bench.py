@@ -2,11 +2,12 @@
 
 Protocol (round 3 — interleaved micro-rounds): two PERSISTENT worker JVMs
 are started once — local[8] and local[32] — each warmed up on the IDENTICAL
-tier-rollup job (parquet-sourced raw web table → 1h → 1d → 7d, each tier
-written to parquet as run_rollup does) over the IDENTICAL deterministic
-input. The orchestrator then alternates SINGLE job iterations between the
-two workers, so each (8, 32) pair executes seconds apart inside ONE host
-window, bracketed by single-thread CPU calibrations. A pair is CLEAN when
+tier-rollup job (the shipped ``run_rollup`` of the parquet-sourced raw web
+table into a fresh TierStore: fingerprint pass + one write job for the
+1h/1d/7d tiers) over the IDENTICAL deterministic input. The orchestrator
+then alternates SINGLE job iterations between the two workers, so each
+(8, 32) pair executes seconds apart inside ONE host window, bracketed by
+single-thread CPU calibrations. A pair is CLEAN when
 its before/after calibrations agree within 10% — i.e. the host did not
 drift mid-pair. We report efficiency = (throughput_32 / throughput_8) / 4
 for the best clean pair and the median of clean pairs, plus the host's own
@@ -88,8 +89,7 @@ def worker(cores: int) -> None:
     import tempfile
 
     import pytimetk_spark as tk
-    from pytimetk_spark.rollup.tiers import rollup_raw_to_tier, rollup_tier_to_tier
-    from pyspark.sql import functions as F
+    from pytimetk_spark.rollup.store import TierStore, run_rollup
 
     spark = tk.get_spark(
         app_name=f"scaling-{cores}", master=f"local[{cores}]",
@@ -100,26 +100,14 @@ def worker(cores: int) -> None:
     n_raw = web.count()
     tmp = tempfile.mkdtemp(dir=WORK)
 
-    def job() -> None:
-        # one shuffle total: pre-partition by url — HashPartitioning(url)
-        # satisfies ClusteredDistribution(url, bucket) for every tier agg
-        # (Iceberg analogue: bucket(N, url) table layout)
-        pre = web.select("url", "warc_ts", F.length("text").alias("plen")).repartition(
-            cores * 2, F.col("url")
-        )
-        h1 = rollup_raw_to_tier(pre, "url", "warc_ts", "plen", "h")
-        h1.write.mode("overwrite").parquet(f"{tmp}/h1")
-        d1 = rollup_tier_to_tier(spark.read.parquet(f"{tmp}/h1"), "D")
-        d1.write.mode("overwrite").parquet(f"{tmp}/d1")
-        d7 = rollup_tier_to_tier(spark.read.parquet(f"{tmp}/d1"), "7D")
-        d7.write.mode("overwrite").parquet(f"{tmp}/d7")
+    def job() -> int:
+        """The shipped job: backfill every tier into a fresh store;
+        returns the rolled points (manifest footer row counts)."""
+        shutil.rmtree(f"{tmp}/store", ignore_errors=True)
+        written = run_rollup(spark, web, TierStore(f"{tmp}/store"), resume=False)
+        return sum(m.output_rows for m in written)
 
-    job()  # codegen/JIT/shuffle-service warm-up (untimed)
-    points = (
-        spark.read.parquet(f"{tmp}/h1").count()
-        + spark.read.parquet(f"{tmp}/d1").count()
-        + spark.read.parquet(f"{tmp}/d7").count()
-    )
+    points = job()  # codegen/JIT/shuffle-service warm-up (untimed)
     print(
         "READY " + json.dumps({"cores": cores, "raw_rows": n_raw, "points": points}),
         flush=True,
@@ -267,12 +255,10 @@ calibrations. A pair is **clean** when its bracketing calibrations agree
 within {CAL_TOL:.0%} (the host did not drift mid-pair). Order alternates
 8-first / 32-first per round. Reproduce: `python tools/scaling_bench.py`.
 
-**Job**: read the crawl table (parquet, {n_raw:,} rows = {N_URLS} urls ×
-{CRAWLS} crawls × {DAYS} days, seed 42, gaps injected) → repartition by url
-(the single shuffle; Iceberg analogue bucket(N, url)) → 1h tier → write →
-1d tier → write → 7d tier → write = {points:,} rolled points per iteration.
-All tier aggregations are shuffle-free because HashPartitioning(url)
-satisfies ClusteredDistribution(url, bucket).
+**Job**: `run_rollup(resume=False)` of the crawl table (parquet, {n_raw:,}
+rows = {N_URLS} urls × {CRAWLS} crawls × {DAYS} days, seed 42, gaps
+injected) into a fresh TierStore — one fingerprint pass plus one write job
+for the 1h, 1d and 7d tiers = {points:,} rolled points per iteration.
 
 ## Headline ({len(clean)}/{len(pairs)} clean pairs)
 
@@ -320,10 +306,10 @@ Measurement honesty
   backed local dirs measured 0.15–0.2 efficiency for the SAME plan); on a
   real cluster, local NVMe and the shuffle service scale WITH executors,
   which tmpfs models more faithfully.
-- The plan has no serialization points: no driver collect, no global sort,
-  no unsalted skewed key (hot domains get salted two-phase aggregation),
-  map-side partial aggregation before the only shuffle
-  (tests/test_plans.py pins "exactly one exchange across raw→1h→1d→7d").
+- The plan has no serialization points: no global sort, map-side partial
+  aggregation before every shuffle, and the raw relation is scanned once
+  per write (tests/test_plans.py pins two SQL executions per run and one
+  raw scan in the write).
 """
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
