@@ -11,6 +11,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's codegen class cache defaults to 100 entries, fewer than one
+# rollup + curation cycle generates: a bulk rollbench cycle recompiled
+# about 16 classes in its rollup and 35 in its MinHash/repetition slot,
+# all compiled the cycle before and evicted by the LRU (run alone, the
+# curation slot compiles 0 classes after warm-up). 1000 holds a cycle.
+CODEGEN_CACHE_ENTRIES = 1000
+
+_GIB = 1 << 30
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Driver heap for local mode: half of physical memory, capped at 16g
+    and at least 1g. In local mode the driver heap IS the executor heap,
+    and shuffle files may live in RAM-backed /dev/shm next to it, so a
+    fixed 16g overcommits a 16 GiB host. ``total_bytes`` defaults to the
+    host's physical memory (MemTotal); when that cannot be read it is
+    16g."""
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (ValueError, OSError, AttributeError):
+            return "16g"
+    mib = min(max(total_bytes // 2, _GIB), 16 * _GIB) >> 20
+    return f"{mib}m"
+
 
 def get_spark(
     app_name: str = "pytimetk_spark",
@@ -43,12 +68,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        # single-JVM local mode: driver heap IS the executor heap. 16g
-        # default (was 8g) — long benches accumulate broadcast relations
-        # and shuffle state across queries, and full-GC stalls under the
-        # 8g ceiling produced rare 10×+ outliers on late queries; still
-        # env-overridable for small hosts (SPARK_DRIVER_MEMORY)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # single-JVM local mode: driver heap IS the executor heap. Long
+        # benches accumulate broadcast relations and shuffle state across
+        # queries (full-GC stalls under an 8g ceiling produced rare 10×+
+        # outliers on late queries), so take as much as the host can
+        # spare; SPARK_DRIVER_MEMORY overrides
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )

@@ -18,6 +18,14 @@ Scale notes (10^12 docs):
     cap with ``max_bucket`` to shed them explicitly rather than letting one
     reducer explode);
   * verification (exact Jaccard) touches only candidate pairs.
+
+The MinHash/LSH/verify plans are composed as SQL expression strings
+(``selectExpr`` / ``F.expr``), not as ``Column`` trees: every ``Column``
+node built in Python is a separate Py4J round trip to the driver JVM, and
+the per-band / per-shingle expression lists cost 1.8-2.8k round trips
+(~0.3 s of driver time) per ``minhash_dedup`` build before any job ran.
+A SQL string is parsed JVM-side in one call per projection and analyzes
+to the same expressions, so outputs are unchanged.
 """
 
 from __future__ import annotations
@@ -64,6 +72,40 @@ def _observe_shed(sizes: DataFrame, n_col: str, max_bucket: int, op: str):
 
 _MERSENNE = (1 << 61) - 1
 _MOD31 = 2147483647  # 2^31 - 1
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _h64_sql(expr: str, variant: str = "xxhash64") -> str:
+    """``_h64`` of the SQL expression ``expr``, as SQL."""
+    if variant == "xxhash64":
+        return f"xxhash64({expr})"
+    if variant == "md5":
+        return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+    raise ValueError(f"unknown hash variant: {variant!r}")
+
+
+def _token_sql(text: str, lowercase: bool = True) -> str:
+    """Whitespace tokens of the SQL string expression ``text``, as SQL
+    (the doubled backslash survives the SQL parser's unescaping as the
+    regex ``\\s+``)."""
+    t = f"lower({text})" if lowercase else text
+    return f"split(trim(regexp_replace({t}, '\\\\s+', ' ')), ' ')"
+
+
+def _shingles_sql(toks: str, shingle_size: int) -> str:
+    """Distinct word k-shingles of the token array ``toks`` (a column or
+    lambda variable, evaluated once — never a tokenizing expression,
+    which would rerun at every shingle position), as SQL."""
+    n = f"greatest(size({toks}) - {shingle_size - 1}, 0)"
+    return (
+        f"array_distinct(CASE WHEN {n} > 0 THEN transform(sequence(0, {n} - 1), "
+        f"i -> array_join(slice({toks}, i + 1, {shingle_size}), ' ')) "
+        f"ELSE array(array_join({toks}, ' ')) END)"
+    )
 
 
 def _h64(col: Column, variant: str = "xxhash64") -> Column:
@@ -136,17 +178,25 @@ def shingle_tokens(
     text: Column, shingle_size: int = 5, lowercase: bool = True
 ) -> Column:
     """Distinct word k-shingles of ``text`` as an array<string> — native:
-    split + transform over a sliding index sequence."""
+    split + transform over a sliding index sequence. The token array is
+    bound once as a lambda variable, so the regexp/split runs once per
+    document instead of at every shingle position. (``minhash_signatures``
+    and ``document_fingerprint`` stage the same tokens as a column.)"""
     t = F.lower(text) if lowercase else text
     toks = F.split(F.trim(F.regexp_replace(t, r"\s+", " ")), " ")
-    n = F.greatest(F.size(toks) - F.lit(shingle_size - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), n - F.lit(1))
-    shingle = lambda i: F.array_join(F.slice(toks, i + 1, shingle_size), " ")
-    return F.array_distinct(
-        F.when(n > 0, F.transform(idx, shingle)).otherwise(
-            F.array(F.array_join(toks, " "))
+
+    def shingles(tk: Column) -> Column:
+        n = F.greatest(F.size(tk) - F.lit(shingle_size - 1), F.lit(0))
+        idx = F.sequence(F.lit(0), n - F.lit(1))
+        shingle = lambda i: F.array_join(F.slice(tk, i + 1, shingle_size), " ")
+        return F.array_distinct(
+            F.when(n > 0, F.transform(idx, shingle)).otherwise(
+                F.array(F.array_join(tk, " "))
+            )
         )
-    )
+
+    # flatten of the one-element array keeps the result non-nullable
+    return F.flatten(F.transform(F.array(toks), shingles))
 
 
 def _perm_params(n_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -154,6 +204,58 @@ def _perm_params(n_hashes: int, seed: int) -> list[tuple[int, int]]:
     return [
         (rng.randrange(1, _MOD31), rng.randrange(0, _MOD31)) for _ in range(n_hashes)
     ]
+
+
+def _minhash_batch(lst, a_vec, b_vec):
+    """Signatures of one Arrow batch of shingle-hash lists: per row and per
+    (a, b), ``min((a·(h mod p) + b) mod p)`` over the row's hashes ``h``,
+    as a list<int64> array — whole-batch numpy, one ``reduceat`` per hash.
+
+    Degenerate rows stay on this vectorized path with ``array_min``'s
+    semantics: NULL hashes are skipped, a row with no non-NULL hash (empty
+    list, or NULL elements only) gets a signature of NULLs and a NULL row
+    a NULL signature. Such rows are masked, not looped over in Python."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n_rows, n_hashes = len(lst), len(a_vec)
+    # .values/.offsets are a consistent pair (offsets index into the
+    # untrimmed child array even for sliced batches)
+    offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    starts, ends = offs[:-1], offs[1:]
+    vals = lst.values.slice(0, offs[-1])
+    null_el = None
+    if vals.null_count:
+        null_el = ~vals.is_valid().to_numpy(zero_copy_only=False)
+        # fill BEFORE to_numpy: an int64 Arrow array with nulls converts
+        # via float64 (NaN), which silently corrupts hashes above 2^53
+        vals = pc.fill_null(vals, 0)
+    base = vals.to_numpy(zero_copy_only=False).astype(np.int64, copy=False) % _MOD31
+    # _MOD31 exceeds every (a·h + b) mod p, so it marks "no value": it
+    # stands in for NULL elements, and one copy past the end gives a
+    # trailing empty row's reduceat segment a defined value
+    sigs = np.empty((n_rows, n_hashes), dtype=np.int64)
+    v = np.empty(len(base) + 1, dtype=np.int64)
+    v[-1] = _MOD31
+    for k in range(n_hashes):
+        np.remainder(a_vec[k] * base + b_vec[k], _MOD31, out=v[:-1])
+        if null_el is not None:
+            v[:-1][null_el] = _MOD31
+        sigs[:, k] = np.minimum.reduceat(v, starts)
+    # reduceat yields the element AT an empty segment's start, not the
+    # identity — blank those rows explicitly
+    sigs[starts == ends] = _MOD31
+    missing = (sigs == _MOD31).reshape(-1)
+    values = pa.array(
+        sigs.reshape(-1), type=pa.int64(), mask=missing if missing.any() else None
+    )
+    row_null = None
+    if lst.null_count:
+        row_null = pa.array(~lst.is_valid().to_numpy(zero_copy_only=False))
+    return pa.FixedSizeListArray.from_arrays(
+        values, n_hashes, mask=row_null
+    ).cast(pa.list_(pa.int64()))
 
 
 def minhash_signatures(
@@ -170,6 +272,10 @@ def minhash_signatures(
     permutation minima ``min((a·h mod-2^31-1-base + b) mod p)``
     evaluated as whole-batch numpy inside one ``mapInArrow`` pass. No
     shuffle: a per-row map over (id, shingle_hashes).
+
+    The token array is staged as its own projection: referenced from
+    the shingle lambda, an inline split-of-regexp would rerun once per
+    shingle position (O(tokens × length) per document).
 
     The shingle-hash column is staged in Catalyst on purpose: the
     expensive md5 for the oracle variant runs ONCE per shingle, and the
@@ -201,84 +307,29 @@ def minhash_signatures(
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    shingles = shingle_tokens(F.col(text_col), shingle_size)
-    hashed = F.transform(shingles, lambda s: _h64(s, hash_variant))
-    staged = df.select(F.col(id_col), hashed.alias("shingle_hashes"))
+    hashed = (
+        f"transform({_shingles_sql('__toks__', shingle_size)}, "
+        f"s -> {_h64_sql('s', hash_variant)}) AS shingle_hashes"
+    )
+    staged = df.selectExpr(
+        _q(id_col), f"{_token_sql(_q(text_col))} AS __toks__"
+    ).selectExpr(_q(id_col), hashed)
 
     params = _perm_params(n_hashes, seed)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
-    id_field = staged.schema[id_col]
 
     def sig_batches(batches):
         for batch in batches:
-            ids = batch.column(0)
             lst = batch.column(1)
-            # .values/.offsets are a consistent pair (offsets index into
-            # the untrimmed child array even for sliced batches). NULL
-            # elements must be filled BEFORE to_numpy: an int64 Arrow
-            # array with nulls converts via float64 (NaN), which silently
-            # corrupts hash values above 2^53.
-            vals = lst.values
-            if vals.null_count:
-                import pyarrow.compute as pc
-
-                vals = pc.fill_null(vals, 0)
-            flat = vals.to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            offs = lst.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            starts, ends = offs[:-1], offs[1:]
-            n_rows = len(starts)
-            if (
-                n_rows == 0
-                or (starts == ends).any()
-                or lst.null_count
-                or lst.values.null_count
-            ):
-                # empty/NULL shingle arrays or NULL elements are corner
-                # cases (xxhash64 is null-safe, but the md5 variant maps
-                # a NULL shingle to a NULL hash); reproduce array_min's
-                # semantics exactly — NULL elements are skipped, an
-                # all-NULL/empty array yields NULL
-                valid = np.asarray(lst.values.is_valid())
-                row_valid = np.asarray(lst.is_valid())
-                sig_py = []
-                for r in range(n_rows):
-                    if not row_valid[r]:
-                        sig_py.append(None)
-                        continue
-                    seg = flat[starts[r]:ends[r]]
-                    seg = seg[valid[starts[r]:ends[r]]] % _MOD31
-                    if len(seg) == 0:
-                        sig_py.append([None] * n_hashes)
-                    else:
-                        sig_py.append([
-                            int(((a_vec[k] * seg + b_vec[k]) % _MOD31).min())
-                            for k in range(n_hashes)
-                        ])
-                sig_arr = pa.array(sig_py, type=pa.list_(pa.int64()))
-            else:
-                # trim the untrimmed child so reduceat's open-ended last
-                # segment stops at the last list's end
-                base = flat[: ends[-1]] % _MOD31
-                sigs = np.empty((n_rows, n_hashes), dtype=np.int64)
-                for k in range(n_hashes):
-                    v = (a_vec[k] * base + b_vec[k]) % _MOD31
-                    sigs[:, k] = np.minimum.reduceat(v, starts)
-                sig_arr = pa.FixedSizeListArray.from_arrays(
-                    pa.array(sigs.reshape(-1), type=pa.int64()), n_hashes
-                ).cast(pa.list_(pa.int64()))
             yield pa.RecordBatch.from_arrays(
-                [ids, sig_arr, lst],
+                [batch.column(0), _minhash_batch(lst, a_vec, b_vec), lst],
                 names=[id_col, "signature", "shingle_hashes"],
             )
 
     out_t = T.StructType(
         [
-            id_field,
+            staged.schema[id_col],
             T.StructField("signature", T.ArrayType(T.LongType())),
             T.StructField("shingle_hashes", T.ArrayType(T.LongType())),
         ]
@@ -310,33 +361,24 @@ def minhash_lsh_candidates(
     caller via the returned ``dropped_buckets`` being countable from
     ``bucket_sizes`` (exposed for observability).
     """
+    idq = _q(id_col)
 
-    def _band_bucket(b: int) -> Column:
-        sl = F.slice("signature", b * rows_per_band + 1, rows_per_band)
+    def band_bucket(b: int) -> str:
+        sl = f"slice(signature, {b * rows_per_band + 1}, {rows_per_band})"
         if hash_variant == "xxhash64":
-            return F.xxhash64(sl, F.lit(b))
+            return f"xxhash64({sl}, {b})"
         # md5 variant: serialize the band deterministically ("b:v1,v2,...")
         # so DuckDB can reproduce the exact bucket key
-        rendered = F.concat(
-            F.lit(f"{b}:"),
-            F.array_join(F.transform(sl, lambda x: x.cast("string")), ","),
+        rendered = (
+            f"concat('{b}:', array_join(transform({sl}, x -> CAST(x AS STRING)), ','))"
         )
-        return _h64(rendered, "md5")
+        return _h64_sql(rendered, "md5")
 
-    band_cols = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    _band_bucket(b).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-    ).alias("bb")
-    exploded = sig_df.select(F.col(id_col), band_cols).select(
-        id_col, "bb.band", "bb.bucket"
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {band_bucket(b)})"
+        for b in range(bands)
     )
+    exploded = sig_df.selectExpr(idq, f"inline(array({band_structs}))")
     obs = None
     if max_bucket is None:
         # uncapped: keep the self-join shape — a collect_list of an
@@ -346,14 +388,12 @@ def minhash_lsh_candidates(
         return (
             a.join(
                 b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+                F.expr(
+                    f"a.band = b.band AND a.bucket = b.bucket "
+                    f"AND a.{idq} < b.{idq}"
+                ),
             )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
+            .selectExpr(f"a.{idq} AS id_a", f"b.{idq} AS id_b")
             .distinct()
         )
     # capped path (r7): ONE groupBy collects each bucket's members (the
@@ -363,9 +403,11 @@ def minhash_lsh_candidates(
     # exchange instead of an aggregate, a semi join and a self-join over
     # the same exploded frame (guide §2.4). Pair set is identical:
     # (x, y) with x < y per bucket, deduped across bands.
-    grouped = exploded.groupBy("band", "bucket").agg(
-        F.collect_list(F.col(id_col)).alias("__ids__")
-    ).withColumn("n", F.size("__ids__"))
+    grouped = (
+        exploded.groupBy("band", "bucket")
+        .agg(F.expr(f"collect_list({idq}) AS __ids__"))
+        .selectExpr("*", "size(__ids__) AS n")
+    )
     if observe_shed:
         grouped, obs = _observe_shed(grouped, "n", max_bucket,
                                      "minhash_lsh_candidates")
@@ -377,20 +419,13 @@ def minhash_lsh_candidates(
             BucketShedWarning,
             stacklevel=3,
         )
-    ids = F.col("__ids__")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x: F.transform(
-                F.filter(ids, lambda y: y > x),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pairs = (
+        "flatten(transform(__ids__, x -> transform(filter(__ids__, y -> y > x), "
+        "y -> named_struct('id_a', x, 'id_b', y))))"
     )
     out = (
-        grouped.filter(F.col("n") <= max_bucket)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b")
+        grouped.filter(f"n <= {int(max_bucket)}")
+        .selectExpr(f"inline({pairs})")
         .distinct()
     )
     if obs is not None:
@@ -405,27 +440,21 @@ def ngram_jaccard_pairs(
     two joins against the signature table's full-width shingle-hash
     arrays (hash-set Jaccard == string-set Jaccard up to 2^-64
     collisions), then native array_intersect/array_union sizes."""
-    sh = sig_df.select(F.col(id_col), "shingle_hashes")
-    j = (
-        candidates.join(
-            sh.withColumnRenamed(id_col, "id_a").withColumnRenamed(
-                "shingle_hashes", "sh_a"
-            ),
+
+    def side(s: str) -> DataFrame:
+        return sig_df.selectExpr(
+            f"{_q(id_col)} AS id_{s}", f"shingle_hashes AS sh_{s}"
+        )
+
+    return (
+        candidates.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .selectExpr(
             "id_a",
-        )
-        .join(
-            sh.withColumnRenamed(id_col, "id_b").withColumnRenamed(
-                "shingle_hashes", "sh_b"
-            ),
             "id_b",
+            "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE) "
+            "/ size(array_union(sh_a, sh_b)) AS jaccard",
         )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return j.select(
-        "id_a",
-        "id_b",
-        (inter.cast("double") / union).alias("jaccard"),
     )
 
 
@@ -469,10 +498,12 @@ def minhash_dedup(
         sigs, id_col, bands, n_hashes // bands, hash_variant=hash_variant,
         observe_shed=observe_shed,
     )
-    dups = ngram_jaccard_pairs(sigs, cands, id_col).filter(
-        F.col("jaccard") >= threshold
+    losers = (
+        ngram_jaccard_pairs(sigs, cands, id_col)
+        .filter(f"jaccard >= CAST({float(threshold)!r} AS DOUBLE)")
+        .selectExpr(f"id_b AS {_q(id_col)}")
+        .distinct()
     )
-    losers = dups.select(F.col("id_b").alias(id_col)).distinct()
     out = df.join(losers, on=id_col, how="left_anti")
     if persist:
         out._minhash_sigs_handle = sigs

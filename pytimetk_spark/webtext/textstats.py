@@ -2,12 +2,22 @@
 counting, document fingerprinting. Every function is a pure Catalyst
 projection (plus one tiny broadcast for stopword sets) — zero Python in
 the row path, safe to fuse into any 100-TB scan.
+
+``repetition_signals`` and ``document_fingerprint`` compose their plans
+as SQL expression strings (``selectExpr`` / ``F.expr``) rather than
+``Column`` trees: each ``Column`` node built in Python is one Py4J round
+trip to the driver JVM, and the per-n-gram-order and per-kind expression
+lists cost ~3.4k round trips (~0.4 s of driver time) per
+``repetition_signals`` build. A SQL string is parsed JVM-side in one call
+per projection and analyzes to the same expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pytimetk_spark.webtext.dedup import _h64_sql, _q, _shingles_sql, _token_sql
 
 # compact public stopword lists (top function words per language)
 STOPWORDS = {
@@ -165,31 +175,32 @@ def document_fingerprint(
     ``hash_variant="md5"`` makes both levels reproducible outside Spark
     (driver oracle); the combined hash then digests the comma-joined
     minima string instead of the raw array."""
-    from pytimetk_spark.webtext.dedup import _h64, shingle_tokens
-
-    # staged projection: the shingle+hash+sort sub-tree is aliased ONCE
-    # and referenced twice downstream (output column + combined digest) —
-    # inlining it would make Catalyst evaluate the whole shingle hashing
-    # twice per row (CollapseProject keeps multiply-referenced non-cheap
-    # aliases staged; same fix as minhash_signatures)
-    sh = shingle_tokens(F.col(text_col), shingle_size)
-    hashes = F.transform(sh, lambda s: _h64(s, hash_variant))
-    staged = df.select(
-        F.col(id_col),
-        F.slice(F.array_sort(hashes), 1, k).alias("fingerprint_minhashes"),
+    # staged projections: the token array is aliased once (the shingle
+    # lambda would otherwise rerun the regexp/split per shingle position),
+    # and the shingle+hash+sort sub-tree is aliased ONCE and referenced
+    # twice downstream (output column + combined digest) — inlining it
+    # would make Catalyst evaluate the whole shingle hashing twice per row
+    # (CollapseProject keeps multiply-referenced non-cheap aliases staged;
+    # same fix as minhash_signatures)
+    idq = _q(id_col)
+    hashes = (
+        f"transform({_shingles_sql('__toks__', shingle_size)}, "
+        f"s -> {_h64_sql('s', hash_variant)})"
     )
-    minima = F.col("fingerprint_minhashes")
+    staged = df.selectExpr(
+        idq, f"{_token_sql(_q(text_col))} AS __toks__"
+    ).selectExpr(
+        idq, f"slice(array_sort({hashes}), 1, {k}) AS fingerprint_minhashes"
+    )
     if hash_variant == "xxhash64":
-        combined = F.xxhash64(minima)
+        combined = "xxhash64(fingerprint_minhashes)"
     else:
-        combined = _h64(
-            F.array_join(F.transform(minima, lambda x: x.cast("string")), ","),
+        combined = _h64_sql(
+            "array_join(transform(fingerprint_minhashes, x -> CAST(x AS STRING)), ',')",
             hash_variant,
         )
-    return staged.select(
-        F.col(id_col),
-        minima,
-        combined.alias("fingerprint64"),
+    return staged.selectExpr(
+        idq, "fingerprint_minhashes", f"{combined} AS fingerprint64"
     )
 
 
@@ -223,48 +234,38 @@ def repetition_signals(
     path. The n-gram streams multiply rows by ~len(top_ns)+len(dup_ns);
     trim the ``*_ns`` tuples when only some signals are needed.
     """
-    t = F.col(text_col)
+    t = _q(text_col)
     # STAGE the token/line/para arrays as columns: expressions referenced
     # inside higher-order-function lambdas re-evaluate PER ELEMENT, so an
     # inline split-of-regexp here would rerun the whole-document regexp
-    # once per n-gram position (O(len^2) — the similarity.py lesson)
-    staged = df.select(
-        F.col(id_col).alias("__id__"),
-        F.length(t).alias("__n_chars__"),
-        F.split(F.trim(F.lower(F.regexp_replace(t, r"\s+", " "))), " ")
-        .alias("__toks__"),
-        F.filter(F.split(t, r"\n"), lambda x: F.length(x) > 0)
-        .alias("__lines__"),
-        F.filter(F.split(t, r"\n{2,}"), lambda x: F.length(x) > 0)
-        .alias("__paras__"),
+    # once per n-gram position (O(len^2) — the similarity.py lesson).
+    # The doubled backslashes survive SQL unescaping as \n.
+    staged = df.selectExpr(
+        f"{_q(id_col)} AS __id__",
+        f"length({t}) AS __n_chars__",
+        f"{_token_sql(t)} AS __toks__",
+        f"filter(split({t}, '\\\\n'), x -> length(x) > 0) AS __lines__",
+        f"filter(split({t}, '\\\\n{{2,}}'), x -> length(x) > 0) AS __paras__",
     )
-    toks = F.col("__toks__")
-    lines = F.col("__lines__")
-    paras = F.col("__paras__")
 
     def tag(kind, arr):
         # ship the 64-bit hash, not the string: the count shuffle's
         # row width drops from O(text) to 16 bytes (collisions within a
         # (doc, kind) group are the only hazard — negligible at 2^-64)
-        return F.transform(
-            arr, lambda x: F.struct(
-                F.lit(kind).alias("kind"), F.xxhash64(x).alias("item"),
-                F.length(x).alias("chars"))
+        return (
+            f"transform({arr}, x -> named_struct('kind', '{kind}', "
+            "'item', xxhash64(x), 'chars', length(x)))"
         )
 
     # line/para items stay on the (small) lambda path, exploded OUTER so
     # every document keeps at least one row — the null row flows through
     # the aggregations contributing to nothing but the doc's presence
     # (all final aggregates filter on specific kind values)
-    lp_items = (
-        staged.select(
-            "__id__", "__n_chars__",
-            F.explode_outer(
-                F.concat(tag("line", lines), tag("para", paras))
-            ).alias("it"),
-        )
-        .select("__id__", "__n_chars__", "it.kind", "it.item", "it.chars")
-    )
+    lp_items = staged.selectExpr(
+        "__id__", "__n_chars__",
+        f"explode_outer(concat({tag('line', '__lines__')}, "
+        f"{tag('para', '__paras__')})) AS it",
+    ).selectExpr("__id__", "__n_chars__", "it.kind", "it.item", "it.chars")
 
     # n-gram items via position explode + per-order gram COLUMNS + stack
     # (r7): higher-order-function lambdas evaluate interpreted per
@@ -276,47 +277,41 @@ def repetition_signals(
     # than n yields NULLs that the filter drops, matching the r6
     # empty-array case; null/empty docs are kept by lp_items above.
     ns = sorted(set(top_ns) | set(dup_ns))
-    pos = staged.select(
-        "__id__", "__n_chars__", "__toks__",
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)))
-        ).alias("__i__"),
-    )
-    i = F.col("__i__")
     gcols = [
-        F.when(
-            i <= F.size(toks) - n + 1,
-            F.concat_ws(" ", F.slice(toks, i, n)),
-        ).alias(f"__g{n}__")
+        f"CASE WHEN __i__ <= size(__toks__) - {n} + 1 "
+        f"THEN concat_ws(' ', slice(__toks__, __i__, {n})) END AS __g{n}__"
         for n in ns
     ]
     stack = "stack({}, {}) as (kind, __gs__)".format(
         len(ns), ", ".join(f"'g{n}', __g{n}__" for n in ns)
     )
     g_items = (
-        pos.select("__id__", "__n_chars__", *gcols)
+        staged.selectExpr(
+            "__id__", "__n_chars__", "__toks__",
+            "explode(sequence(1, greatest(size(__toks__), 1))) AS __i__",
+        )
+        .selectExpr("__id__", "__n_chars__", *gcols)
         .selectExpr("__id__", "__n_chars__", stack)
-        .filter(F.col("__gs__").isNotNull())
-        .select(
+        .filter("__gs__ IS NOT NULL")
+        .selectExpr(
             "__id__", "__n_chars__", "kind",
-            F.xxhash64("__gs__").alias("item"),
-            F.length("__gs__").alias("chars"),
+            "xxhash64(__gs__) AS item", "length(__gs__) AS chars",
         )
     )
     items = lp_items.unionByName(g_items) if ns else lp_items
     counts = items.groupBy("__id__", "kind", "item").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.first("chars").alias("chars"),
-        F.first("__n_chars__").alias("n_chars"),
+        F.expr("count(1) AS cnt"),
+        F.expr("first(chars) AS chars"),
+        F.expr("first(__n_chars__) AS n_chars"),
     )
     per_kind = counts.groupBy("__id__", "kind").agg(
-        F.first("n_chars").alias("n_chars"),
-        (F.lit(1.0) - F.count(F.lit(1)) / F.sum("cnt")).alias("dup_frac"),
-        F.coalesce(
-            F.sum(F.when(F.col("cnt") > 1, F.col("chars") * F.col("cnt"))),
-            F.lit(0),
-        ).alias("dup_char_count"),
-        F.sum(F.col("chars") * F.col("cnt")).alias("total_char_count"),
+        F.expr("first(n_chars) AS n_chars"),
+        F.expr("1.0D - count(1) / sum(cnt) AS dup_frac"),
+        F.expr(
+            "coalesce(sum(CASE WHEN cnt > 1 THEN chars * cnt END), 0) "
+            "AS dup_char_count"
+        ),
+        F.expr("sum(chars * cnt) AS total_char_count"),
         # argmax by (cnt, occ) as a PACKED bigint max (r7): a struct
         # ordering key gives max_by a non-fixed-width buffer, which kicks
         # the whole aggregate out of HashAggregate into SortAggregate —
@@ -328,58 +323,44 @@ def repetition_signals(
         # exact ordering into one bigint and max() keeps the aggregate
         # hash-based. The unpacked product is bit-identical to the old
         # max_by value (ties tie on the product too).
-        F.max(
-            F.shiftleft(F.col("cnt"), 32) + F.col("chars")
-        ).alias("__packed_top__"),
-    ).withColumn(
-        "top_char_occ",
-        F.shiftright(F.col("__packed_top__"), 32)
-        * F.col("__packed_top__").bitwiseAND(F.lit((1 << 32) - 1)),
-    ).drop("__packed_top__")
+        F.expr("max(shiftleft(cnt, 32) + chars) AS __packed_top__"),
+    ).selectExpr(
+        "__id__", "kind", "n_chars", "dup_frac", "dup_char_count",
+        "total_char_count",
+        "shiftright(__packed_top__, 32) * (__packed_top__ & 4294967295) "
+        "AS top_char_occ",
+    )
+
+    def first_of(kind, value, default):
+        return (
+            f"coalesce(first(CASE WHEN kind = '{kind}' THEN {value} END, true), "
+            f"{default})"
+        )
+
     final_aggs = []
     for kind in ("line", "para"):
-        k = F.col("kind") == kind
-        final_aggs.append(F.coalesce(
-            F.first(F.when(k, F.col("dup_frac")), ignorenulls=True),
-            F.lit(0.0),
-        ).alias(f"dup_{kind}_frac"))
-        final_aggs.append(F.coalesce(
-            F.first(
-                F.when(k, F.col("dup_char_count")
-                       / F.greatest(F.col("total_char_count"), F.lit(1))),
-                ignorenulls=True,
-            ),
-            F.lit(0.0),
-        ).alias(f"dup_{kind}_char_frac"))
-    for n in top_ns:
-        final_aggs.append(F.coalesce(
-            F.first(F.when(F.col("kind") == f"g{n}", F.col("top_char_occ")),
-                    ignorenulls=True),
-            F.lit(0),
-        ).alias(f"__top{n}__"))
-    for n in dup_ns:
-        final_aggs.append(F.coalesce(
-            F.first(F.when(F.col("kind") == f"g{n}", F.col("dup_char_count")),
-                    ignorenulls=True),
-            F.lit(0),
-        ).alias(f"__dup{n}__"))
+        final_aggs.append(f"{first_of(kind, 'dup_frac', '0.0D')} AS dup_{kind}_frac")
+        frac = "dup_char_count / greatest(total_char_count, 1)"
+        final_aggs.append(f"{first_of(kind, frac, '0.0D')} AS dup_{kind}_char_frac")
+    final_aggs += [
+        f"{first_of(f'g{n}', 'top_char_occ', '0')} AS __top{n}__" for n in top_ns
+    ]
+    final_aggs += [
+        f"{first_of(f'g{n}', 'dup_char_count', '0')} AS __dup{n}__" for n in dup_ns
+    ]
     rolled = per_kind.groupBy("__id__").agg(
-        F.first("n_chars").alias("__n_chars__"), *final_aggs
+        F.expr("first(n_chars) AS __n_chars__"), *map(F.expr, final_aggs)
     )
-    nc = F.greatest(F.col("__n_chars__"), F.lit(1)).cast("double")
+    nc = "CAST(greatest(__n_chars__, 1) AS DOUBLE)"
     sel = [
-        F.col("__id__").alias(id_col),
-        F.col("__n_chars__").alias("n_chars"),
+        f"__id__ AS {_q(id_col)}",
+        "__n_chars__ AS n_chars",
         "dup_line_frac", "dup_line_char_frac",
         "dup_para_frac", "dup_para_char_frac",
     ]
-    for n in top_ns:
-        sel.append(F.least(F.col(f"__top{n}__") / nc, F.lit(1.0)).alias(
-            f"top_{n}gram_char_frac"))
-    for n in dup_ns:
-        sel.append(F.least(F.col(f"__dup{n}__") / nc, F.lit(1.0)).alias(
-            f"dup_{n}gram_char_frac"))
-    return rolled.select(*sel)
+    sel += [f"least(__top{n}__ / {nc}, 1.0D) AS top_{n}gram_char_frac" for n in top_ns]
+    sel += [f"least(__dup{n}__ / {nc}, 1.0D) AS dup_{n}gram_char_frac" for n in dup_ns]
+    return rolled.selectExpr(*sel)
 
 
 _SCRIPTS = [

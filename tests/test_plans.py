@@ -235,6 +235,17 @@ def test_staged_projections_not_reinlined(spark):
     fp_plan = optimized(document_fingerprint(docs, hash_variant="md5"))
     assert fp_plan.count("md5") <= 2  # stage hash + combined digest
 
+    # signatures and fingerprint: ONE tokenization per document, staged
+    # outside the shingle lambda (inlined, the split-of-regexp reruns at
+    # every shingle position)
+    for variant in ("xxhash64", "md5"):
+        for plan in (
+            optimized(minhash_signatures(docs, hash_variant=variant)),
+            optimized(document_fingerprint(docs, hash_variant=variant)),
+        ):
+            assert plan.count("regexp_replace") == 1, variant
+            assert not re.findall(r"lambdafunction[^\n]*regexp_replace", plan)
+
     # language-ID: ONE tokenization for all 8 language scores + argmax
     lid_plan = optimized(language_id(docs))
     assert lid_plan.count("split(") == 1
@@ -242,3 +253,76 @@ def test_staged_projections_not_reinlined(spark):
     # token_stats: one split for size/fold/size
     ts_plan = optimized(token_stats(docs))
     assert ts_plan.count("split(") == 1
+
+
+def test_codegen_cache_keeps_a_cycle(spark):
+    """The codegen class cache must hold more than Spark's default 100
+    entries: a rollup + curation cycle generates more classes than that,
+    so with the default LRU every cycle recompiled the classes of the one
+    before. Pin: plan A, then 160 distinct small plans (each compiles its
+    own class — the literals are inlined), then A again without a single
+    compile."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def plan_a():
+        spark.range(64).selectExpr("id % 7 AS k", "id * 3 AS v").groupBy(
+            "k"
+        ).sum("v").collect()
+
+    plan_a()
+    for i in range(160):
+        spark.range(8).selectExpr(f"id * {i + 2} + {i} AS x").collect()
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    plan_a()
+    assert cm.METRIC_COMPILATION_TIME().getCount() == before
+
+
+def test_curation_plan_build_gateway_budget(spark, monkeypatch, tmp_path):
+    """Building the curation plans crosses the Py4J gateway once per
+    projection (SQL expression strings), not once per Column node: the
+    Column-tree builds took ~1.8k (minhash_dedup, xxhash64), ~3.3k (md5)
+    and ~3.1k (repetition_signals) round trips. gc is collected first and
+    held off while counting, so proxy-delete commands stay out of the
+    count."""
+    import gc
+    import warnings
+
+    from py4j.clientserver import ClientServerConnection
+
+    from pytimetk_spark.webtext.dedup import minhash_dedup
+    from pytimetk_spark.webtext.textstats import repetition_signals
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(50), "text": ["a b c d e f g"] * 50})
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    docs.schema  # resolve the relation outside the counted builds
+    send = ClientServerConnection.send_command
+    n = [0]
+
+    def counting(self, command):
+        n[0] += 1
+        return send(self, command)
+
+    def round_trips(build):
+        gc.collect()
+        gc.disable()
+        n[0] = 0
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                build()
+        finally:
+            monkeypatch.undo()
+            gc.enable()
+        return n[0]
+
+    for variant in ("xxhash64", "md5"):
+        trips = round_trips(
+            lambda: minhash_dedup(docs, hash_variant=variant, persist=False)
+        )
+        assert trips <= 600, (variant, trips)
+    trips = round_trips(lambda: repetition_signals(docs))
+    assert trips <= 600, trips

@@ -108,7 +108,23 @@ def test_minhash_signatures_match_catalyst_reference(spark):
         ],
     })
     df = spark.createDataFrame(docs)
-    for variant in ("xxhash64", "md5"):
+    # one Arrow batch of >=100 normal documents with the degenerate docs
+    # mixed in: they must not change the normal rows' signatures
+    rng = np.random.RandomState(7)
+    words = np.array(["alpha", "beta", "gamma", "delta", "eps", "zeta"])
+    mixed = pd.DataFrame({
+        "doc_id": range(100, 230),
+        "text": [
+            [None, "", "one two"][i % 3] if i % 10 == 0
+            else " ".join(rng.choice(words, 5 + i % 40))
+            for i in range(130)
+        ],
+    })
+    mixed_df = spark.createDataFrame(mixed).coalesce(1)
+    for variant, df, docs in [
+        ("xxhash64", df, docs), ("md5", df, docs),
+        ("xxhash64", mixed_df, mixed), ("md5", mixed_df, mixed),
+    ]:
         shingles = shingle_tokens(F.col("text"), 5)
         hashed = F.transform(shingles, lambda s: _h64(s, variant))
         staged = df.select("doc_id", hashed.alias("shingle_hashes"))
@@ -138,6 +154,44 @@ def test_minhash_signatures_match_catalyst_reference(spark):
                 variant, i)
             assert canon(got.shingle_hashes[i]) == canon(
                 ref.shingle_hashes[i]), (variant, i)
+
+
+def test_minhash_batch_degenerate_rows_vectorized():
+    """The Arrow-batch MinHash kernel handles empty lists, NULL lists and
+    NULL elements inside the vectorized sweep with array_min's
+    semantics (NULL elements skipped; no non-NULL hash -> signature of
+    NULLs; NULL row -> NULL signature), also on a sliced batch whose
+    offsets do not start at 0."""
+    import pyarrow as pa
+
+    from pytimetk_spark.webtext.dedup import _MOD31, _minhash_batch, _perm_params
+
+    rng = np.random.RandomState(3)
+    rows = [
+        [int(x) for x in rng.randint(-2**62, 2**62, size=n)]
+        for n in rng.randint(1, 30, size=120)
+    ]
+    for i, bad in zip((0, 5, 50, 51, 118, 119),
+                      ([], None, [None, 2**61 + 7], [None], [], None)):
+        rows[i] = bad
+    params = _perm_params(16, 42)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)
+    b_vec = np.array([b for _, b in params], dtype=np.int64)
+
+    def reference(row):
+        if row is None:
+            return None
+        hs = [h % _MOD31 for h in row if h is not None]
+        if not hs:
+            return [None] * len(params)
+        return [min((a * h + b) % _MOD31 for h in hs) for a, b in params]
+
+    lst = pa.array(rows, type=pa.list_(pa.int64()))
+    for arr, expect in ((lst, rows), (lst.slice(3, 100), rows[3:103]),
+                        (lst.slice(119, 1), rows[119:]),
+                        (lst.slice(0, 0), [])):
+        got = _minhash_batch(arr, a_vec, b_vec).to_pylist()
+        assert got == [reference(r) for r in expect]
 
 
 def test_simhash_near_dup(spark, planted):
