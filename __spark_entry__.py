@@ -515,7 +515,7 @@ def q_byte_features(spark, sf_dir):
     """hist16 is exploded to (bin, hist_frac) rows — the driver's canon
     sorts on every column and chokes on array cells (round-1 TypeError),
     and the exploded shape is exactly DuckDB-oracle-checkable."""
-    from pytimetk_spark.webtext.multimodal import byte_stats_features
+    from pytimetk_spark.webtext.textstats import byte_stats_features
 
     docs = _prep(spark).read.parquet(f"{sf_dir}/documents.parquet").withColumn(
         "blob", F.to_binary(F.col("text"), F.lit("utf-8"))

@@ -94,8 +94,8 @@ class FeatureStore:
         self, name: str, spark: SparkSession, fingerprint: str | None = None
     ) -> tuple[DataFrame, FeatureSetMetadata]:
         """Load a previously materialized feature set — the newest
-        snapshot, or the exact ``fingerprint`` version (the handle the
-        mlflow integration records)."""
+        snapshot, or the exact ``fingerprint`` version (the handle
+        ``FeatureSetMetadata.input_fingerprint`` records)."""
         metas = [m for m in self.list_feature_sets() if m.name == name]
         if fingerprint is not None:
             metas = [m for m in metas if m.input_fingerprint == fingerprint]

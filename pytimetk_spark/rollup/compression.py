@@ -30,11 +30,11 @@ Python bit loop was 35% of the headline bench):
   bytes (9 gathered bytes assemble any ≤64-bit field, see
   ``_extract_fields``) and floats reconstructed with
   ``np.bitwise_xor.accumulate`` (prefix-XOR). Streams < 256 points keep
-  the cheap sequential walk (vectorization overhead would dominate);
-  v1 blocks (magic 0xA1/0xA2) still decode.
+  the cheap sequential walk (vectorization overhead would dominate).
 
-These run INSIDE Arrow grouped-map UDFs (one call per url value stream);
-the distribution/shuffle strategy lives in rollup/tiers.py. Exact
+These run INSIDE Arrow ``mapInPandas`` UDFs: encode is batched over every
+url in an Arrow batch (``encode_*_many``), decode runs once per url value
+stream; the distribution/shuffle strategy lives in rollup/tiers.py. Exact
 round-trip is asserted by tests (NaNs round-trip bit-exactly too).
 
 The reference (pytimetk) has no compression; this implements the
@@ -47,10 +47,9 @@ import struct
 
 import numpy as np
 
-_MAGIC_TS = 0xA1  # single-byte format tags; v1 (no table) — decode only
-_MAGIC_VAL = 0xA2  # v1 value blocks (no super-block table) — decode only
-_MAGIC_VAL2 = 0xA3  # v2 value blocks: + per-super-block bit-length table
-_MAGIC_TS2 = 0xA4  # v2 timestamp blocks: + per-super-block bit-length table
+# single-byte format tags; v2 blocks carry a per-super-block bit-length table
+_MAGIC_VAL2 = 0xA3  # value blocks
+_MAGIC_TS2 = 0xA4  # timestamp blocks
 _TS_SUPER = 128  # dod fields ≤ 68 bits → 128·68 < 2^16 fits the uint16 table
 
 _U64 = np.uint64
@@ -219,9 +218,8 @@ def _ts_walk_super(bits: np.ndarray, m: int, sb_bits: np.ndarray):
 
 
 def decode_timestamps(blob: bytes) -> np.ndarray:
-    if blob[0] not in (_MAGIC_TS, _MAGIC_TS2):
+    if blob[0] != _MAGIC_TS2:
         raise ValueError(f"bad timestamp block magic: {blob[0]:#x}")
-    v2 = blob[0] == _MAGIC_TS2
     n = int.from_bytes(blob[1:5], "big")
     out = np.empty(n, dtype=np.int64)
     if n == 0:
@@ -238,60 +236,12 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
         return out
 
     m = n - 2
-    off = 21
-    sb_bits = None
-    if v2:
-        nsb = (m + _TS_SUPER - 1) // _TS_SUPER
-        sb_bits = np.frombuffer(blob[21 : 21 + 2 * nsb], dtype=">u2").astype(
-            np.int64
-        )
-        off = 21 + 2 * nsb
-    payload = np.frombuffer(blob, dtype=np.uint8)[off:]
+    nsb = (m + _TS_SUPER - 1) // _TS_SUPER
+    sb_bits = np.frombuffer(blob[21 : 21 + 2 * nsb], dtype=">u2").astype(np.int64)
+    payload = np.frombuffer(blob, dtype=np.uint8)[21 + 2 * nsb :]
     bits = np.unpackbits(payload)
-    L = len(bits)
-    if v2 and m >= 2 * _TS_SUPER:
+    if m >= 2 * _TS_SUPER:
         starts, widths, offs = _ts_walk_super(bits, m, sb_bits)
-    elif not v2 and m >= 256 and L <= 16 * m:
-        # vectorized walk: the dod classes form a STATELESS prefix code,
-        # so the total field length starting at any bit position is a
-        # local function of ≤4 bits — compute it everywhere, then realize
-        # the start chain p_{k+1} = p_k + len(p_k) by pointer doubling
-        # (log2(m) gather rounds over the L-long jump table). For near-
-        # regular series L ≈ m (mostly 1-bit '0' fields); the L > 16m
-        # guard falls back to the sequential walk for escape-heavy
-        # pathological streams where doubling would touch 64× more data.
-        pb = np.concatenate([bits, np.zeros(4, dtype=np.uint8)])
-        len_at = np.where(
-            pb[:L] == 0,
-            1,
-            np.where(
-                pb[1 : L + 1] == 0,
-                9,
-                np.where(pb[2 : L + 2] == 0, 12,
-                         np.where(pb[3 : L + 3] == 0, 16, 68)),
-            ),
-        ).astype(np.int64)
-        jump = np.minimum(np.arange(L, dtype=np.int64) + len_at, L)
-        jump = np.append(jump, L)  # sink for the clip
-        P = np.zeros(1, dtype=np.int64)
-        while len(P) < m:
-            P = np.concatenate([P, jump[P]])
-            if len(P) >= m:
-                break
-            jump = jump[jump]
-        P = P[:m]
-        b0, b1 = pb[P], pb[P + 1]
-        b2, b3 = pb[P + 2], pb[P + 3]
-        c0 = b0 == 0
-        c1 = ~c0 & (b1 == 0)
-        c2 = ~c0 & ~c1 & (b2 == 0)
-        c3 = ~c0 & ~c1 & ~c2 & (b3 == 0)
-        c4 = ~c0 & ~c1 & ~c2 & ~c3
-        widths = np.select([c0, c1, c2, c3, c4], [0, 7, 9, 12, 64]).astype(
-            np.int64
-        )
-        starts = P + np.select([c0, c1, c2, c3, c4], [1, 2, 3, 4, 4])
-        offs = np.select([c1, c2, c3], [-63, -255, -2047], 0).astype(np.int64)
     else:
         bl = bits.tolist()  # Python-int list: fastest sequential scan
         starts = np.empty(m, dtype=np.int64)
@@ -675,7 +625,7 @@ def encode_gorilla_many(
 
 
 def _gorilla_walk_seq(bits: np.ndarray, m: int):
-    """Sequential control walk (v1 streams and short v2 streams):
+    """Sequential control walk (short streams):
     returns per-point (field start, width, left-shift) arrays."""
     bl = bits.tolist()
     starts = np.empty(m, dtype=np.int64)
@@ -713,12 +663,12 @@ def _gorilla_walk_seq(bits: np.ndarray, m: int):
 def _gorilla_walk_super(
     bits: np.ndarray, m: int, sb_bits: np.ndarray, super_pts: int
 ):
-    """Vectorized control walk for v2 streams: every super-block starts at
-    a known bit offset (cumsum of the length table) with fresh window
-    state — the encoder emits a '11' header at each block's first
-    non-zero XOR and super-blocks are whole multiples of blocks — so the
-    walk runs ``super_pts`` numpy steps ACROSS super-blocks instead of m
-    Python steps along the stream."""
+    """Vectorized control walk: every super-block starts at a known bit
+    offset (cumsum of the length table) with fresh window state — the
+    encoder emits a '11' header at each block's first non-zero XOR and
+    super-blocks are whole multiples of blocks — so the walk runs
+    ``super_pts`` numpy steps ACROSS super-blocks instead of m Python
+    steps along the stream."""
     nsb = len(sb_bits)
     # pad: the LAST super-block's walk keeps stepping (1 bit per step)
     # after its final field, plus 12 look-ahead bits for the header parse.
@@ -758,27 +708,8 @@ def _gorilla_walk_super(
 
 
 def decode_gorilla(blob: bytes) -> np.ndarray:
-    if blob[0] == _MAGIC_VAL2:
-        return _decode_gorilla_v2(blob)
-    if blob[0] != _MAGIC_VAL:
+    if blob[0] != _MAGIC_VAL2:
         raise ValueError(f"bad value block magic: {blob[0]:#x}")
-    n = int.from_bytes(blob[1:5], "big")
-    out = np.empty(n, dtype=_U64)
-    if n == 0:
-        return out.view(np.float64)
-    first = int.from_bytes(blob[5:13], "big")
-    out[0] = first
-    if n == 1:
-        return out.view(np.float64)
-
-    payload = np.frombuffer(blob, dtype=np.uint8)[13:]
-    bits = np.unpackbits(payload)
-    m = n - 1
-    starts, widths, shifts = _gorilla_walk_seq(bits, m)
-    return _gorilla_finish(out, payload, starts, widths, shifts)
-
-
-def _decode_gorilla_v2(blob: bytes) -> np.ndarray:
     n = int.from_bytes(blob[1:5], "big")
     block = blob[5]
     out = np.empty(n, dtype=_U64)

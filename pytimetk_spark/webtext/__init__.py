@@ -21,6 +21,7 @@ from pytimetk_spark.webtext.similarity import (
     normalize_embeddings,
 )
 from pytimetk_spark.webtext.textstats import (
+    byte_stats_features,
     document_fingerprint,
     language_id,
     quality_score,
@@ -29,12 +30,7 @@ from pytimetk_spark.webtext.textstats import (
     token_stats,
     url_features,
 )
-from pytimetk_spark.webtext.multimodal import (
-    byte_stats_features,
-    decode_image_batch,
-    sample_video_frames,
-    sniff_media_type,
-)
+from pytimetk_spark.webtext.multimodal import decode_image_batch
 from pytimetk_spark.webtext.cleaning import (
     c4_line_filter,
     decontaminate,
@@ -64,6 +60,4 @@ from pytimetk_spark.webtext.sampling import (
     temperature_mixture_weights,
     temperature_sample,
 )
-from pytimetk_spark.webtext.imageinfo import image_stream_info
 from pytimetk_spark.webtext.pq import pq_encode, pq_search, pq_train
-from pytimetk_spark.webtext.videoprobe import video_stream_info

@@ -1,32 +1,13 @@
-"""Multimodal column handling: image/audio/video as opaque ``binary``
-columns with typed metadata.
+"""Image columns as opaque ``binary`` blobs with typed features.
 
-Decode support tiers:
-
-* **REAL, dependency-free** — parsed in pure numpy/stdlib: JPEG,
-  baseline AND progressive (full entropy + IDCT decode incl.
-  spectral-selection/successive-approximation scans, webtext/jpeg.py —
-  the dominant real-web image format), PNG (stdlib-zlib inflate + all five scanline
-  filters, webtext/png.py: gray/RGB/palette/alpha, 8-bit, plain or
-  Adam7 interlaced), BMP (24/32-bpp uncompressed) and binary PPM (P6)
-  images with nearest-neighbor resize + luminance-histogram features,
-  GIF (LZW, first frame, incl. interlace — webtext/gif.py), WebP
-  lossless (full VP8L: prefix/LZ77/cache entropy engine + all four
-  transforms — webtext/webp.py), and WAV (PCM 8/16/32-bit) audio with
-  sample-rate/duration/RMS/ZCR/peak features; MP4 container keyframe
-  sampling (MP4 + WebM/Matroska) and MP3/AAC/FLAC/Ogg audio
-  metadata parse without a codec. No
-  PIL/ffmpeg needed; differential-tested against bytes synthesized
-  from known pixel/sample arrays (JPEG: against an in-tests reference
-  encoder, tests/jpeg_ref.py; PNG/GIF/WebP: exact lossless round-trips
-  across filters/interlace/transform combinations).
-* **Stubbed** — remaining compressed codecs (lossy-VP8 WebP, MP3/AAC sample decode, MP4/WebM frame decode)
-  need PIL/ffmpeg, absent in this environment: those raise
-  NotImplementedError (or take the deterministic byte-level ``fake=True``
-  path), but the Spark-side plumbing — schemas, ``mapInPandas`` Arrow
-  batching, batch shapes, partition sizing — is identical to the real
-  tier and fully tested. Swapping in a codec is a one-function change
-  inside the UDF.
+``decode_image_batch`` decodes in pure numpy/stdlib, with no PIL:
+JPEG, baseline and progressive (webtext/jpeg.py), PNG incl. Adam7
+(webtext/png.py), GIF first frame (webtext/gif.py), WebP lossless and
+lossy-VP8 keyframes (webtext/webp.py, webtext/vp8.py), uncompressed BMP
+(24/32-bpp) and binary PPM (P6). Each image is nearest-neighbor resized
+and featurized as a luminance histogram. Other formats raise
+NotImplementedError unless ``fake=True``, which takes a deterministic
+byte-level stand-in with the same schema and batch shape.
 
 Scale notes: media blobs are large → ``spark.sql.files.maxPartitionBytes``
 governs rows/task; mapInPandas streams Arrow batches so a task never holds
@@ -52,54 +33,6 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def byte_stats_features(
-    df: DataFrame, binary_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL (non-stub) byte-level featurizer over any binary column:
-    length, shannon-entropy-ish stats from a 16-bin byte histogram, via
-    mapInPandas (numpy over Arrow buffers — vectorized, no per-row Python
-    objects beyond the numpy views)."""
-    schema = T.StructType(
-        [
-            T.StructField("__id__", T.LongType()),
-            T.StructField("n_bytes", T.IntegerType()),
-            T.StructField("byte_entropy", T.DoubleType()),
-            T.StructField("hist16", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # whole-batch vectorization: ONE concatenated uint8 view + ONE
-            # bincount over (row*16 + bin) — no per-blob numpy calls
-            blobs = [b or b"" for b in pdf["__bin__"]]
-            n = len(blobs)
-            lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=n)
-            cat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-            row_idx = np.repeat(np.arange(n, dtype=np.int32), lens)
-            flat = np.bincount(
-                (row_idx << 4) | (cat >> 4).astype(np.int32), minlength=n * 16
-            )
-            hist = flat.reshape(n, 16).astype("float64")
-            tot = hist.sum(axis=1, keepdims=True)
-            p = np.divide(hist, tot, out=np.zeros_like(hist), where=tot > 0)
-            plogp = np.zeros_like(p)
-            np.log2(p, out=plogp, where=p > 0)
-            ent = -(p * plogp).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "__id__": pdf["__id__"].astype("int64").to_numpy(),
-                    "n_bytes": lens.astype("int32"),
-                    "byte_entropy": ent,
-                    "hist16": list(p),
-                }
-            )
-
-    src = df.select(F.col(id_col).alias("__id__"), F.col(binary_col).alias("__bin__"))
-    out = src.mapInPandas(featurize, schema=schema)
-    return out.withColumnRenamed("__id__", id_col)
 
 
 def decode_image_batch(
@@ -207,7 +140,6 @@ def decode_image_batch(
 
 
 
-
 def _decode_uncompressed_image(blob: bytes) -> np.ndarray | None:
     """Pure-numpy decode of uncompressed BMP (24/32-bpp, BI_RGB) and
     binary PPM (P6) → HxWx3 uint8 RGB, top-down row order. Returns None
@@ -266,246 +198,10 @@ def _decode_uncompressed_image(blob: bytes) -> np.ndarray | None:
     return None
 
 
+
 def _nn_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize via index maps (pixel-center sampling)."""
     h, w = img.shape[:2]
     ri = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(int), h - 1)
     ci = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(int), w - 1)
     return img[ri][:, ci]
-
-
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),  # 36-bit FLAC totals
-        T.StructField("duration_sec", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-        T.StructField("zero_crossing_rate", T.DoubleType()),
-    ]
-)
-
-
-def decode_audio_batch(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """REAL WAV (RIFF PCM 8/16/32-bit) feature extraction in pure numpy:
-    sample rate, channel count, duration, RMS, peak, zero-crossing rate
-    (on the channel-mean mono mix, normalized to [-1, 1]).
-
-    MP3, AAC-ADTS, FLAC and Ogg (Opus/Vorbis) streams get the
-    container-layer metadata tier (webtext/mp3.py, webtext/aac.py,
-    webtext/flac_ogg.py): sample rate, channels, exact duration and
-    sample count from walking transport headers / STREAMINFO / granule
-    positions — the sample-level stats (rms/peak/zcr) are NULL because
-    they genuinely need the codec (ffmpeg). Other compressed
-    audio raises NotImplementedError."""
-    import struct
-
-    def _wav_features(blob: bytes):
-        if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-            from pytimetk_spark.webtext.mp3 import parse_mp3_info
-
-            info = parse_mp3_info(blob)
-            if info is None:
-                from pytimetk_spark.webtext.aac import parse_aac_info
-
-                info = parse_aac_info(blob)
-            if info is None:
-                from pytimetk_spark.webtext.flac_ogg import (
-                    parse_flac_info,
-                    parse_ogg_info,
-                )
-
-                info = parse_flac_info(blob) or parse_ogg_info(blob)
-            if info is not None:
-                return (info.sample_rate, info.n_channels,
-                        int(round(info.duration_sec * info.sample_rate)),
-                        info.duration_sec,
-                        float("nan"), float("nan"), float("nan"))
-            raise NotImplementedError(
-                "RIFF/WAVE PCM decodes fully; MP3, AAC-ADTS, FLAC and "
-                "Ogg (Opus/Vorbis) get container-layer metadata; other "
-                "audio needs ffmpeg"
-            )
-        pos = 12
-        fmt = None
-        while pos + 8 <= len(blob):
-            cid = blob[pos : pos + 4]
-            sz = struct.unpack_from("<I", blob, pos + 4)[0]
-            body = pos + 8
-            if cid == b"fmt ":
-                audio_fmt, n_ch, rate = struct.unpack_from("<HHI", blob, body)
-                bits = struct.unpack_from("<H", blob, body + 14)[0]
-                fmt = (audio_fmt, n_ch, rate, bits)
-            elif cid == b"data" and fmt is not None:
-                audio_fmt, n_ch, rate, bits = fmt
-                if audio_fmt != 1 or bits not in (8, 16, 32):
-                    raise NotImplementedError(
-                        f"non-PCM or {bits}-bit WAV needs ffmpeg"
-                    )
-                dt = {8: np.uint8, 16: np.int16, 32: np.int32}[bits]
-                count = min(sz, len(blob) - body) // np.dtype(dt).itemsize
-                count -= count % max(n_ch, 1)
-                samples = np.frombuffer(blob, dtype=dt, count=count,
-                                        offset=body)
-                if bits == 8:  # unsigned, midpoint 128
-                    x = (samples.astype(np.float64) - 128.0) / 128.0
-                else:
-                    x = samples.astype(np.float64) / float(2 ** (bits - 1))
-                mono = x.reshape(-1, n_ch).mean(axis=1) if n_ch > 1 else x
-                n = mono.size
-                rms = float(np.sqrt((mono * mono).mean())) if n else 0.0
-                peak = float(np.abs(mono).max()) if n else 0.0
-                zc = (
-                    float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                    if n > 1 else 0.0
-                )
-                return (rate, n_ch, n, n / rate if rate else 0.0,
-                        rms, peak, zc)
-            pos = body + sz + (sz & 1)  # chunks are word-aligned
-        raise NotImplementedError("no PCM data chunk found")
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf["__id__"], pdf["__bin__"]):
-                blob = bytes(blob or b"")
-                rate, n_ch, n, dur, rms, peak, zc = _wav_features(blob)
-                rows.append((int(i), len(blob), rate, n_ch, n, dur,
-                             rms, peak, zc))
-            out = pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "sample_rate", "n_channels",
-                         "n_samples", "duration_sec", "rms", "peak",
-                         "zero_crossing_rate"],
-            )
-            # metadata-tier rows carry true NULLs (not NaN) for the
-            # sample-level stats, as the docstring promises: nullable
-            # Float64 arrays survive Arrow as null, plain NaN would not
-            for c in ("rms", "peak", "zero_crossing_rate"):
-                out[c] = pd.array(
-                    [None if v != v else v for v in out[c]],
-                    dtype="Float64",
-                )
-            yield out
-
-    src = df.select(F.col(id_col).alias("__id__"), F.col(binary_col).alias("__bin__"))
-    return src.mapInPandas(extract, schema=AUDIO_FEATURE_SCHEMA)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str = "doc_id",
-    every_n_seconds: float = 1.0,
-    decode: bool = False,
-) -> DataFrame:
-    """Keyframe sampling from MP4 and WebM/Matroska containers — REAL
-    at the container layer (webtext/mp4.py parses ISO BMFF sample
-    tables; webtext/webm.py walks EBML clusters and SimpleBlock/
-    BlockGroup keyframe flags) returning the nearest sync sample
-    at-or-before each target timestamp, with its
-    ENCODED payload bytes and codec id. That is the shape a crawl
-    pipeline ships to a GPU decode stage: Spark selects and extracts the
-    byte ranges; pixels never transit the cluster.
-
-    ``decode=True`` (pixels) requires an H.264/H.265 codec → ffmpeg/pyav,
-    absent here: NotImplementedError (the one remaining stub layer)."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_ts_sec", T.DoubleType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("frame_payload", T.BinaryType()),
-        ]
-    )
-    if decode:
-
-        def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            raise NotImplementedError(
-                "pixel decode of video keyframes requires ffmpeg/pyav "
-                "(H.264/H.265 bitstreams); container-level sampling "
-                "(decode=False) is fully supported"
-            )
-            yield  # pragma: no cover
-
-    else:
-
-        def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pytimetk_spark.webtext.mp4 import extract_keyframes
-            from pytimetk_spark.webtext.webm import extract_keyframes_webm
-
-            for pdf in batches:
-                rows = []
-                for i, blob in zip(pdf["doc_id"].to_numpy(),
-                                   pdf["__bin__"].to_numpy()):
-                    raw = bytes(blob or b"")
-                    got = extract_keyframes(raw, every_n_seconds)
-                    if got is None:
-                        got = extract_keyframes_webm(raw, every_n_seconds)
-                    if got is None:
-                        raise NotImplementedError(
-                            "not an unfragmented ISO BMFF (MP4) or "
-                            "EBML (WebM/Matroska) stream — fragmented "
-                            "MP4 / AVI containers are not supported"
-                        )
-                    rows.extend(
-                        (int(i), idx, ts, codec, payload)
-                        for idx, ts, codec, payload in got
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["doc_id", "frame_idx", "frame_ts_sec",
-                             "codec", "frame_payload"],
-                )
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("__bin__"))
-    return src.mapInPandas(sample, schema=schema)
-
-
-def sniff_media_type(
-    df: DataFrame, binary_col: str, out_col: str = "media_type"
-) -> DataFrame:
-    """Magic-byte MIME sniffing, pure Catalyst (hex-prefix compares in
-    one projection — fuses into any scan): the routing step before the
-    per-format decode/probe operators. Covers every format the engine
-    handles (JPEG/PNG/GIF/WebP/BMP/PPM images, WAV/MP3/AAC/FLAC/Ogg
-    audio, MP4/WebM video) -> NULL for unknown bytes."""
-    b = F.col(binary_col)
-    hx = F.hex(F.substring(b, 1, 12))
-    pre = lambda h: hx.startswith(h)
-    riff = pre("52494646")
-    t = (
-        F.when(pre("FFD8FF"), "image/jpeg")
-        .when(pre("89504E470D0A1A0A"), "image/png")
-        .when(pre("47494638"), "image/gif")
-        .when(riff & (F.substring(hx, 17, 8) == "57454250"), "image/webp")
-        .when(riff & (F.substring(hx, 17, 8) == "57415645"), "audio/wav")
-        .when(pre("424D"), "image/bmp")
-        .when(pre("5036"), "image/x-portable-pixmap")
-        .when(pre("664C6143"), "audio/flac")
-        .when(pre("4F676753"), "audio/ogg")
-        .when(pre("494433"), "audio/mpeg")  # ID3-prefixed MP3
-        # every legal MPEG-audio sync second byte (3 versions x 3
-        # layers x CRC flag; layer==00 is AAC ADTS, handled next)
-        .when(pre("FFE2") | pre("FFE3") | pre("FFE4") | pre("FFE5") | pre("FFE6") | pre("FFE7") | pre("FFF2") | pre("FFF3") | pre("FFF4") | pre("FFF5") | pre("FFF6") | pre("FFF7") | pre("FFFA") | pre("FFFB") | pre("FFFC") | pre("FFFD") | pre("FFFE") | pre("FFFF"), "audio/mpeg")
-        .when(pre("FFF1") | pre("FFF9") | pre("FFF0") | pre("FFF8"),
-              "audio/aac")  # incl. CRC-protected headers
-        .when((F.substring(hx, 9, 8) == "66747970")
-              & F.substring(hx, 17, 8).isin(
-                  "61766966", "61766973"), "image/avif")
-        .when((F.substring(hx, 9, 8) == "66747970")
-              & F.substring(hx, 17, 8).isin(
-                  "68656963", "68656978", "6D696631"), "image/heic")
-        .when(F.substring(hx, 9, 8) == "66747970", "video/mp4")
-        .when(pre("1A45DFA3"), "video/webm")
-        .when(pre("49492A00") | pre("4D4D002A"), "image/tiff")
-    )
-    return df.withColumn(out_col, t)

@@ -1,7 +1,9 @@
 """Text analysis for web corpora: language ID, quality scoring, token
-counting, document fingerprinting. Every function is a pure Catalyst
-projection (plus one tiny broadcast for stopword sets) — zero Python in
-the row path, safe to fuse into any 100-TB scan.
+counting, document fingerprinting, byte-level features. Every function
+except ``byte_stats_features`` is a pure Catalyst projection (plus one
+tiny broadcast for stopword sets) — zero Python in the row path, safe to
+fuse into any 100-TB scan. ``byte_stats_features`` crosses into Python
+once per Arrow batch (``mapInPandas``).
 
 ``repetition_signals`` and ``document_fingerprint`` compose their plans
 as SQL expression strings (``selectExpr`` / ``F.expr``) rather than
@@ -14,8 +16,13 @@ per projection and analyzes to the same expressions.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pytimetk_spark.webtext.dedup import _h64_sql, _q, _shingles_sql, _token_sql
 
@@ -550,3 +557,51 @@ def url_features(
         .drop("__labels__")
     )
     return out
+
+
+def byte_stats_features(
+    df: DataFrame, binary_col: str = "html", id_col: str = "doc_id"
+) -> DataFrame:
+    """Byte-level featurizer over any binary column: length,
+    shannon-entropy-ish stats from a 16-bin byte histogram, via
+    mapInPandas (numpy over Arrow buffers — vectorized, no per-row Python
+    objects beyond the numpy views)."""
+    schema = T.StructType(
+        [
+            T.StructField("__id__", T.LongType()),
+            T.StructField("n_bytes", T.IntegerType()),
+            T.StructField("byte_entropy", T.DoubleType()),
+            T.StructField("hist16", T.ArrayType(T.DoubleType())),
+        ]
+    )
+
+    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # whole-batch vectorization: ONE concatenated uint8 view + ONE
+            # bincount over (row*16 + bin) — no per-blob numpy calls
+            blobs = [b or b"" for b in pdf["__bin__"]]
+            n = len(blobs)
+            lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=n)
+            cat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+            row_idx = np.repeat(np.arange(n, dtype=np.int32), lens)
+            flat = np.bincount(
+                (row_idx << 4) | (cat >> 4).astype(np.int32), minlength=n * 16
+            )
+            hist = flat.reshape(n, 16).astype("float64")
+            tot = hist.sum(axis=1, keepdims=True)
+            p = np.divide(hist, tot, out=np.zeros_like(hist), where=tot > 0)
+            plogp = np.zeros_like(p)
+            np.log2(p, out=plogp, where=p > 0)
+            ent = -(p * plogp).sum(axis=1)
+            yield pd.DataFrame(
+                {
+                    "__id__": pdf["__id__"].astype("int64").to_numpy(),
+                    "n_bytes": lens.astype("int32"),
+                    "byte_entropy": ent,
+                    "hist16": list(p),
+                }
+            )
+
+    src = df.select(F.col(id_col).alias("__id__"), F.col(binary_col).alias("__bin__"))
+    out = src.mapInPandas(featurize, schema=schema)
+    return out.withColumnRenamed("__id__", id_col)

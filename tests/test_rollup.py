@@ -52,26 +52,18 @@ def test_codec_roundtrip_fuzz():
         assert np.array_equal(vals.view(np.uint64), back.view(np.uint64))
 
 
-def test_codec_v1_blocks_still_decode():
-    # v1 layout = v2 minus the super-block bit-length table; historical
-    # tier blobs written before the v2 format must keep decoding
-    import struct
-
+def test_codec_rejects_v1_blocks():
+    # only the v2 format (0xA3/0xA4, with the super-block bit-length
+    # table) decodes; a v1 tag is an unknown block, not a silent misread
     from pytimetk_spark.rollup import compression as C
 
-    rng = np.random.RandomState(7)
-    for n in (3, 100, 700, 2000):
-        ts = np.cumsum(rng.randint(1, 10**5, size=n)).astype(np.int64)
-        tb = C.encode_timestamps(ts)
-        nsb = ((n - 2) + C._TS_SUPER - 1) // C._TS_SUPER
-        v1 = struct.pack(">BI", C._MAGIC_TS, n) + tb[5:21] + tb[21 + 2 * nsb :]
-        assert np.array_equal(ts, C.decode_timestamps(v1))
-        vals = np.cumsum(rng.randn(n))
-        vb = C.encode_gorilla(vals)
-        nsb = ((n - 1) + 127) // 128
-        v1 = struct.pack(">BI", C._MAGIC_VAL, n) + vb[6:14] + vb[14 + 2 * nsb :]
-        back = C.decode_gorilla(v1)
-        assert np.array_equal(vals.view(np.uint64), back.view(np.uint64))
+    ts = np.arange(300, dtype=np.int64) * 60
+    vals = np.cumsum(np.random.RandomState(7).randn(300))
+    for tag in (0xA1, 0xA2):
+        with pytest.raises(ValueError, match="bad timestamp block magic"):
+            C.decode_timestamps(bytes([tag]) + C.encode_timestamps(ts)[1:])
+        with pytest.raises(ValueError, match="bad value block magic"):
+            C.decode_gorilla(bytes([tag]) + C.encode_gorilla(vals)[1:])
 
 
 def test_codec_compresses_regular_series():

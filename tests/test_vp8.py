@@ -221,10 +221,8 @@ def test_vp8_webp_container_routing():
     assert rgb is not None and rgb.shape == (16, 32, 3)
     want = yuv_to_rgb(expected_planes(32, 16, mbs, y_ac_qi=12))
     np.testing.assert_array_equal(rgb, want)
-    # probe agrees on the dims it reads from the same header
-    from pytimetk_spark.webtext.videoprobe import parse_vp8_keyframe
-
-    info = parse_vp8_keyframe(payload)
+    # the keyframe header carries the same dims
+    info = decode_vp8_keyframe(payload)
     assert info["width"] == 32 and info["height"] == 16
 
 

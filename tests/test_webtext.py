@@ -1,6 +1,6 @@
-"""Tests for dedup / similarity / text analysis / multimodal plumbing over
-the driver testdata (documents.parquet, embeddings.parquet) plus planted
-synthetic duplicates."""
+"""Tests for dedup / similarity / text analysis / byte features / image
+decode over the driver testdata (documents.parquet, embeddings.parquet)
+plus planted synthetic duplicates."""
 
 from __future__ import annotations
 
@@ -20,9 +20,10 @@ from pytimetk_spark.webtext.dedup import (
     simhash,
     simhash_near_dup_pairs,
 )
-from pytimetk_spark.webtext.multimodal import byte_stats_features, decode_image_batch, sample_video_frames
+from pytimetk_spark.webtext.multimodal import decode_image_batch
 from pytimetk_spark.webtext.similarity import cosine_topk_bruteforce, lsh_bucket_ann
 from pytimetk_spark.webtext.textstats import (
+    byte_stats_features,
     document_fingerprint,
     language_id,
     quality_score,
@@ -367,8 +368,6 @@ def test_multimodal_decode_stub(spark, docs):
     assert (fake["features"].apply(len) == 8).all()
     with pytest.raises(Exception, match="NotImplementedError|decode requires"):
         decode_image_batch(src, "blob", fake=False).collect()
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        sample_video_frames(src, "blob").collect()
 
 
 def _make_bmp(pix: np.ndarray) -> bytes:
@@ -394,19 +393,6 @@ def _make_bmp(pix: np.ndarray) -> bytes:
 def _make_ppm(pix: np.ndarray) -> bytes:
     h, w = pix.shape[:2]
     return f"P6\n# test\n{w} {h}\n255\n".encode() + pix.tobytes()
-
-
-def _make_wav(samples: np.ndarray, rate: int = 8000, bits: int = 16) -> bytes:
-    import struct
-
-    if bits == 16:
-        raw = (samples * 32767).astype("<i2").tobytes()
-    else:
-        raw = ((samples * 127) + 128).clip(0, 255).astype("u1").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * bits // 8, bits // 8, bits)
-    return (b"RIFF" + struct.pack("<I", 36 + len(raw)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(raw)) + raw)
 
 
 def test_real_image_decode_bmp_ppm(spark):
@@ -447,40 +433,6 @@ def test_real_image_decode_bmp_ppm(spark):
     with pytest.raises(Exception, match="NotImplementedError|PIL"):
         decode_image_batch(bad, "img").collect()
     assert decode_image_batch(bad, "img", fake=True).count() == 1
-
-
-def test_real_wav_decode(spark):
-    from pytimetk_spark.webtext.multimodal import decode_audio_batch
-
-    t = np.arange(8000, dtype=np.float64) / 8000.0
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)  # 1 s of A440 at half scale
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [1, 2],
-            "wav": [_make_wav(sine, 8000, 16), _make_wav(sine, 8000, 8)],
-        }
-    )
-    out = (
-        decode_audio_batch(spark.createDataFrame(pdf), "wav")
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert (out["sample_rate"] == 8000).all()
-    assert (out["n_samples"] == 8000).all()
-    np.testing.assert_allclose(out["duration_sec"], 1.0, rtol=1e-9)
-    # sine RMS = amplitude/sqrt(2); 440 Hz -> 880 zero crossings/sec
-    np.testing.assert_allclose(out.loc[0, "rms"], 0.5 / np.sqrt(2), rtol=1e-3)
-    np.testing.assert_allclose(out.loc[0, "peak"], 0.5, rtol=1e-3)
-    np.testing.assert_allclose(
-        out["zero_crossing_rate"], 880 / 8000, rtol=0.05
-    )
-    # non-WAV bytes raise (needs ffmpeg)
-    bad = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [3], "wav": [b"ID3\x03mp3junk"]})
-    )
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg|WAVE"):
-        decode_audio_batch(bad, "wav").collect()
 
 
 def test_shed_observation_and_minhash_cache_release(spark):
@@ -1099,461 +1051,6 @@ def test_webp_through_decode_image_batch(spark):
                                np.array(out.loc[1, "features"]))
 
 
-def _make_mp4(frames, fps=4.0, sync_every=4, timescale=1000,
-              codec=b"avc1", n_chunks=2, avcc=None):
-    """Minimal unfragmented MP4 (test fixture): one video track whose
-    samples are the given payload byte strings, spread over ``n_chunks``
-    mdat chunks, keyframe every ``sync_every`` samples."""
-    import struct
-
-    def box(btype, payload):
-        return struct.pack(">I", len(payload) + 8) + btype + payload
-
-    def fullbox(btype, ver, payload):
-        return box(btype, bytes([ver, 0, 0, 0]) + payload)
-
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isommp41")
-    mdat_payload = b"".join(frames)
-    mdat_start = len(ftyp) + 8  # first sample offset
-    mdat = box(b"mdat", mdat_payload)
-
-    n = len(frames)
-    delta = int(round(timescale / fps))
-    duration = n * delta
-    sizes = [len(f) for f in frames]
-    # chunk split: n_chunks roughly equal runs
-    per = (n + n_chunks - 1) // n_chunks
-    chunk_first_sample = list(range(0, n, per))
-    chunk_offsets = []
-    off = mdat_start
-    si = 0
-    for c, first in enumerate(chunk_first_sample):
-        chunk_offsets.append(off)
-        cnt = min(per, n - first)
-        off += sum(sizes[first:first + cnt])
-        si += cnt
-
-    mvhd = fullbox(b"mvhd", 0, struct.pack(
-        ">IIII", 0, 0, timescale, duration) + b"\x00" * 80)
-    tkhd = fullbox(b"tkhd", 0, struct.pack(">IIIII", 0, 0, 1, 0, duration)
-                   + b"\x00" * 52
-                   + struct.pack(">II", 320 << 16, 240 << 16))
-    mdhd = fullbox(b"mdhd", 0, struct.pack(">IIIIHH", 0, 0, timescale,
-                                           duration, 0x55C4, 0))
-    hdlr = fullbox(b"hdlr", 0, struct.pack(">I", 0) + b"vide"
-                   + b"\x00" * 12 + b"vh\x00")
-    if avcc is None:
-        stsd_entry = struct.pack(">I", 16) + codec + b"\x00" * 8
-    else:
-        # full 86-byte VisualSampleEntry + avcC codec-config child box
-        fixed = (b"\x00" * 6 + struct.pack(">H", 1)  # dref index
-                 + b"\x00" * 16
-                 + struct.pack(">HH", 320, 240)      # declared dims
-                 + struct.pack(">II", 0x480000, 0x480000)
-                 + b"\x00" * 4 + struct.pack(">H", 1)
-                 + b"\x00" * 32 + struct.pack(">Hh", 24, -1))
-        assert len(fixed) == 78
-        child = box(b"avcC", avcc)
-        stsd_entry = (struct.pack(">I", 8 + 78 + len(child)) + codec
-                      + fixed + child)
-    stsd = fullbox(b"stsd", 0, struct.pack(">I", 1) + stsd_entry)
-    stts = fullbox(b"stts", 0, struct.pack(">III", 1, n, delta))
-    if len(set(sizes)) == 1:
-        stsz = fullbox(b"stsz", 0, struct.pack(">II", sizes[0], n))
-    else:
-        stsz = fullbox(b"stsz", 0, struct.pack(">II", 0, n)
-                       + b"".join(struct.pack(">I", s) for s in sizes))
-    # stsc: runs where samples-per-chunk changes
-    runs = []
-    for c, first in enumerate(chunk_first_sample):
-        cnt = min(per, n - first)
-        if not runs or runs[-1][1] != cnt:
-            runs.append((c + 1, cnt))
-    stsc = fullbox(b"stsc", 0, struct.pack(">I", len(runs))
-                   + b"".join(struct.pack(">III", fc, cnt, 1)
-                              for fc, cnt in runs))
-    stco = fullbox(b"stco", 0, struct.pack(">I", len(chunk_offsets))
-                   + b"".join(struct.pack(">I", o) for o in chunk_offsets))
-    sync = list(range(1, n + 1, sync_every))
-    stss = fullbox(b"stss", 0, struct.pack(">I", len(sync))
-                   + b"".join(struct.pack(">I", s) for s in sync))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco + stss)
-    minf = box(b"minf", stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-def test_mp4_container_parse_and_keyframe_extraction():
-    """The ISO BMFF parser recovers the exact sample geometry a real
-    muxer would write (sizes, per-chunk offsets via stsc runs, stts
-    timestamps, stss sync set), and extract_keyframes returns the exact
-    encoded payload bytes of the sync sample at-or-before each target
-    timestamp."""
-    from pytimetk_spark.webtext.mp4 import extract_keyframes, parse_mp4
-
-    rng = np.random.RandomState(12)
-    frames = [bytes(rng.randint(0, 256, rng.randint(40, 200)).astype(np.uint8))
-              for _ in range(24)]
-    blob = _make_mp4(frames, fps=4.0, sync_every=4, n_chunks=3)
-
-    info = parse_mp4(blob)
-    trk = info.video_track()
-    assert trk.codec == "avc1" and trk.handler == "vide"
-    assert (trk.width, trk.height) == (320.0, 240.0)
-    assert trk.n_samples == 24
-    np.testing.assert_array_equal(trk.sample_sizes,
-                                  [len(f) for f in frames])
-    # offsets address the exact payloads
-    for i in (0, 7, 11, 23):
-        o, s = int(trk.sample_offsets[i]), int(trk.sample_sizes[i])
-        assert blob[o:o + s] == frames[i]
-    np.testing.assert_allclose(trk.sample_ts,
-                               np.arange(24) * 0.25, rtol=1e-9)
-    np.testing.assert_array_equal(trk.sync_samples, [0, 4, 8, 12, 16, 20])
-
-    got = extract_keyframes(blob, every_n_seconds=1.0)
-    # 6s of video @1s cadence -> targets 0..5s -> sync samples 0,4,8,...20
-    assert [g[0] for g in got] == [0, 4, 8, 12, 16, 20]
-    for idx, ts, codec, payload in got:
-        assert codec == "avc1"
-        assert payload == frames[idx]
-        assert abs(ts - idx * 0.25) < 1e-9
-
-    assert parse_mp4(b"\x00\x00\x00\x08freeXXXX") is None
-    assert extract_keyframes(b"not a container") is None
-
-
-def test_mp4_stts_run_count_bomb():
-    """stts run counts are attacker-controlled: a crafted count=2^31
-    entry must NOT force a multi-GB np.repeat (ADVICE r5 mp4.py:198) —
-    runs are clipped to the stsz-derived sample count and the remaining
-    samples still get exact timestamps."""
-    import struct
-
-    from pytimetk_spark.webtext.mp4 import parse_mp4
-
-    rng = np.random.RandomState(21)
-    frames = [bytes(rng.randint(0, 256, 50).astype(np.uint8))
-              for _ in range(8)]
-    blob = bytearray(_make_mp4(frames, fps=4.0, sync_every=4, n_chunks=2))
-    # stts body: [version/flags:4][entry_count:4][run_count:4][delta:4];
-    # overwrite run_count (sample count for the single run) with 2^31
-    i = blob.rfind(b"stts")
-    assert i > 0
-    struct.pack_into(">I", blob, i + 4 + 4 + 4, 2**31)
-    info = parse_mp4(bytes(blob))
-    trk = info.video_track()
-    assert trk.n_samples == 8
-    # timestamps still exact for the real 8 samples, no bomb allocation
-    np.testing.assert_allclose(trk.sample_ts, np.arange(8) * 0.25, rtol=1e-9)
-
-
-def test_sample_video_frames_spark(spark):
-    from pytimetk_spark.webtext.multimodal import sample_video_frames
-
-    rng = np.random.RandomState(13)
-    frames = [bytes(rng.randint(0, 256, 64).astype(np.uint8))
-              for _ in range(8)]
-    blob = _make_mp4(frames, fps=2.0, sync_every=2)
-    pdf = pd.DataFrame({"doc_id": [7], "video": [blob]})
-    out = (
-        sample_video_frames(spark.createDataFrame(pdf), "video",
-                            every_n_seconds=1.0)
-        .toPandas().sort_values("frame_idx").reset_index(drop=True)
-    )
-    assert list(out["frame_idx"]) == [0, 2, 4, 6]
-    assert (out["codec"] == "avc1").all()
-    for _, r in out.iterrows():
-        assert bytes(r["frame_payload"]) == frames[r["frame_idx"]]
-    # pixel decode stays the honest stub
-    with pytest.raises(Exception, match="ffmpeg|pyav"):
-        sample_video_frames(spark.createDataFrame(pdf), "video",
-                            decode=True).collect()
-
-
-def _make_webm(frames, fps=4.0, sync_every=4, codec="V_VP9",
-               use_blockgroup=False, with_audio=True) -> bytes:
-    """Minimal Matroska/WebM muxer (test fixture): one cluster per
-    second, SimpleBlocks with the keyframe flag (or BlockGroups whose
-    keyframes are marked by ABSENT ReferenceBlock), ms timestamps."""
-
-    def esize(n):
-        for length in range(1, 9):
-            if n < (1 << (7 * length)) - 1:
-                out = bytearray(length)
-                v = n | (1 << (7 * length))
-                for i in range(length - 1, -1, -1):
-                    out[i] = v & 0xFF
-                    v >>= 8
-                return bytes(out)
-        raise ValueError
-
-    def el(eid, payload):
-        return eid + esize(len(payload)) + payload
-
-    def uint(v):
-        out = v.to_bytes(max((v.bit_length() + 7) // 8, 1), "big")
-        return out
-
-    import struct as _s
-
-    dur_ms = len(frames) / fps * 1000.0
-    info = el(b"\x15\x49\xa9\x66",
-              el(b"\x2a\xd7\xb1", uint(1_000_000))
-              + el(b"\x44\x89", _s.pack(">d", dur_ms)))
-    video_entry = el(b"\xae",
-                     el(b"\xd7", uint(1)) + el(b"\x83", uint(1))
-                     + el(b"\x86", codec.encode())
-                     + el(b"\xe0", el(b"\xb0", uint(320))
-                          + el(b"\xba", uint(240))))
-    audio_entry = el(b"\xae",
-                     el(b"\xd7", uint(2)) + el(b"\x83", uint(2))
-                     + el(b"\x86", b"A_OPUS")
-                     + el(b"\xe1", el(b"\xb5", _s.pack(">f", 48000.0))
-                          + el(b"\x9f", uint(2))))
-    tracks = el(b"\x16\x54\xae\x6b",
-                video_entry + (audio_entry if with_audio else b""))
-
-    clusters = b""
-    per_cluster = max(int(fps), 1)
-    for c0 in range(0, len(frames), per_cluster):
-        cts = int(c0 / fps * 1000)
-        body = el(b"\xe7", uint(cts))
-        for i in range(c0, min(c0 + per_cluster, len(frames))):
-            rel = int(i / fps * 1000) - cts
-            key = i % sync_every == 0
-            blk = b"\x81" + _s.pack(">h", rel)
-            if use_blockgroup:
-                bg = el(b"\xa1", blk + b"\x00" + frames[i])
-                if not key:
-                    bg += el(b"\xfb", uint(1))
-                body += el(b"\xa0", bg)
-            else:
-                body += el(b"\xa3",
-                           blk + (b"\x80" if key else b"\x00") + frames[i])
-            if with_audio:  # interleave an audio block (must be skipped)
-                body += el(b"\xa3", b"\x82" + _s.pack(">h", rel)
-                           + b"\x80" + b"\xAA" * 10)
-        clusters += el(b"\x1f\x43\xb6\x75", body)
-
-    ebml_hdr = el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", b"webm"))
-    return ebml_hdr + el(b"\x18\x53\x80\x67", info + tracks + clusters)
-
-
-def test_webm_container_parse_and_keyframe_extraction():
-    """The EBML walker recovers track metadata and exact keyframe
-    payloads/timestamps from SimpleBlock flags AND from BlockGroups
-    (keyframe = absent ReferenceBlock), skipping interleaved audio
-    blocks; cadence selection mirrors the MP4 twin."""
-    from pytimetk_spark.webtext.webm import extract_keyframes_webm, parse_webm
-
-    rng = np.random.RandomState(21)
-    frames = [bytes(rng.randint(0, 256, rng.randint(30, 90)).astype(np.uint8))
-              for _ in range(24)]
-    blob = _make_webm(frames, fps=4.0, sync_every=4)
-
-    info = parse_webm(blob)
-    trk = info.video_track()
-    assert (trk.codec, trk.width, trk.height) == ("V_VP9", 320, 240)
-    assert info.tracks[1].codec == "A_OPUS"
-    assert info.tracks[1].sample_rate == 48000.0
-    assert abs(info.duration_sec - 6.0) < 1e-9
-    assert len(info.keyframes) == 6  # every 4th of 24
-
-    got = extract_keyframes_webm(blob, every_n_seconds=1.0)
-    assert [g[1] for g in got] == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0]
-    for _idx, ts, codec, payload in got:
-        assert codec == "V_VP9"
-        assert payload == frames[int(round(ts * 4.0))]
-
-    # BlockGroup keyframe marking (absent ReferenceBlock)
-    blob2 = _make_webm(frames[:8], fps=4.0, sync_every=2,
-                       use_blockgroup=True, with_audio=False)
-    got2 = extract_keyframes_webm(blob2, every_n_seconds=0.5)
-    assert [g[1] for g in got2] == [0.0, 0.5, 1.0, 1.5]
-
-    assert parse_webm(b"not ebml") is None
-    assert extract_keyframes_webm(b"\x1a\x45\xdf\xa3\x80") is None
-
-
-def test_webm_through_sample_video_frames(spark):
-    from pytimetk_spark.webtext.multimodal import sample_video_frames
-
-    rng = np.random.RandomState(22)
-    frames = [bytes(rng.randint(0, 256, 48).astype(np.uint8))
-              for _ in range(8)]
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2],
-        "video": [_make_mp4(frames, fps=2.0, sync_every=2),
-                  _make_webm(frames, fps=2.0, sync_every=2)],
-    })
-    out = (
-        sample_video_frames(spark.createDataFrame(pdf), "video",
-                            every_n_seconds=1.0)
-        .toPandas().sort_values(["doc_id", "frame_ts_sec"])
-        .reset_index(drop=True)
-    )
-    mp4_rows = out[out.doc_id == 1]
-    webm_rows = out[out.doc_id == 2]
-    assert list(mp4_rows["frame_ts_sec"]) == list(webm_rows["frame_ts_sec"])
-    assert (webm_rows["codec"] == "V_VP9").all()
-    for _, r in webm_rows.iterrows():
-        assert bytes(r["frame_payload"]) == frames[int(r["frame_ts_sec"] * 2)]
-
-
-class _SpsWriter:
-    """MSB-first bit writer with exp-Golomb, for SPS fixtures."""
-
-    def __init__(self):
-        self.bits = []
-
-    def u(self, v, n):
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def ue(self, v):
-        k = v + 1
-        n = k.bit_length()
-        self.u(0, n - 1)
-        self.u(k, n)
-
-    def tobytes(self):
-        out = bytearray()
-        bits = self.bits + [1] + [0] * 7  # rbsp stop bit + pad
-        for i in range(0, len(bits) - 7, 8):
-            b = 0
-            for j in range(8):
-                b = (b << 1) | bits[i + j]
-            out.append(b)
-        return bytes(out)
-
-
-def _make_sps(width, height, profile_idc=66, level_idc=31,
-              crop_right_px=0, crop_bottom_px=0):
-    """Baseline-profile SPS whose cropped dims equal (width, height)."""
-    w = _SpsWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint flags
-    w.u(level_idc, 8)
-    w.ue(0)  # sps id
-    w.ue(0)  # log2_max_frame_num_minus4
-    w.ue(0)  # poc type 0
-    w.ue(0)  # log2_max_poc_lsb_minus4
-    w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)  # gaps allowed
-    total_w = width + crop_right_px
-    total_h = height + crop_bottom_px
-    assert total_w % 16 == 0 and total_h % 16 == 0
-    w.ue(total_w // 16 - 1)
-    w.ue(total_h // 16 - 1)
-    w.u(1, 1)  # frame_mbs_only
-    w.u(1, 1)  # direct_8x8
-    if crop_right_px or crop_bottom_px:
-        w.u(1, 1)
-        w.ue(0)
-        w.ue(crop_right_px // 2)  # chroma 4:2:0 -> CropUnitX = 2
-        w.ue(0)
-        w.ue(crop_bottom_px // 2)
-    else:
-        w.u(0, 1)
-    return b"\x67" + w.tobytes()  # NAL header (type 7) + payload
-
-
-def _make_avcc(sps: bytes) -> bytes:
-    return (bytes([1, sps[1], sps[2], sps[3], 0xFF, 0xE1])
-            + len(sps).to_bytes(2, "big") + sps)
-
-
-def _make_vp8_keyframe_payload(width, height) -> bytes:
-    tag = 0  # keyframe, profile 0, not shown; partition size 0
-    return (tag.to_bytes(3, "little") + b"\x9d\x01\x2a"
-            + width.to_bytes(2, "little") + height.to_bytes(2, "little")
-            + bytes(20))
-
-
-def _make_vp9_keyframe_payload(width, height, profile=0) -> bytes:
-    w = _SpsWriter()
-    w.u(2, 2)  # frame marker
-    w.u(profile & 1, 1)
-    w.u((profile >> 1) & 1, 1)
-    if profile == 3:
-        w.u(0, 1)
-    w.u(0, 1)  # show_existing_frame
-    w.u(0, 1)  # frame_type = KEY
-    w.u(1, 1)  # show_frame
-    w.u(0, 1)  # error_resilient
-    w.u(0x498342, 24)  # sync code
-    if profile >= 2:
-        w.u(0, 1)  # 10-bit
-    w.u(0, 3)  # color_space = CS_UNKNOWN
-    w.u(0, 1)  # color_range
-    if profile in (1, 3):
-        w.u(0, 2)
-        w.u(0, 1)
-    w.u(width - 1, 16)
-    w.u(height - 1, 16)
-    w.u(0, 1)  # render_size_present
-    return w.tobytes() + bytes(10)
-
-
-def test_h264_sps_and_video_probe(spark):
-    """Exp-Golomb SPS parse recovers exact coded dims (incl. the 4:2:0
-    cropping arithmetic), profile and level from synthesized parameter
-    sets; VP8/VP9 keyframe headers yield bitstream dims from WebM
-    payloads; the Spark probe operator is total over junk blobs."""
-    from pytimetk_spark.webtext.videoprobe import (
-        parse_avcc,
-        parse_h264_sps,
-        parse_vp8_keyframe,
-        parse_vp9_keyframe,
-        video_stream_info,
-    )
-
-    got = parse_h264_sps(_make_sps(320, 240))
-    assert (got["width"], got["height"], got["profile_idc"]) == (320, 240, 66)
-    # non-multiple-of-16 dims via cropping: 1920x1080 = 1920x1088 - 8
-    got = parse_h264_sps(_make_sps(1920, 1080, crop_bottom_px=8))
-    assert (got["width"], got["height"]) == (1920, 1080)
-    got = parse_avcc(_make_avcc(_make_sps(640, 360, crop_bottom_px=8)))
-    assert (got["width"], got["height"]) == (640, 360)
-    assert parse_h264_sps(b"") is None
-
-    assert parse_vp8_keyframe(_make_vp8_keyframe_payload(426, 240)) == {
-        "width": 426, "height": 240, "profile": 0, "bit_depth": 8}
-    v9 = parse_vp9_keyframe(_make_vp9_keyframe_payload(1280, 720))
-    assert (v9["width"], v9["height"], v9["profile"]) == (1280, 720, 0)
-    v9hi = parse_vp9_keyframe(_make_vp9_keyframe_payload(64, 64, profile=2))
-    assert v9hi["bit_depth"] == 10
-    assert parse_vp9_keyframe(b"\xff\xff\xff") is None
-
-    # Spark operator over MP4(avcC) + WebM(VP9 payload) + junk
-    rng = np.random.RandomState(31)
-    frames = [bytes(rng.randint(0, 256, 40).astype(np.uint8))
-              for _ in range(8)]
-    avcc = _make_avcc(_make_sps(640, 360, crop_bottom_px=8))
-    mp4_blob = _make_mp4(frames, fps=2.0, sync_every=2, avcc=avcc)
-    vp9_frames = [_make_vp9_keyframe_payload(1280, 720)] + frames[1:]
-    webm_blob = _make_webm(vp9_frames, fps=2.0, sync_every=1)
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3],
-                        "video": [mp4_blob, webm_blob, b"junkbytes"]})
-    out = (
-        video_stream_info(spark.createDataFrame(pdf), "video")
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    assert out.loc[0, "container"] == "mp4"
-    assert (out.loc[0, "coded_width"], out.loc[0, "coded_height"]) == (640, 360)
-    assert out.loc[0, "profile"] == "66"
-    assert out.loc[1, "container"] == "webm"
-    assert (out.loc[1, "coded_width"], out.loc[1, "coded_height"]) == (1280, 720)
-    assert out.loc[1, "codec"] == "V_VP9"
-    # 8 frames over a 4 s declared duration -> 2 fps (ALL video blocks
-    # counted, not just keyframes)
-    assert abs(out.loc[1, "fps_avg"] - 2.0) < 1e-9
-    assert pd.isna(out.loc[2, "container"])  # junk -> NULL row, no fail
-
-
 def test_codec_roundtrips_hypothesis():
     """Property test over random image shapes/content for all four
     decoders: PNG and GIF are lossless (bit-exact); baseline JPEG at
@@ -1635,138 +1132,6 @@ def test_codec_roundtrips_hypothesis():
         )
 
     run()
-
-
-def test_mp3_frame_walker(spark):
-    """MPEG frame-header walking recovers exact stream geometry from a
-    synthesized valid frame chain: rate/channels/frame count/duration/
-    average bitrate, ID3v2 skip, false-sync rejection; Spark audio
-    extractor returns the metadata tier with NULL sample-level stats."""
-    from pytimetk_spark.webtext.mp3 import parse_mp3_info, synthesize_mp3_stream
-    from pytimetk_spark.webtext.multimodal import decode_audio_batch
-
-    # MPEG1 Layer III, br_idx 9 = 128 kbps, sr_idx 0 = 44100 Hz
-    blob = synthesize_mp3_stream(100, br_idx=9, sr_idx=0)
-    info = parse_mp3_info(blob)
-    assert (info.sample_rate, info.layer, info.version) == (44100, 3, "MPEG1")
-    assert info.n_frames == 100 and info.n_channels == 2
-    assert abs(info.duration_sec - 100 * 1152 / 44100) < 1e-9
-    assert abs(info.bitrate_kbps_avg - 128.0) < 0.5
-    # ID3v2-prefixed + mono + MPEG2 (576 samples/frame layer III)
-    blob2 = synthesize_mp3_stream(40, version_bits=2, br_idx=5, sr_idx=1,
-                                  mono=True, id3=True)
-    info2 = parse_mp3_info(blob2)
-    assert (info2.version, info2.n_channels, info2.sample_rate) == (
-        "MPEG2", 1, 24000)
-    assert abs(info2.duration_sec - 40 * 576 / 24000) < 1e-9
-    # arbitrary binary with a lone fake sync byte must NOT parse
-    assert parse_mp3_info(b"\xff\xfbjunk" + b"A" * 50) is None
-
-    pdf = pd.DataFrame({"doc_id": [1, 2],
-                        "audio": [_make_wav(np.sin(np.linspace(0, 80, 8000))),
-                                  blob]})
-    out = (
-        decode_audio_batch(spark.createDataFrame(pdf), "audio")
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    assert out.loc[1, "sample_rate"] == 44100
-    assert abs(out.loc[1, "duration_sec"] - 100 * 1152 / 44100) < 1e-6
-    assert np.isnan(out.loc[1, "rms"])  # sample stats need the codec
-    assert out.loc[0, "rms"] > 0  # WAV path unaffected
-
-
-def test_aac_adts_frame_walker(spark):
-    """ADTS header walking recovers exact stream geometry: rate index,
-    channels, frame count, duration (1024 samples per raw data block),
-    avg bitrate incl. header bytes, CRC-present headers, multi-block
-    frames, false-sync rejection; Spark audio extractor returns the
-    metadata tier with NULL sample-level stats."""
-    from pytimetk_spark.webtext.aac import parse_aac_info, synthesize_adts_stream
-    from pytimetk_spark.webtext.multimodal import decode_audio_batch
-
-    # LC profile, sf_idx 4 = 44100, stereo
-    blob = synthesize_adts_stream(80, sf_idx=4, channels=2, payload_size=300)
-    info = parse_aac_info(blob)
-    assert (info.sample_rate, info.n_channels, info.profile,
-            info.mpeg_version) == (44100, 2, "LC", 4)
-    assert info.n_frames == 80
-    assert abs(info.duration_sec - 80 * 1024 / 44100) < 1e-9
-    expect_kbps = 80 * 307 * 8 / info.duration_sec / 1000.0
-    assert abs(info.bitrate_kbps_avg - expect_kbps) < 1e-6
-    # MPEG-2 variant with CRC headers and 2 raw data blocks per frame
-    blob2 = synthesize_adts_stream(30, sf_idx=8, channels=1, profile=0,
-                                   mpeg2=True, with_crc=True, n_blocks=2)
-    info2 = parse_aac_info(blob2)
-    assert (info2.sample_rate, info2.n_channels, info2.profile,
-            info2.mpeg_version) == (16000, 1, "Main", 2)
-    assert abs(info2.duration_sec - 30 * 2048 / 16000) < 1e-9
-    # a lone ADTS-looking sync in arbitrary binary must NOT parse
-    assert parse_aac_info(b"\xff\xf1junkjunk" + b"B" * 60) is None
-
-    pdf = pd.DataFrame({"doc_id": [1, 2],
-                        "audio": [_make_wav(np.sin(np.linspace(0, 80, 8000))),
-                                  blob]})
-    out = (
-        decode_audio_batch(spark.createDataFrame(pdf), "audio")
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    assert out.loc[1, "sample_rate"] == 44100
-    assert abs(out.loc[1, "duration_sec"] - 80 * 1024 / 44100) < 1e-6
-    assert np.isnan(out.loc[1, "rms"])
-    assert out.loc[0, "rms"] > 0
-
-
-def test_flac_ogg_metadata_walkers(spark):
-    """FLAC STREAMINFO and Ogg granule-position walks recover exact
-    stream geometry (rate/channels/bits/duration; Opus pre-skip at the
-    fixed 48 kHz granule rate, Vorbis at the stream rate); non-audio
-    Ogg and junk bytes reject; Spark extractor returns the metadata
-    tier with NULL sample-level stats."""
-    from pytimetk_spark.webtext.flac_ogg import (
-        parse_flac_info,
-        parse_ogg_info,
-        synthesize_flac,
-        synthesize_ogg_opus,
-        synthesize_ogg_vorbis,
-    )
-    from pytimetk_spark.webtext.multimodal import decode_audio_batch
-
-    f = parse_flac_info(synthesize_flac(rate=96000, channels=6, bits=24,
-                                        total_samples=9_600_000))
-    assert (f.codec, f.sample_rate, f.n_channels, f.bits_per_sample,
-            f.total_samples) == ("flac", 96000, 6, 24, 9_600_000)
-    assert abs(f.duration_sec - 100.0) < 1e-12
-
-    o = parse_ogg_info(synthesize_ogg_opus(duration_sec=2.5, channels=2,
-                                           preskip=312))
-    assert (o.codec, o.sample_rate, o.n_channels) == ("opus", 48000, 2)
-    assert abs(o.duration_sec - 2.5) < 1e-9  # pre-skip subtracted
-
-    v = parse_ogg_info(synthesize_ogg_vorbis(duration_sec=1.25,
-                                             channels=1, rate=22050))
-    assert (v.codec, v.sample_rate, v.n_channels) == ("vorbis", 22050, 1)
-    assert abs(v.duration_sec - 1.25) < 1e-4  # granule rounding only
-
-    assert parse_flac_info(b"fLaCjunk") is None
-    assert parse_ogg_info(b"OggS" + bytes(30)) is None  # no codec header
-    assert parse_ogg_info(b"notogg") is None
-
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "audio": [synthesize_flac(rate=44100, channels=2,
-                                  total_samples=44100),
-                  synthesize_ogg_opus(duration_sec=2.5),
-                  _make_wav(np.sin(np.linspace(0, 80, 8000)))],
-    })
-    out = (
-        decode_audio_batch(spark.createDataFrame(pdf), "audio")
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    assert out.loc[0, "sample_rate"] == 44100
-    assert abs(out.loc[0, "duration_sec"] - 1.0) < 1e-9
-    assert np.isnan(out.loc[0, "rms"]) and np.isnan(out.loc[1, "rms"])
-    assert abs(out.loc[1, "duration_sec"] - 2.5) < 1e-9
-    assert out.loc[2, "rms"] > 0
 
 
 def _repetition_reference(text, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):
@@ -2275,103 +1640,9 @@ def test_bpe_train_encode(spark):
     assert (out["bpe_n_tokens"] >= out["text"].str.split().str.len()).all()
 
 
-def test_sniff_media_type_all_formats(spark):
-    """Magic-byte sniffing routes every format the engine handles —
-    one synthesized blob per format, all 12 recognized + junk NULL."""
-    from jpeg_ref import encode_baseline_jpeg
-    from webp_ref import encode_vp8l
-
-    from pytimetk_spark.webtext.aac import synthesize_adts_stream
-    from pytimetk_spark.webtext.flac_ogg import (
-        synthesize_flac,
-        synthesize_ogg_opus,
-    )
-    from pytimetk_spark.webtext.mp3 import synthesize_mp3_stream
-    from pytimetk_spark.webtext.multimodal import sniff_media_type
-
-    rng = np.random.RandomState(1)
-    rgb = rng.randint(0, 256, (8, 8, 3)).astype(np.uint8)
-    idx = rng.randint(0, 4, (8, 8)).astype(np.uint8)
-    pal = rng.randint(0, 256, (4, 3)).astype(np.uint8)
-    frames = [bytes(16)] * 4
-    blobs = {
-        "image/jpeg": encode_baseline_jpeg(rgb, quant=1),
-        "image/png": _make_png(rgb, color=2),
-        "image/gif": _make_gif(idx, pal),
-        "image/webp": encode_vp8l(rgb),
-        "image/bmp": _make_bmp(rgb),
-        "audio/wav": _make_wav(np.sin(np.linspace(0, 5, 500))),
-        "audio/flac": synthesize_flac(),
-        "audio/ogg": synthesize_ogg_opus(),
-        "audio/mpeg": synthesize_mp3_stream(3),
-        "audio/aac": synthesize_adts_stream(3),
-        "video/mp4": _make_mp4(frames),
-        "video/webm": _make_webm(frames),
-        None: b"garbage bytes here",
-    }
-    pdf = pd.DataFrame({"doc_id": range(len(blobs)),
-                        "blob": list(blobs.values()),
-                        "expect": list(blobs.keys())})
-    out = sniff_media_type(spark.createDataFrame(pdf), "blob").toPandas()
-    for _, r in out.iterrows():
-        if r["expect"] is None:
-            assert r["media_type"] is None
-        else:
-            assert r["media_type"] == r["expect"], r["expect"]
-
-
-def test_image_stream_info_header_probe(spark):
-    """Header-only geometry probe recovers exact dims for every image
-    format WITHOUT decoding — including lossy-VP8 WebP whose pixel
-    decode is a stub and progressive JPEG (format distinguished from
-    baseline); junk yields a NULL row."""
-    from jpeg_ref import encode_baseline_jpeg, encode_progressive_jpeg
-    from webp_ref import encode_vp8l
-
-    from pytimetk_spark.webtext.imageinfo import (
-        image_stream_info,
-        parse_image_dims,
-    )
-
-    rng = np.random.RandomState(2)
-    rgb = rng.randint(0, 256, (24, 31, 3)).astype(np.uint8)
-    idx = rng.randint(0, 4, (24, 31)).astype(np.uint8)
-    pal = rng.randint(0, 256, (4, 3)).astype(np.uint8)
-    # lossy-VP8 WebP: container + uncompressed keyframe header only
-    vp8_frame = (b"\x00\x00\x00" + b"\x9d\x01\x2a"
-                 + (31).to_bytes(2, "little") + (24).to_bytes(2, "little")
-                 + bytes(20))
-    vp8_chunk = b"VP8 " + len(vp8_frame).to_bytes(4, "little") + vp8_frame
-    lossy = (b"RIFF" + (4 + len(vp8_chunk)).to_bytes(4, "little")
-             + b"WEBP" + vp8_chunk)
-    cases = {
-        "jpeg-baseline": encode_baseline_jpeg(rgb, quant=1),
-        "jpeg-progressive": encode_progressive_jpeg(rgb, quant=1),
-        "png": _make_png(rgb, color=2),
-        "gif": _make_gif(idx, pal),
-        "bmp": _make_bmp(rgb),
-        "webp-lossless": encode_vp8l(rgb),
-        "webp-lossy": lossy,
-    }
-    for fmt, blob in cases.items():
-        got = parse_image_dims(blob)
-        assert got is not None, fmt
-        assert (got["format"], got["width"], got["height"]) == (fmt, 31, 24)
-    assert parse_image_dims(b"not an image") is None
-
-    pdf = pd.DataFrame({"doc_id": range(3),
-                        "img": [cases["jpeg-progressive"], lossy, b"junk"]})
-    out = (image_stream_info(spark.createDataFrame(pdf), "img")
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    assert out.loc[0, "format"] == "jpeg-progressive"
-    assert (out.loc[1, "width"], out.loc[1, "height"]) == (31, 24)
-    assert abs(out.loc[0, "megapixels"] - 31 * 24 / 1e6) < 1e-12
-    assert pd.isna(out.loc[2, "format"])
-
-
 def test_text_ops_run_on_streams(spark, tmp_path):
     """The stateless corpus operators (PII masking, C4 line filter,
-    quality score, sniffing) are pure Catalyst projections, so they
+    quality score) are pure Catalyst projections, so they
     must run unchanged under Structured Streaming — batch and stream
     results over the same files must match exactly."""
     from pyspark.sql import functions as SF
@@ -2403,68 +1674,6 @@ def test_text_ops_run_on_streams(spark, tmp_path):
     want = (transform(docs).toPandas()
             .sort_values("doc_id").reset_index(drop=True))
     pd.testing.assert_frame_equal(got, want)
-
-
-def _make_av1_seq_obu(width, height, profile=0, reduced=False):
-    """Temporal-delimiter OBU + sized sequence-header OBU (AV1 §5.5)."""
-    w = _SpsWriter()
-    w.u(profile, 3)
-    w.u(0, 1)  # still_picture
-    w.u(1 if reduced else 0, 1)
-    if reduced:
-        w.u(8, 5)  # seq_level_idx_0
-    else:
-        w.u(0, 1)   # timing_info_present
-        w.u(0, 1)   # initial_display_delay_present
-        w.u(0, 5)   # operating_points_cnt_minus_1
-        w.u(0, 12)  # operating_point_idc
-        w.u(8, 5)   # seq_level_idx > 7 -> tier bit follows
-        w.u(0, 1)   # seq_tier
-    wb = max((width - 1).bit_length(), 1)
-    hb = max((height - 1).bit_length(), 1)
-    w.u(wb - 1, 4)
-    w.u(hb - 1, 4)
-    w.u(width - 1, wb)
-    w.u(height - 1, hb)
-    body = w.tobytes()
-
-    def leb(n):
-        out = bytearray()
-        while True:
-            b = n & 0x7F
-            n >>= 7
-            out.append(b | (0x80 if n else 0))
-            if not n:
-                return bytes(out)
-
-    td = bytes([0x12, 0x00])  # temporal delimiter, sized 0
-    return td + bytes([0x0A]) + leb(len(body)) + body
-
-
-def test_av1_sequence_header_probe(spark):
-    """AV1 OBU walking recovers max frame geometry/profile from the
-    sequence header (skipping the leading temporal delimiter), for
-    full and reduced-still-picture header shapes; WebM V_AV1 tracks
-    route through video_stream_info."""
-    from pytimetk_spark.webtext.videoprobe import (
-        parse_av1_seq_header,
-        video_stream_info,
-    )
-
-    for wd, ht, prof, red in [(1920, 1080, 0, False), (640, 360, 2, True),
-                              (64, 64, 1, False)]:
-        got = parse_av1_seq_header(_make_av1_seq_obu(wd, ht, prof, red))
-        assert (got["width"], got["height"], got["profile"]) == (wd, ht, prof)
-    assert parse_av1_seq_header(b"\x80junk") is None
-
-    frames = [_make_av1_seq_obu(1280, 720)] + [bytes(16)] * 3
-    blob = _make_webm(frames, fps=2.0, sync_every=1, codec="V_AV1",
-                      with_audio=False)
-    out = (video_stream_info(
-        spark.createDataFrame(pd.DataFrame({"doc_id": [1], "video": [blob]})),
-        "video").toPandas())
-    assert out.loc[0, "codec"] == "V_AV1"
-    assert (out.loc[0, "coded_width"], out.loc[0, "coded_height"]) == (1280, 720)
 
 
 def test_repetition_signals_hypothesis(spark):
@@ -2555,26 +1764,9 @@ def test_parsers_total_over_fuzzed_bytes():
     from jpeg_ref import encode_baseline_jpeg
     from webp_ref import encode_vp8l
 
-    from pytimetk_spark.webtext.aac import (
-        parse_aac_info,
-        synthesize_adts_stream,
-    )
-    from pytimetk_spark.webtext.flac_ogg import (
-        parse_flac_info,
-        parse_ogg_info,
-        synthesize_flac,
-        synthesize_ogg_opus,
-    )
     from pytimetk_spark.webtext.gif import decode_gif
-    from pytimetk_spark.webtext.imageinfo import parse_image_dims
     from pytimetk_spark.webtext.jpeg import decode_jpeg
-    from pytimetk_spark.webtext.mp3 import (
-        parse_mp3_info,
-        synthesize_mp3_stream,
-    )
-    from pytimetk_spark.webtext.mp4 import parse_mp4
     from pytimetk_spark.webtext.png import decode_png
-    from pytimetk_spark.webtext.webm import parse_webm
     from pytimetk_spark.webtext.webp import decode_webp_lossless
 
     rng = np.random.RandomState(99)
@@ -2584,13 +1776,8 @@ def test_parsers_total_over_fuzzed_bytes():
     fixtures = [
         encode_baseline_jpeg(rgb, quant=1), _make_png(rgb, color=2),
         _make_gif(idx, pal), encode_vp8l(rgb), _make_bmp(rgb),
-        synthesize_mp3_stream(4), synthesize_adts_stream(4),
-        synthesize_flac(), synthesize_ogg_opus(),
-        _make_mp4([bytes(16)] * 4), _make_webm([bytes(16)] * 4),
     ]
-    parsers = [decode_jpeg, decode_png, decode_gif, decode_webp_lossless,
-               parse_mp3_info, parse_aac_info, parse_flac_info,
-               parse_ogg_info, parse_mp4, parse_webm, parse_image_dims]
+    parsers = [decode_jpeg, decode_png, decode_gif, decode_webp_lossless]
     blobs = []
     for f in fixtures:
         for cut in (3, 7, len(f) // 3, len(f) // 2, len(f) - 1):
@@ -2606,38 +1793,6 @@ def test_parsers_total_over_fuzzed_bytes():
     for blob in blobs:
         for p in parsers:
             p(blob)  # must not raise; value unchecked
-
-
-def test_aac_71_channel_config():
-    """ADTS channel_configuration 7 means a 7.1 layout = 8 channels."""
-    from pytimetk_spark.webtext.aac import (
-        parse_aac_info,
-        synthesize_adts_stream,
-    )
-
-    info = parse_aac_info(synthesize_adts_stream(10, channels=7))
-    assert info.n_channels == 8
-
-
-def test_sniff_covers_all_mp3_syncs(spark):
-    """Every legal MPEG-audio sync (3 versions x 3 layers x CRC flag)
-    must sniff as audio/mpeg — the walker accepts them all, so the
-    router must too; AAC's layer-00 syncs stay distinct."""
-    from pytimetk_spark.webtext.multimodal import sniff_media_type
-
-    seconds = sorted({0xE0 | (v << 3) | (l << 1) | p
-                      for v in (0, 2, 3) for l in (1, 2, 3)
-                      for p in (0, 1)})
-    pdf = pd.DataFrame({
-        "doc_id": range(len(seconds) + 2),
-        "blob": [bytes([0xFF, b2]) + bytes(30) for b2 in seconds]
-        + [bytes([0xFF, 0xF1]) + bytes(30),
-           bytes([0xFF, 0xF9]) + bytes(30)],
-    })
-    out = (sniff_media_type(spark.createDataFrame(pdf), "blob")
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    assert (out.loc[: len(seconds) - 1, "media_type"] == "audio/mpeg").all()
-    assert (out.loc[len(seconds):, "media_type"] == "audio/aac").all()
 
 
 def test_script_profile(spark):
@@ -2739,67 +1894,14 @@ def test_hash_embed_feature_hashing(spark):
     assert list(top["vec_id"]) == [1, 2]
 
 
-def _make_avif(w, h, brand=b"avif"):
-    import struct
-
-    def box(t, p):
-        return struct.pack(">I", len(p) + 8) + t + p
-
-    ispe = box(b"ispe", struct.pack(">III", 0, w, h))
-    meta = box(b"meta", struct.pack(">I", 0)
-               + box(b"iprp", box(b"ipco", ispe)))
-    return box(b"ftyp", brand + struct.pack(">I", 0) + brand) + meta
-
-
-def _make_tiff(w, h, le=True):
-    import struct
-
-    bo = "<" if le else ">"
-    hdr = (b"II*\x00" if le else b"MM\x00*") + struct.pack(bo + "I", 8)
-    entries = struct.pack(bo + "H", 2)
-    entries += (struct.pack(bo + "HHI", 256, 3, 1)
-                + struct.pack(bo + "H", w) + b"\x00\x00")
-    entries += struct.pack(bo + "HHI", 257, 4, 1) + struct.pack(bo + "I", h)
-    return hdr + entries + struct.pack(bo + "I", 0)
-
-
-def test_avif_heic_tiff_probes_and_sniff(spark):
-    """Modern-web image formats probe header-only: AVIF/HEIC via the
-    ISO BMFF ispe property, TIFF via the first IFD (both byte orders);
-    the sniffer distinguishes avif/heic brands from plain MP4."""
-    from pytimetk_spark.webtext.imageinfo import parse_image_dims
-    from pytimetk_spark.webtext.multimodal import sniff_media_type
-
-    assert parse_image_dims(_make_avif(1200, 800)) == {
-        "format": "avif", "width": 1200, "height": 800, "n_channels": 3}
-    assert parse_image_dims(_make_avif(640, 480, b"heic"))["format"] == "heic"
-    assert parse_image_dims(_make_tiff(321, 123, le=True)) == {
-        "format": "tiff", "width": 321, "height": 123, "n_channels": 3}
-    assert parse_image_dims(_make_tiff(800, 600, le=False))["height"] == 600
-
-    frames = [bytes(16)] * 4
-    pdf = pd.DataFrame({
-        "doc_id": range(4),
-        "blob": [_make_avif(10, 10), _make_avif(10, 10, b"heic"),
-                 _make_tiff(5, 5), _make_mp4(frames)],
-    })
-    out = (sniff_media_type(spark.createDataFrame(pdf), "blob")
-           .toPandas().sort_values("doc_id"))
-    assert list(out["media_type"]) == [
-        "image/avif", "image/heic", "image/tiff", "video/mp4"]
-
-
 def test_review_hardening_regressions(spark):
     """Pinned fixes from the round-5 self-review: string doc ids pass
     through hash_embed/bpe_encode/pack_sequences verbatim (a long cast
     silently corrupted them to garbage), NULL token counts pack as 0,
-    all-unlisted-script docs get NULL dominance (not the alphabetical
-    tie-winner), CRC-protected ADTS sniffs as aac, and deeply-nested
-    HEIF boxes return None instead of blowing the stack."""
+    and all-unlisted-script docs get NULL dominance (not the alphabetical
+    tie-winner)."""
     from pytimetk_spark.webtext.bpe import bpe_encode, bpe_train
     from pytimetk_spark.webtext.cleaning import pack_sequences
-    from pytimetk_spark.webtext.imageinfo import parse_image_dims
-    from pytimetk_spark.webtext.multimodal import sniff_media_type
     from pytimetk_spark.webtext.similarity import hash_embed
     from pytimetk_spark.webtext.textstats import script_profile
 
@@ -2820,16 +1922,6 @@ def test_review_hardening_regressions(spark):
         pd.DataFrame({"doc_id": [1], "text": ["ქართული ტექსტი"]}))
     ).toPandas()  # Georgian: in no listed script
     assert pd.isna(sp.loc[0, "dominant_script"])
-
-    crc_adts = bytes([0xFF, 0xF0]) + bytes(30)
-    out = sniff_media_type(spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "blob": [crc_adts]})), "blob"
-    ).toPandas()
-    assert out.loc[0, "media_type"] == "audio/aac"
-
-    deep = b"\x00\x00\x00\x14ftypavif\x00\x00\x00\x00avif"
-    deep += b"".join(b"\x00\x00\x00\x08iprp" for _ in range(2000))
-    assert parse_image_dims(deep) is None  # bounded, no RecursionError
 
 
 def test_url_features(spark):
