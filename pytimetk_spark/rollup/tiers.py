@@ -26,10 +26,10 @@ Design for 10^12 rows:
 
 Gorilla blocks: ``encode_tier_blocks`` packs each url's (bucket_ts, stat)
 streams into binary blobs via the rollup/compression codecs inside one
-``mapInPandas`` pass over the url-sorted tier (batched ``encode_*_many``
-codecs — one vectorized analysis across all of a batch's groups);
-``decode_tier_blocks`` reverses exactly (tests assert bit-identical
-round-trip).
+``mapInArrow`` pass over the url-sorted tier, and ``decode_tier_blocks``
+reverses it exactly in one shuffle-free ``mapInArrow`` (tests assert a
+bit-identical round-trip). Both call each codec once per Arrow batch, for
+all of the batch's urls: no Python work per url or per point.
 """
 
 from __future__ import annotations
@@ -37,7 +37,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,10 +46,10 @@ from pyspark.sql import types as T
 from pytimetk_spark.functions.datetime import floor_date
 from pytimetk_spark.operators.pad_by_time import pad_by_time
 from pytimetk_spark.rollup.compression import (
-    decode_gorilla,
-    decode_timestamps,
-    encode_gorilla_many,
-    encode_timestamps_many,
+    decode_gorilla_many,
+    decode_timestamps_many,
+    encode_gorilla_array,
+    encode_timestamps_array,
 )
 
 TIER_FREQS = {"1h": "h", "1d": "D", "7d": "7D"}
@@ -183,7 +184,46 @@ def gap_fill_tier(tier_df: DataFrame, freq: str, fill_zero: bool = False) -> Dat
 
 
 # ---------------------------------------------------------------------------
-# Gorilla block packing (Arrow mapInPandas, many urls per batch)
+# Gorilla block packing (Arrow mapInArrow, many urls per batch)
+
+
+def _encode_runs(rb: pa.RecordBatch, urls, ends: np.ndarray, stats) -> pa.RecordBatch:
+    """Encode the whole url groups of ``rb`` (group g = rows
+    ``[ends[g-1], ends[g])``) into one block row each."""
+    starts = np.concatenate(([0], ends[:-1]))
+    ts = rb.column(1).cast(pa.int64()).to_numpy() // 10**6
+    cols = [
+        urls,
+        pa.array((ends - starts).astype(np.int32)),
+        encode_timestamps_array(ts, starts, ends),
+    ]
+    for i in range(len(stats)):
+        col = pc.fill_null(rb.column(2 + i).cast(pa.float64()), np.nan)
+        cols.append(encode_gorilla_array(col.to_numpy(), starts, ends))
+    return pa.RecordBatch.from_arrays(
+        cols, names=["url", "n_points", "ts_block", *[f"blk_{s}" for s in stats]]
+    )
+
+
+def _encode_block_batches(batches, stats):
+    """mapInArrow body of ``encode_tier_blocks``: batches arrive sorted by
+    (url, bucket_ts) and a url may continue into the next batch, so the
+    last url of each batch is carried into the next one."""
+    carry = None
+    for rb in batches:
+        if carry is not None:
+            rb = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([a, b]) for a, b in zip(carry.columns, rb.columns)],
+                schema=rb.schema,
+            )
+        runs = pc.run_end_encode(rb.column(0))  # one run per url
+        ends = runs.run_ends.to_numpy().astype(np.int64)
+        if len(ends) > 1:
+            yield _encode_runs(rb, runs.values[:-1], ends[:-1], stats)
+        carry = rb.slice(ends[-2] if len(ends) > 1 else 0)
+    if carry is not None and carry.num_rows:
+        urls = carry.column(0).slice(0, 1)
+        yield _encode_runs(carry, urls, np.array([carry.num_rows]), stats)
 
 
 def encode_tier_blocks(
@@ -192,14 +232,13 @@ def encode_tier_blocks(
     """Per url: delta-of-delta the bucket timestamps + Gorilla-XOR each stat
     stream → one row (url, n_points, ts_block, blk_<stat> binaries).
 
-    Round-2 shape: repartition by url + sortWithinPartitions, then ONE
-    mapInPandas pass encoding MANY whole urls per Arrow batch (a group
-    spanning a batch boundary is carried into the next batch). The round-1
-    groupBy().applyInPandas paid one Arrow batch flush per url — ~1.8 ms
-    per group, 64% of the bench query at sf0.1 with 1500 tiny groups."""
+    Shape: repartition by url with no fixed count, so AQE sizes the Python
+    stage by data (every Python task costs a fixed worker setup, ~0.25 s on
+    a 4-core host — a sub-MB tier runs as one task), sortWithinPartitions,
+    then ONE mapInArrow pass that encodes every whole url of an Arrow
+    batch with one batched codec call per stream (``encode_*_array``)."""
     stats = list(stats)
     url_field = next(f for f in tier_df.schema.fields if f.name == "url")
-    out_names = ["url", "n_points", "ts_block", *[f"blk_{s}" for s in stats]]
     schema = T.StructType(
         [
             url_field,
@@ -208,67 +247,41 @@ def encode_tier_blocks(
             *[T.StructField(f"blk_{s}", T.BinaryType()) for s in stats],
         ]
     )
-    nparts = tier_df.sparkSession.sparkContext.defaultParallelism * 2
-    pre = tier_df.select("url", "bucket_ts", *stats).repartition(
-        nparts, "url"
-    ).sortWithinPartitions("url", "bucket_ts")
+    pre = (
+        tier_df.select("url", "bucket_ts", *stats)
+        .repartition("url")
+        .sortWithinPartitions("url", "bucket_ts")
+    )
+    return pre.mapInArrow(
+        lambda batches: _encode_block_batches(batches, stats), schema=schema
+    )
 
-    def encode_span(urls, ts_all, stat_cols, starts, ends) -> pd.DataFrame:
-        # group boundaries precomputed from the SORTED url column; whole-
-        # batch column conversions done once by the caller — the r6 shape
-        # paid a pandas groupby plus per-group astype/to_numpy for every
-        # url, which dominated wall time once groups shrank to ~64 points
-        # (15k groups at sf1.0: per-group overhead, not codec math).
-        # r7: the codecs run BATCHED across all of the batch's groups
-        # (encode_*_many — one vectorized analysis pass instead of ~20
-        # numpy ops per group; 3× on the codec core, byte-identical
-        # streams asserted by tests).
-        data = {
-            "url": urls[starts],
-            "n_points": (ends - starts).astype("int32"),
-            "ts_block": encode_timestamps_many(ts_all, starts, ends),
-        }
-        for s_name, col in zip(stats, stat_cols):
-            data[f"blk_{s_name}"] = encode_gorilla_many(col, starts, ends)
-        return pd.DataFrame(data, columns=out_names)
 
-    def encode_iter(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            urls = pdf["url"].to_numpy()
-            n = len(urls)
-            bounds = np.flatnonzero(urls[1:] != urls[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [n]))
-            # last group may continue into the next Arrow batch — carry it
-            carry = pdf.iloc[starts[-1]:]
-            starts, ends = starts[:-1], ends[:-1]
-            if len(starts):
-                ts_all = (
-                    pdf["bucket_ts"].astype("int64").to_numpy() // 10**9
-                )
-                stat_cols = [
-                    pdf[s].to_numpy(dtype="float64") for s in stats
-                ]
-                yield encode_span(urls, ts_all, stat_cols, starts, ends)
-        if carry is not None and len(carry):
-            urls = carry["url"].to_numpy()
-            ts_all = (carry["bucket_ts"].astype("int64").to_numpy() // 10**9)
-            stat_cols = [carry[s].to_numpy(dtype="float64") for s in stats]
-            yield encode_span(
-                urls, ts_all, stat_cols, np.array([0]), np.array([len(urls)])
-            )
-
-    return pre.mapInPandas(encode_iter, schema=schema)
+def _decode_block_batches(batches, stats):
+    """mapInArrow body of ``decode_tier_blocks``: one output batch per
+    input batch, every stream of the batch decoded in one call."""
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        ts, counts = decode_timestamps_many(rb.column(1))
+        cols = [
+            rb.column(0).take(np.repeat(np.arange(rb.num_rows), counts)),
+            pa.array(ts, pa.timestamp("s", tz="UTC")).cast(
+                pa.timestamp("us", tz="UTC")
+            ),
+        ]
+        for i, s in enumerate(stats):
+            vals, n = decode_gorilla_many(rb.column(2 + i))
+            if not np.array_equal(n, counts):
+                raise ValueError(f"blk_{s} and ts_block point counts differ")
+            cols.append(pa.array(vals, from_pandas=True))  # NaN -> NULL
+        yield pa.RecordBatch.from_arrays(cols, names=["url", "bucket_ts", *stats])
 
 
 def decode_tier_blocks(blocks_df: DataFrame, stats: Sequence[str]) -> DataFrame:
     """Inverse of encode_tier_blocks → long (url, bucket_ts, *stats).
-    Block rows are independent, so this is a shuffle-free mapInPandas."""
+    Block rows are independent, so this is one shuffle-free mapInArrow
+    with one batched decode per stream of each Arrow batch."""
     stats = list(stats)
     url_field = next(f for f in blocks_df.schema.fields if f.name == "url")
     schema = T.StructType(
@@ -278,23 +291,7 @@ def decode_tier_blocks(blocks_df: DataFrame, stats: Sequence[str]) -> DataFrame:
             *[T.StructField(s, T.DoubleType()) for s in stats],
         ]
     )
-
-    blk_cols = ["url", "ts_block"] + [f"blk_{s}" for s in stats]
-
-    def decode_iter(batches):
-        for pdf in batches:
-            frames = []
-            # itertuples over the needed columns only: ~5× cheaper than
-            # iterrows (no per-row Series construction) and the loop is
-            # per-BLOCK (each row expands to a whole url's stream), so
-            # the remaining Python overhead amortizes (VERDICT r4 #6)
-            for url, ts_block, *blks in pdf[blk_cols].itertuples(index=False):
-                ts = decode_timestamps(bytes(ts_block))
-                data = {"url": url, "bucket_ts": pd.to_datetime(ts, unit="s")}
-                for s, blk in zip(stats, blks):
-                    data[s] = decode_gorilla(bytes(blk))
-                frames.append(pd.DataFrame(data))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return blocks_df.mapInPandas(decode_iter, schema=schema)
+    blocks = blocks_df.select("url", "ts_block", *[f"blk_{s}" for s in stats])
+    return blocks.mapInArrow(
+        lambda batches: _decode_block_batches(batches, stats), schema=schema
+    )

@@ -125,6 +125,55 @@ def test_run_rollup_two_executions_one_raw_scan(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[bucket_date#\d+ IN \(", tier_scans[0])
 
 
+def test_gorilla_block_stages_sized_by_data(spark, tmp_path):
+    """Every Python task pays a fixed worker setup, so the block codecs'
+    Python stages are sized by data: encode repartitions by url with no
+    fixed count (AQE coalesces a sub-MB tier into ONE task on local[4]),
+    and decode is a single MapInArrow over the scan, with no Exchange."""
+    from pytimetk_spark.rollup.tiers import (
+        decode_tier_blocks,
+        encode_tier_blocks,
+        rollup_raw_to_tier,
+    )
+    from pytimetk_spark.sources.webpages import generate_webpages
+
+    tier_path, blocks_path = str(tmp_path / "tier"), str(tmp_path / "blocks")
+    web = generate_webpages(
+        spark, n_urls=60, crawls_per_url=10, days=5, n_domains=5, seed=4
+    )
+    rollup_raw_to_tier(web, "url", "warc_ts", F.length("text"), "h").write.parquet(
+        tier_path
+    )
+    stats = ["cnt", "vsum"]
+    enc = encode_tier_blocks(spark.read.parquet(tier_path), stats)
+    plan = _plan(enc)
+    assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan
+
+    tag = "gorilla-encode-stage"
+    sc = spark.sparkContext
+    sc.setJobDescription(tag)
+    try:
+        enc.write.parquet(blocks_path)
+    finally:
+        sc.setJobDescription(None)
+    (nodes,) = _tagged_executions(spark, tag)
+    assert [name for name, _ in nodes].count("MapInArrow") == 1
+    # the last stage runs the Python encoder and the write
+    sql = spark._jsparkSession.sharedState().statusStore()
+    it = sql.executionsList().iterator()
+    stages = []
+    while it.hasNext():
+        e = it.next()
+        if e.description() == tag:
+            st = e.stages().iterator()
+            while st.hasNext():
+                stages.append(int(st.next()))
+    assert int(sc._jsc.sc().statusStore().taskCount(max(stages), 0)) == 1
+
+    dec = _plan(decode_tier_blocks(spark.read.parquet(blocks_path), stats))
+    assert dec.count("MapInArrow") == 1 and "Exchange" not in dec
+
+
 def test_grouped_windows_never_single_partition(events):
     out = tk.augment_rolling(
         events, "ts", "value", window=5, window_func=["mean", "sum"],

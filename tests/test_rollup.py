@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 
 from pytimetk_spark.rollup.compression import (
     decode_gorilla,
+    decode_gorilla_many,
     decode_timestamps,
+    decode_timestamps_many,
     encode_gorilla,
     encode_timestamps,
 )
@@ -36,8 +38,7 @@ from pytimetk_spark.sources.webpages import generate_webpages
 
 
 def test_codec_roundtrip_fuzz():
-    # n up to 3000 so the vectorized super-block walks (≥256 points) are
-    # exercised alongside the short-stream sequential fallback
+    # n up to 3000: streams of one to many 128-point super-blocks
     rng = np.random.RandomState(42)
     for trial in range(100):
         n = rng.randint(0, 3000)
@@ -64,6 +65,88 @@ def test_codec_rejects_v1_blocks():
             C.decode_timestamps(bytes([tag]) + C.encode_timestamps(ts)[1:])
         with pytest.raises(ValueError, match="bad value block magic"):
             C.decode_gorilla(bytes([tag]) + C.encode_gorilla(vals)[1:])
+
+
+def _codec_cases(seed):
+    """(timestamps, values) streams over the sizes where the codecs change
+    shape: empty/1/2/3 points and the 128- and 256-point super-block
+    edges; with 64-bit timestamp escapes, NaNs and constants."""
+    rng = np.random.RandomState(seed)
+    for n in (0, 1, 2, 3, 127, 128, 129, 255, 256, 257, 258, 1000):
+        for kind in range(4):
+            ts = np.cumsum(rng.randint(1, 4000, n)).astype(np.int64) + 1_600_000_000
+            if kind == 1 and n > 3:
+                ts[n // 2:] += 2**40  # 64-bit escape
+            if kind == 2:
+                ts = np.arange(n, dtype=np.int64) * 3600
+            vals = rng.randn(n) * 10.0 ** rng.randint(-5, 8)
+            if kind == 3:
+                vals = np.round(vals)
+                vals[rng.rand(n) < 0.2] = np.nan
+            if kind == 2:
+                vals = np.full(n, 2.5)
+            yield ts, vals
+
+
+def test_codec_streams_pinned():
+    """The encoded bytes are a storage format: this digest was taken from
+    the per-stream encoders before the batched rewrite, so any byte that
+    moves in either codec fails here."""
+    h = hashlib.sha256()
+    for ts, vals in _codec_cases(2024):
+        h.update(encode_timestamps(ts))
+        for block in (1, 16, 64):
+            h.update(encode_gorilla(vals, block))
+    assert h.hexdigest() == (
+        "a1d80761d35a63db73e4a7bef1aa3be78fdfea5cdbef58bef2ae5df3159a3c66"
+    )
+
+
+def test_batched_decoders_match_per_blob():
+    """decode_*_many (every super-block of every stream in one numpy walk)
+    against one-blob-at-a-time decodes and the encoded input, over the
+    size edges, blocks 1/16/64, NaNs, 64-bit escapes and a sliced Arrow
+    array (offset != 0); bad tags and NULL blobs raise ValueError."""
+    import pyarrow as pa
+
+    cases = list(_codec_cases(7))
+    ts_all = np.concatenate([ts for ts, _ in cases])
+    v_all = np.concatenate([v for _, v in cases])
+    sizes = np.array([len(ts) for ts, _ in cases])
+    ts_blobs = [encode_timestamps(ts) for ts, _ in cases]
+    got, counts = decode_timestamps_many(
+        pa.array([b"pre", *ts_blobs, b"post"], pa.binary()).slice(1, len(cases))
+    )
+    assert np.array_equal(counts, sizes)
+    assert np.array_equal(got, ts_all)
+    assert np.array_equal(got, np.concatenate([decode_timestamps(b) for b in ts_blobs]))
+    for block in (1, 16, 64):
+        blobs = [encode_gorilla(v, block) for _, v in cases]
+        got, counts = decode_gorilla_many(pa.array(blobs, pa.binary()))
+        assert np.array_equal(counts, sizes)
+        want = np.concatenate([decode_gorilla(b) for b in blobs])
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+        assert np.array_equal(got.view(np.uint64), v_all.view(np.uint64))
+    # a batch of only empty streams, and an empty batch
+    assert np.array_equal(decode_timestamps_many([encode_timestamps([])] * 3)[1], [0, 0, 0])
+    assert len(decode_gorilla_many(pa.array([], pa.binary()))[0]) == 0
+
+    ts, vals = cases[30]
+    bad_ts = bytes([0xA1]) + encode_timestamps(ts)[1:]
+    bad_v = bytes([0xA2]) + encode_gorilla(vals)[1:]
+    for one, many, blob, good in (
+        (decode_timestamps, decode_timestamps_many, bad_ts, encode_timestamps(ts)),
+        (decode_gorilla, decode_gorilla_many, bad_v, encode_gorilla(vals)),
+    ):
+        with pytest.raises(ValueError) as per_blob:
+            one(blob)
+        with pytest.raises(ValueError) as batched:
+            many([good, blob])
+        assert str(batched.value) == str(per_blob.value)
+        with pytest.raises(ValueError, match="NULL"):
+            many(pa.array([good, None], pa.binary()))
+        with pytest.raises(ValueError, match="corrupt"):
+            many([good[:-1]])
 
 
 def test_codec_compresses_regular_series():
@@ -206,6 +289,36 @@ def test_compression_roundtrip_through_spark(spark, web):
     assert (sizes["tsb"] + sizes["vb"]) < raw_bytes
 
 
+def test_decoded_blocks_keep_null_stats(spark, web):
+    """decode_tier_blocks is the Spark-level inverse of encode_tier_blocks:
+    a NULL stat (vsum/vmin/vmax of a gap-filled bucket) decodes to SQL
+    NULL, not NaN, so isNull/isnan/count/sum/min/max over the decoded
+    stats equal the tier's. toPandas() shows NULL and NaN alike, so this
+    compares inside Spark."""
+    h1 = rollup_raw_to_tier(web, "url", "warc_ts", F.length("text"), "h")
+    tier = gap_fill_tier(h1, "h")
+    stats = ["cnt", "vsum", "vmin", "vmax"]
+    back = decode_tier_blocks(encode_tier_blocks(tier, stats), stats)
+
+    def profile(df):
+        aggs = []
+        for s in stats:
+            c = F.col(s).cast("double")
+            aggs += [
+                F.sum(c.isNull().cast("int")).alias(f"{s}_nulls"),
+                F.sum(F.isnan(c).cast("int")).alias(f"{s}_nans"),
+                F.count(c).alias(f"{s}_count"),
+                F.sum(c).alias(f"{s}_sum"),
+                F.min(c).alias(f"{s}_min"),
+                F.max(c).alias(f"{s}_max"),
+            ]
+        return df.select(*aggs).first().asDict()
+
+    want = profile(tier)
+    assert min(want[f"{s}_nulls"] for s in ("vsum", "vmin", "vmax")) > 0
+    assert profile(back) == want
+
+
 def test_batched_codecs_byte_identical():
     """encode_gorilla_many / encode_timestamps_many (r7: one vectorized
     analysis pass across all of a batch's groups, ~3x on the codec core)
@@ -213,7 +326,8 @@ def test_batched_codecs_byte_identical():
     degenerate sizes (1/2/3 points), block/super-block boundaries,
     constants (zero XORs), NaNs, huge-exponent floats, escape-heavy
     timestamp jumps, padded backing arrays (the Arrow-carry shape), and
-    the non-contiguous fallback."""
+    non-contiguous groups. The per-group encoders are now one-group calls
+    of the batched ones; test_codec_streams_pinned pins their bytes."""
     import numpy as np
 
     from pytimetk_spark.rollup.compression import (
@@ -252,7 +366,7 @@ def test_batched_codecs_byte_identical():
         for g in range(G):
             assert mv[g] == encode_gorilla(vals[starts[g]:ends[g]])
             assert mt[g] == encode_timestamps(ts[starts[g]:ends[g]])
-    # non-contiguous groups take the per-group fallback
+    # non-contiguous groups
     vals = rng.rand(60)
     ts = np.sort(rng.randint(0, 10**9, 60)).astype(np.int64)
     st, en = np.array([2, 40]), np.array([10, 55])
@@ -268,11 +382,15 @@ def test_batched_codecs_byte_identical():
 
 def test_encode_blocks_multi_batch_carry(spark, web):
     """The mapInArrow encoder carries an unfinished url group across
-    Arrow batch boundaries (r7: the encode pass is Arrow-native; the
-    carry concat path only runs when a partition spans multiple record
-    batches, which the default 100k-row batch size never triggers at
-    test scale). Force tiny batches so groups straddle boundaries and
-    pin the bit-exact round-trip."""
+    Arrow batch boundaries; that path only runs when a partition spans
+    several record batches, which the default 100k-row batch size never
+    triggers at test scale. Force 7-row batches so groups straddle
+    boundaries and pin the bit-exact round-trip, and check that the
+    mapInArrow decoder then emits one output batch per input batch."""
+    import pyarrow as pa
+
+    from pytimetk_spark.rollup.tiers import _decode_block_batches
+
     h1 = rollup_raw_to_tier(web, "url", "warc_ts", F.length("text"), "h")
     stats = ["cnt", "vsum"]
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -292,6 +410,18 @@ def test_encode_blocks_multi_batch_carry(spark, web):
             .reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+        # the decoder's own output batches, counted inside the same stage
+        def batch_sizes(batches):
+            for out in _decode_block_batches(batches, stats):
+                yield pa.RecordBatch.from_pydict({"rows": [out.num_rows]})
+
+        sizes = (
+            blocks.select("url", "ts_block", *[f"blk_{s}" for s in stats])
+            .mapInArrow(batch_sizes, "rows long").toPandas()["rows"]
+        )
+        assert len(sizes) > 1
+        assert sizes.sum() == len(want)
     finally:
         spark.conf.set(key, old)
 
