@@ -80,7 +80,23 @@ def rollup_raw_to_tier(
     url = F.col("url") if url_col == "url" else F.col(url_col).alias("url")
     base = df.select(url, bucket, value, F.col(ts_col).alias("__ts__"))
 
-    aggs = [
+    aggs = _raw_aggs()
+    if not salt_partials:
+        return base.groupBy("url", "bucket_ts").agg(*aggs)
+
+    # two-phase salted aggregation for hot (url, bucket) groups
+    salted = base.withColumn(
+        "__salt__", F.pmod(F.xxhash64("__ts__"), F.lit(salt_partials))
+    )
+    partial = salted.groupBy("url", "bucket_ts", "__salt__").agg(*aggs)
+    return partial.groupBy("url", "bucket_ts").agg(*_merge_aggs())
+
+
+def _raw_aggs():
+    """The re-aggregable tier stat set over raw rows whose value column is
+    ``__v__`` and whose timestamp column is ``__ts__`` (used by
+    ``rollup_raw_to_tier`` and by the streaming 1h tier)."""
+    return [
         F.count("__v__").alias("cnt"),
         F.sum("__v__").alias("vsum"),
         F.min("__v__").alias("vmin"),
@@ -91,15 +107,6 @@ def rollup_raw_to_tier(
         F.max_by("__v__", "__ts__").alias("vlast"),
         F.max("__ts__").alias("last_ts"),
     ]
-    if not salt_partials:
-        return base.groupBy("url", "bucket_ts").agg(*aggs)
-
-    # two-phase salted aggregation for hot (url, bucket) groups
-    salted = base.withColumn(
-        "__salt__", F.pmod(F.xxhash64("__ts__"), F.lit(salt_partials))
-    )
-    partial = salted.groupBy("url", "bucket_ts", "__salt__").agg(*aggs)
-    return partial.groupBy("url", "bucket_ts").agg(*_merge_aggs())
 
 
 def _merge_aggs():

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.rollup.tiers import _raw_aggs
+
 
 def streaming_tier_1h(
     stream_df: DataFrame,
@@ -42,17 +44,7 @@ def streaming_tier_1h(
     ).withWatermark("__ts__", watermark)
     agg = src.groupBy(
         F.col("url"), F.window("__ts__", "1 hour").alias("w")
-    ).agg(
-        F.count("__v__").alias("cnt"),
-        F.sum("__v__").alias("vsum"),
-        F.min("__v__").alias("vmin"),
-        F.max("__v__").alias("vmax"),
-        F.sum(F.col("__v__") * F.col("__v__")).alias("vsumsq"),
-        F.min_by("__v__", "__ts__").alias("vfirst"),
-        F.min("__ts__").alias("first_ts"),
-        F.max_by("__v__", "__ts__").alias("vlast"),
-        F.max("__ts__").alias("last_ts"),
-    )
+    ).agg(*_raw_aggs())
     return agg.select(
         "url",
         F.col("w.start").alias("bucket_ts"),

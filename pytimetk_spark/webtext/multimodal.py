@@ -1,11 +1,9 @@
 """Image columns as opaque ``binary`` blobs with typed features.
 
-``decode_image_batch`` decodes in pure numpy/stdlib, with no PIL:
-JPEG, baseline and progressive (webtext/jpeg.py), PNG incl. Adam7
-(webtext/png.py), GIF first frame (webtext/gif.py), WebP lossless and
-lossy-VP8 keyframes (webtext/webp.py, webtext/vp8.py), uncompressed BMP
-(24/32-bpp) and binary PPM (P6). Each image is nearest-neighbor resized
-and featurized as a luminance histogram. Other formats raise
+``decode_image_batch`` decodes in pure numpy/stdlib, with no PIL: PNG
+incl. Adam7 (webtext/png.py), uncompressed BMP (24/32-bpp) and binary
+PPM (P6). Each image is nearest-neighbor resized and featurized as a
+luminance histogram. Other formats (JPEG, GIF, WebP, ...) raise
 NotImplementedError unless ``fake=True``, which takes a deterministic
 byte-level stand-in with the same schema and batch shape.
 
@@ -44,15 +42,10 @@ def decode_image_batch(
 ) -> DataFrame:
     """Image decode + nearest-neighbor resize + feature extraction.
 
-    REAL pure-numpy/stdlib decode for JPEG incl. progressive
-    (webtext/jpeg.py — full Huffman + IDCT), PNG incl. Adam7 (webtext/png.py — zlib
-    inflate + unfilter), GIF (webtext/gif.py), WebP — both VP8L
-    lossless (webtext/webp.py) and lossy-VP8 keyframes
-    (webtext/vp8.py, RFC 6386 intra codec) — uncompressed BMP
-    (24/32-bpp BI_RGB) and binary
-    PPM (P6); features = normalized 8-bin luminance histogram of
-    the resized image. Other formats (12-bit/CMYK JPEG, animated
-    WebP/...) need PIL →
+    REAL pure-numpy/stdlib decode for PNG incl. Adam7 (webtext/png.py —
+    zlib inflate + unfilter), uncompressed BMP (24/32-bpp BI_RGB) and
+    binary PPM (P6); features = normalized 8-bin luminance histogram of
+    the resized image. Other formats (JPEG, GIF, WebP, ...) need PIL →
     NotImplementedError unless ``fake=True``, which produces a
     DETERMINISTIC byte-level stand-in (real schema and batch shape),
     keeping the distributed plumbing testable for any format.
@@ -88,35 +81,16 @@ def decode_image_batch(
             # inherently per-file; numpy does the pixel work inside
             for i, blob in zip(ids, blobs):
                 img = _decode_uncompressed_image(blob)
-                if img is None and blob[:2] == b"\xff\xd8":
-                    from pytimetk_spark.webtext.jpeg import (
-                        decode_baseline_jpeg,
-                    )
-
-                    img = decode_baseline_jpeg(blob)
                 if img is None and blob[:8] == b"\x89PNG\r\n\x1a\n":
                     from pytimetk_spark.webtext.png import decode_png
 
                     img = decode_png(blob)
-                if img is None and blob[:6] in (b"GIF87a", b"GIF89a"):
-                    from pytimetk_spark.webtext.gif import decode_gif
-
-                    img = decode_gif(blob)
-                if (img is None and blob[:4] == b"RIFF"
-                        and blob[8:12] == b"WEBP"):
-                    from pytimetk_spark.webtext.webp import decode_webp
-
-                    img = decode_webp(blob)
                 if img is None:
                     raise NotImplementedError(
-                        "JPEG (baseline + progressive), 8-bit PNG "
-                        "(incl. Adam7), GIF "
-                        "(first frame), WebP (VP8L lossless + lossy-VP8 "
-                        "keyframes), "
-                        "uncompressed BMP (24/32bpp) and binary PPM (P6) "
-                        "decode dependency-free; other formats "
-                        "(12-bit/CMYK JPEG, animated WebP/...) need "
-                        "PIL — or pass fake=True for the "
+                        "8-bit PNG (incl. Adam7), uncompressed BMP "
+                        "(24/32bpp) and binary PPM (P6) decode "
+                        "dependency-free; other formats (JPEG, GIF, "
+                        "WebP, ...) need PIL — or pass fake=True for the "
                         "deterministic byte-level stand-in"
                     )
                 resized = _nn_resize(img, target_size[1], target_size[0])

@@ -1,9 +1,10 @@
 """Pure-stdlib PNG decoder (zlib inflate + scanline unfilter).
 
-Second compressed web-image format in the REAL decode tier (after
-baseline JPEG, webtext/jpeg.py): PNG's DEFLATE stream is handled by the
-stdlib ``zlib`` module, so a dependency-free decode needs only chunk
-parsing and the five scanline filters (RFC 2083 / W3C PNG spec).
+The compressed web-image format in the REAL decode tier of
+``decode_image_batch`` (webtext/multimodal.py): PNG's DEFLATE stream is
+handled by the stdlib ``zlib`` module, so a dependency-free decode needs
+only chunk parsing and the five scanline filters (RFC 2083 / W3C PNG
+spec).
 
 Supported: 8-bit samples, color types 0 (gray), 2 (RGB), 3 (palette +
 PLTE), 4 (gray+alpha), 6 (RGBA), both non-interlaced and Adam7
@@ -16,7 +17,7 @@ convention for feature extraction); palette expands through PLTE.
 Performance shape: inflate is C-speed (zlib); unfilter is per-ROW numpy
 with vectorized None/Up rows and sequential Sub/Average/Paeth recurrences
 per row (inherent data dependency along x). Runs per blob inside
-mapInPandas, same boundary as the JPEG/BMP/WAV decoders.
+mapInPandas, same boundary as the BMP/PPM decoder.
 """
 
 from __future__ import annotations

@@ -1,17 +1,20 @@
 """Two-cluster-size scaling evidence (north rule: ≥0.8 efficiency N→4N).
 
 Protocol (round 3 — interleaved micro-rounds): two PERSISTENT worker JVMs
-are started once — local[8] and local[32] — each warmed up on the IDENTICAL
+are started once — local[N] and local[4N], N = max(nproc // 4, 1), so 1
+and 4 on a 4-core host — each warmed up on the IDENTICAL
 tier-rollup job (the shipped ``run_rollup`` of the parquet-sourced raw web
 table into a fresh TierStore: fingerprint pass + one write job for the
 1h/1d/7d tiers) over the IDENTICAL deterministic input. The orchestrator
 then alternates SINGLE job iterations between the two workers, so each
-(8, 32) pair executes seconds apart inside ONE host window, bracketed by
+(N, 4N) pair executes seconds apart inside ONE host window, bracketed by
 single-thread CPU calibrations. A pair is CLEAN when
 its before/after calibrations agree within 10% — i.e. the host did not
-drift mid-pair. We report efficiency = (throughput_32 / throughput_8) / 4
+drift mid-pair. We report efficiency = (throughput_4N / throughput_N) / 4
 for the best clean pair and the median of clean pairs, plus the host's own
-measured 8→32 parallel-capacity ceiling and the host-normalized number.
+measured N→4N parallel-capacity ceiling and the host-normalized number.
+Each worker JVM gets ``config.default_driver_memory`` of half the host's
+memory, so both heaps fit together; SPARK_DRIVER_MEMORY overrides.
 
 Round 2 ran each side as a fresh JVM minutes apart; this sandbox VM's CPU
 throughput drifts on a minutes scale (identical runs vary up to 3×), which
@@ -24,7 +27,7 @@ job is "read the crawl table, roll up, write tiers" — the production shape
 
 Usage:
   python tools/scaling_bench.py               # orchestrate (writes BENCH/BASELINE.md)
-  python tools/scaling_bench.py --worker 8    # persistent worker (internal)
+  python tools/scaling_bench.py --worker 4    # persistent worker (internal)
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+N = max(len(os.sched_getaffinity(0)) // 4, 1)
 N_URLS = int(os.environ.get("SCALING_N_URLS", "600000"))
 CRAWLS = int(os.environ.get("SCALING_CRAWLS", "40"))
 DAYS = int(os.environ.get("SCALING_DAYS", "45"))
@@ -57,7 +61,7 @@ def ensure_source() -> None:
     import pytimetk_spark as tk
     from pytimetk_spark.sources.webpages import generate_webpages
 
-    spark = tk.get_spark(app_name="scaling-gen", master="local[8]")
+    spark = tk.get_spark(app_name="scaling-gen", master=f"local[{4 * N}]")
     generate_webpages(
         spark, n_urls=N_URLS, crawls_per_url=CRAWLS, days=DAYS,
         n_domains=max(N_URLS // 50, 10), seed=42,
@@ -133,15 +137,15 @@ def _spin(n: int) -> int:
 
 
 def host_parallel_capacity() -> dict[int, float]:
-    """Best-of-3 aggregate Miter/s at 1/8/32 worker processes — measures how
-    much parallel CPU the hypervisor actually delivers. On this sandbox the
-    host gives only ~2.8-2.9x moving 8→32 (≈0.70-0.73 ceiling on any
-    measurable 8→32 efficiency)."""
+    """Best-of-3 aggregate Miter/s at 1, N and 4N worker processes —
+    measures how much parallel CPU the hypervisor actually delivers. On a
+    4-core, 15 GiB VM the 1→4 ratio ranged from 1.7x to 3.1x across runs
+    (a 0.43-0.79 ceiling on any measurable N→4N efficiency there)."""
     import concurrent.futures as cf
 
     spin = _spin
     out: dict[int, float] = {}
-    for threads in (1, 8, 32):
+    for threads in sorted({1, N, 4 * N}):
         best = 0.0
         for _ in range(3):
             t0 = time.time()
@@ -192,44 +196,48 @@ class _Worker:
 
 
 def orchestrate() -> None:
+    sys.path.insert(0, str(REPO))
+    from pytimetk_spark.config import default_driver_memory
+
     ensure_source()
     capacity = host_parallel_capacity()
-    host_ratio = capacity[32] / capacity[8]
-    print(f"host capacity Miter/s: {capacity} ratio8to32={host_ratio:.2f}", flush=True)
-    # two persistent JVMs; only one executes at a time, sized so both heaps
-    # plus the tmpfs workspace fit the 128 GiB host comfortably
-    env = {**os.environ, "SPARK_DRIVER_MEMORY": os.environ.get("SPARK_DRIVER_MEMORY", "28g")}
-    w8, w32 = _Worker(8, env), _Worker(32, env)
+    host_ratio = capacity[4 * N] / capacity[N]
+    print(f"host capacity Miter/s: {capacity} ratio{N}to{4 * N}={host_ratio:.2f}",
+          flush=True)
+    # two persistent JVMs; only one executes at a time, but both heaps live
+    # at once, so each takes the host-sized default of half the memory
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(total // 2)
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": heap}
+    w1, w4 = _Worker(N, env), _Worker(4 * N, env)
     try:
-        info8, info32 = w8.wait_ready(), w32.wait_ready()
-        assert info8["points"] == info32["points"], (info8, info32)
-        points, n_raw = info8["points"], info8["raw_rows"]
+        info1, info4 = w1.wait_ready(), w4.wait_ready()
+        assert info1["points"] == info4["points"], (info1, info4)
+        points, n_raw = info1["points"], info1["raw_rows"]
         print(f"workers ready: {points:,} rolled points / iter", flush=True)
 
         pairs: list[dict] = []
         for rnd in range(ROUNDS):
             cal_b = _cpu_calibration()
             # alternate order to cancel any systematic first-mover advantage
-            order = (w8, w32) if rnd % 2 == 0 else (w32, w8)
-            t: dict[int, float] = {}
-            for w in order:
-                t[w.cores] = w.run_iter()
+            order = (w1, w4) if rnd % 2 == 0 else (w4, w1)
+            t = {w: w.run_iter() for w in order}
             cal_a = _cpu_calibration()
             drift = abs(cal_a - cal_b) / ((cal_a + cal_b) / 2)
-            eff = t[8] / t[32] / 4
+            eff = t[w1] / t[w4] / 4
             pairs.append(
                 {
-                    "round": rnd, "t8": t[8], "t32": t[32],
-                    "tp8": round(points / t[8], 1), "tp32": round(points / t[32], 1),
+                    "round": rnd, "tN": t[w1], "t4N": t[w4],
+                    "tpN": round(points / t[w1], 1), "tp4N": round(points / t[w4], 1),
                     "eff": round(eff, 3), "cal_before": cal_b, "cal_after": cal_a,
                     "drift": round(drift, 3), "clean": drift <= CAL_TOL,
-                    "order": "8-first" if order[0] is w8 else "32-first",
+                    "order": "N-first" if order[0] is w1 else "4N-first",
                 }
             )
             print(f"round {rnd}: {json.dumps(pairs[-1])}", flush=True)
     finally:
-        w8.quit()
-        w32.quit()
+        w1.quit()
+        w4.quit()
 
     clean = [p for p in pairs if p["clean"]]
     # eff > 1.0 is physically impossible for this job: it means a transient
@@ -244,16 +252,19 @@ def orchestrate() -> None:
     md = f"""# BENCH/BASELINE — two-cluster-size scaling evidence
 
 North rule (BASELINE.json): ≥0.8 throughput scaling efficiency between N
-and 4N executors, evidenced in-sandbox by the identical job at local[8] vs
-local[32] on the same deterministic input.
+and 4N executors, evidenced in-sandbox by the identical job at local[{N}] vs
+local[{4 * N}] on the same deterministic input.
+
+**Host**: {len(os.sched_getaffinity(0))} cores, {total / 2**30:.1f} GiB;
+N = max(nproc // 4, 1) = {N}; heap {heap} per worker JVM.
 
 **Protocol (interleaved micro-rounds)**: two persistent worker JVMs
-(local[8], local[32]) are built and warmed once; the orchestrator then
-alternates SINGLE job iterations between them — each (8, 32) pair executes
+(local[{N}], local[{4 * N}]) are built and warmed once; the orchestrator then
+alternates SINGLE job iterations between them — each (N, 4N) pair executes
 seconds apart inside one host window, bracketed by single-thread CPU
 calibrations. A pair is **clean** when its bracketing calibrations agree
 within {CAL_TOL:.0%} (the host did not drift mid-pair). Order alternates
-8-first / 32-first per round. Reproduce: `python tools/scaling_bench.py`.
+N-first / 4N-first per round. Reproduce: `python tools/scaling_bench.py`.
 
 **Job**: `run_rollup(resume=False)` of the crawl table (parquet, {n_raw:,}
 rows = {N_URLS} urls × {CRAWLS} crawls × {DAYS} days, seed 42, gaps
@@ -263,16 +274,16 @@ for the 1h, 1d and 7d tiers = {points:,} rolled points per iteration.
 ## Headline ({len(clean)}/{len(pairs)} clean pairs)
 
 **Scaling efficiency — best clean pair: {best["eff"]:.3f}**
-({best["tp8"]:,.0f} → {best["tp32"]:,.0f} pts/s, round {best["round"]},
+({best["tpN"]:,.0f} → {best["tp4N"]:,.0f} pts/s, round {best["round"]},
 calibrations {best["cal_before"]}/{best["cal_after"]} Miter/s,
 drift {best["drift"]:.1%}, {best["order"]}).
 **Median of clean pairs: {med:.3f}.**
 
 **Host parallel-capacity ceiling**: pure-CPU process-pool throughput on
-this VM scales only {host_ratio:.2f}x from 8 to 32 workers
-({capacity[8]:,.0f} → {capacity[32]:,.0f} Miter/s; 1 worker =
+this VM scales only {host_ratio:.2f}x from {N} to {4 * N} workers
+({capacity[N]:,.0f} → {capacity[4 * N]:,.0f} Miter/s; 1 worker =
 {capacity[1]:,.0f}) — the hypervisor does not deliver 4x the CPU, capping
-ANY measurable 8→32 efficiency at {ceiling:.2f}.
+ANY measurable N→4N efficiency at {ceiling:.2f}.
 **Host-normalized efficiency (best clean pair):
 {best["eff"] / ceiling:.3f}** — the engine extracts this fraction of the
 parallel speedup the hardware actually offers; ≥0.8 of a true 4x follows
@@ -280,13 +291,13 @@ on hardware that provides it.
 
 ## All micro-round pairs
 
-| round | order | t8 (s) | t32 (s) | tp8 pts/s | tp32 pts/s | eff | cal before/after | drift | clean |
+| round | order | tN (s) | t4N (s) | tpN pts/s | tp4N pts/s | eff | cal before/after | drift | clean |
 |---|---|---|---|---|---|---|---|---|---|
 """
     for p in pairs:
         md += (
-            f"| {p['round']} | {p['order']} | {p['t8']} | {p['t32']} | "
-            f"{p['tp8']:,.0f} | {p['tp32']:,.0f} | {p['eff']} | "
+            f"| {p['round']} | {p['order']} | {p['tN']} | {p['t4N']} | "
+            f"{p['tpN']:,.0f} | {p['tp4N']:,.0f} | {p['eff']} | "
             f"{p['cal_before']}/{p['cal_after']} | {p['drift']:.1%} | "
             f"{'yes' if p['clean'] else 'no'} |\n"
         )
@@ -328,7 +339,8 @@ Measurement honesty
                 "efficiency_median_clean": med,
                 "clean_pairs": len(clean),
                 "total_pairs": len(pairs),
-                "host_ratio_8_to_32": round(host_ratio, 2),
+                "n": N,
+                "host_ratio_n_to_4n": round(host_ratio, 2),
                 "host_normalized_best": round(best["eff"] / ceiling, 3),
             }
         )
