@@ -10,7 +10,13 @@ Usage:
       [--tiers 1h,1d,7d] [--salt 8] [--retention]
 
 The job is idempotent: re-submitting after a crash skips source-day
-partitions whose manifest fingerprints match (rollup/store.py).
+partitions whose manifest fingerprints match (rollup/store.py). The
+per-day fingerprints are memoized in the store by the source's file set
+(the sorted ``(uri, size, mtime_ns)`` of its files, its schema, the
+timestamp column and the session time zone), so a re-submit over an
+unchanged ``--source`` directory starts no Spark job for the rollup. An
+in-place rewrite that keeps a file's size and mtime is not detected; a
+non-``file:`` source always takes the fingerprint scan.
 """
 
 from __future__ import annotations

@@ -18,6 +18,18 @@ commits, each atomically (temp file + ``os.replace``), and their
 metadata only, no Spark job. ``run_rollup`` skips days whose manifest
 exists and whose fingerprint matches — a killed job resumes from the next
 unprocessed partition.
+
+Source lineage: the per-day fingerprints are a pure function of the source
+rows, ``ts_col`` and the session time zone, so they are memoized in
+``_manifests/_source_days.json`` under a key built from the source's file
+set. The key is a sha256 over ``ts_col``, the source schema, the session
+time zone and the sorted ``(uri, size, mtime_ns)`` of every input file,
+read with ``os.stat``; a re-submit over an unchanged file set reads the
+memo and skips the fingerprint scan. Only a bare file relation over
+``file:`` URIs (``spark.read.parquet(path)``) is keyed; a derived source
+(filter, union, ``createDataFrame``) or a non-``file:`` URI always takes
+the scan. An in-place rewrite that keeps both a file's size and its mtime
+is not detected. On Iceberg the table snapshot id is the natural key.
 """
 
 from __future__ import annotations
@@ -32,6 +44,8 @@ import uuid
 from dataclasses import asdict, dataclass, field
 from functools import reduce
 from pathlib import Path
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,9 +99,7 @@ class TierStore:
         )
 
     def manifest_path(self, tier: str, partition: str) -> Path:
-        d = self.base / "_manifests" / tier
-        d.mkdir(parents=True, exist_ok=True)
-        return d / f"{partition}.json"
+        return self.base / "_manifests" / tier / f"{partition}.json"
 
     def read_manifest(self, tier: str, partition: str) -> PartitionManifest | None:
         p = self.manifest_path(tier, partition)
@@ -96,12 +108,27 @@ class TierStore:
         return PartitionManifest(**json.loads(p.read_text()))
 
     def write_manifest(self, m: PartitionManifest) -> None:
-        """Atomic: a write killed partway leaves the previous manifest (or
-        none) in place, never truncated JSON."""
-        p = self.manifest_path(m.tier, m.partition)
-        tmp = p.with_name(f".{p.name}.{uuid.uuid4().hex}.tmp")
-        tmp.write_text(json.dumps(asdict(m)))
-        os.replace(tmp, p)
+        _write_atomic(self.manifest_path(m.tier, m.partition), asdict(m))
+
+    def source_days_path(self) -> Path:
+        return self.base / "_manifests" / "_source_days.json"
+
+    def read_source_days(self, key: str) -> dict[str, tuple[str, int]] | None:
+        """The memoized per-day fingerprints when they were taken from the
+        file set ``key`` names, else None."""
+        try:
+            memo = json.loads(self.source_days_path().read_text())
+        except FileNotFoundError:
+            return None
+        if memo["key"] != key:
+            return None
+        return {d: tuple(v) for d, v in memo["days"].items()}
+
+    def write_source_days(
+        self, lineage: dict, days: dict[str, tuple[str, int]]
+    ) -> None:
+        """Keep one memo entry: ``{key, n_files, n_bytes, days}``."""
+        _write_atomic(self.source_days_path(), {**lineage, "days": days})
 
     def manifests(self, tier: str) -> list[PartitionManifest]:
         d = self.base / "_manifests" / tier
@@ -124,6 +151,39 @@ class TierStore:
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.read.parquet(self.tier_path(tier))
+
+
+def _write_atomic(p: Path, record: dict) -> None:
+    """Atomic: a write killed partway leaves the previous file (or none)
+    in place, never truncated JSON."""
+    p.parent.mkdir(parents=True, exist_ok=True)
+    tmp = p.with_name(f".{p.name}.{uuid.uuid4().hex}.tmp")
+    tmp.write_text(json.dumps(record))
+    os.replace(tmp, p)
+
+
+def _file_set_lineage(
+    spark: SparkSession, source: DataFrame, ts_col: str
+) -> dict | None:
+    """``{key, n_files, n_bytes}`` of a bare file relation over ``file:``
+    URIs, from ``os.stat`` alone (no file is opened, no Spark job runs);
+    None for any other source. The key holds only strings and integers, so
+    it is stable across JVMs."""
+    plan = source._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    uris = sorted(source.inputFiles())
+    if not uris or any(urlparse(u).scheme != "file" for u in uris):
+        return None
+    stats = [os.stat(url2pathname(urlparse(u).path)) for u in uris]
+    files = [[u, st.st_size, st.st_mtime_ns] for u, st in zip(uris, stats)]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    payload = json.dumps([ts_col, source.schema.simpleString(), tz, files])
+    return {
+        "key": hashlib.sha256(payload.encode()).hexdigest(),
+        "n_files": len(files),
+        "n_bytes": sum(st.st_size for st in stats),
+    }
 
 
 def _day_fingerprints(source: DataFrame, ts_col: str) -> dict[str, tuple[str, int]]:
@@ -189,7 +249,10 @@ def run_rollup(
 
     Scan discipline: one fingerprint pass (a grouped aggregate for all
     per-day fingerprints) plus ONE write job, so a non-empty run starts two
-    SQL executions regardless of day or tier count. The write plans every
+    SQL executions regardless of day or tier count. The fingerprints are
+    memoized by the source's file-set lineage (see the module docstring):
+    a re-submit over an unchanged file set skips the pass, and when it has
+    nothing to write it starts no Spark job at all. The write plans every
     tier up front and dynamic-partition-overwrites all of them into the
     store root, partitioned by ``(tier, bucket_date)``:
 
@@ -223,7 +286,12 @@ def run_rollup(
         value_col = F.length("text")
 
     fine = tiers[0]
-    day_info = _day_fingerprints(source, ts_col)
+    lineage = _file_set_lineage(spark, source, ts_col)
+    day_info = store.read_source_days(lineage["key"]) if lineage else None
+    if day_info is None:
+        day_info = _day_fingerprints(source, ts_col)
+        if lineage:
+            store.write_source_days(lineage, day_info)
     done = (
         {m.partition: m.input_fingerprint for m in store.manifests(fine)}
         if resume

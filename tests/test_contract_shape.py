@@ -11,11 +11,12 @@ DuckDB types outside int64/double (the HUGEINT class that kept
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as entrymod
 
 # rows whose SQL isn't expressible; they get the weaker rows-only check.

@@ -124,6 +124,19 @@ def test_run_rollup_two_executions_one_raw_scan(spark, tmp_path):
     assert len(scans) == 2 and len(tier_scans) == 1
     assert re.search(r"PartitionFilters: \[bucket_date#\d+ IN \(", tier_scans[0])
 
+    # no-op re-submit over the unchanged file set: the per-day fingerprints
+    # come from the lineage memo, so run_rollup starts no Spark job at all
+    # (the source is built first: its schema inference is not run_rollup's)
+    source = spark.read.parquet(raw_path)
+    tag = "run_rollup-noop"
+    sc.setJobGroup(tag, tag)
+    try:
+        assert run_rollup(spark, source, store) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
+
 
 def test_gorilla_block_stages_sized_by_data(spark, tmp_path):
     """Every Python task pays a fixed worker setup, so the block codecs'

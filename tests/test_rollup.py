@@ -600,6 +600,99 @@ def test_manifest_write_killed_midway_keeps_old_manifest(
     assert run_rollup(spark, updated, store, value_col=F.length("text")) == []
 
 
+def test_source_days_memo_stays_exact(spark, tmp_path):
+    """The per-day fingerprints memoized by file-set lineage never stand
+    in for a source they were not taken from: (a) a raw file rewritten in
+    place misses the memo and rebuilds exactly its day, (b) a derived
+    source over the same files never uses it, (c) a changed session time
+    zone misses it, and (d) an unchanged file set still resumes a lost
+    coarse tier."""
+    import os
+    import shutil as _sh
+
+    raw_path = tmp_path / "raw"
+    generate_webpages(
+        spark, n_urls=40, crawls_per_url=10, days=9, n_domains=5, seed=3
+    ).write.parquet(str(raw_path))
+    store = TierStore(str(tmp_path / "tiers"))
+    memo = store.source_days_path()
+    # reads create nothing
+    assert store.read_manifest("1h", "2024-01-01") is None
+    assert store.read_source_days("0" * 64) is None
+    assert list((store.base / "_manifests").iterdir()) == []
+
+    def rollup(source):
+        return {
+            (m.tier, m.partition)
+            for m in run_rollup(spark, source, store, value_col=F.length("text"))
+        }
+
+    def assert_tiers_match(raw, tiers=(("1h", "h"), ("1d", "D"), ("7d", "7D"))):
+        for tier, freq in tiers:
+            _assert_tier_matches_raw(spark, store, tier, raw, freq)
+
+    def stamp():
+        st = os.stat(memo)
+        return st.st_ino, st.st_mtime_ns
+
+    assert rollup(spark.read.parquet(str(raw_path)))
+    hit = stamp()
+    assert rollup(spark.read.parquet(str(raw_path))) == set()
+    assert stamp() == hit
+
+    # (a) one row's text changes in one file, rewritten in place (with its
+    # checksum sidecar, as a Hadoop writer leaves it)
+    part = sorted(raw_path.glob("part-*.parquet"))[0]
+    row = spark.read.parquet(str(part)).select(
+        "url", "warc_ts", F.to_date("warc_ts").cast("string").alias("day")
+    ).first()
+    hit_row = (F.col("url") == row["url"]) & (F.col("warc_ts") == row["warc_ts"])
+    staged = tmp_path / "staged"
+    spark.read.parquet(str(part)).withColumn(
+        "text", F.when(hit_row, F.concat("text", F.lit("!"))).otherwise(F.col("text"))
+    ).coalesce(1).write.parquet(str(staged))
+    (new,) = staged.glob("part-*.parquet")
+    os.replace(new, part)
+    os.replace(new.with_name(f".{new.name}.crc"), part.with_name(f".{part.name}.crc"))
+    raw = spark.read.parquet(str(raw_path))
+    written = rollup(raw)
+    assert stamp() != hit
+    assert {(t, d) for t, d in written if t != "7d"} == {("1h", row["day"]), ("1d", row["day"])}
+    assert len([t for t, _ in written if t == "7d"]) == 1
+    assert_tiers_match(raw)
+
+    # (b) derived sources over the same files take the scan: dropping one
+    # url rebuilds its days, and the union restoring it rebuilds them again
+    hit = stamp()
+    kept = raw.filter(F.col("url") != row["url"])
+    assert rollup(kept)
+    assert_tiers_match(kept, (("1h", "h"),))
+    assert rollup(kept.unionByName(raw.filter(F.col("url") == row["url"])))
+    assert_tiers_match(raw)
+    assert stamp() == hit
+
+    # (c) the same files under another session time zone name miss the memo
+    # (the engine's day boundaries are UTC, so "GMT" keeps every day)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "GMT")
+    try:
+        assert rollup(spark.read.parquet(str(raw_path))) == set()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert stamp() != hit
+
+    # (d) unchanged files, coarse tiers lost: resume rebuilds them from the
+    # memoized fingerprints; the memo is read, not rewritten
+    assert rollup(spark.read.parquet(str(raw_path))) == set()
+    hit = stamp()
+    for tier in ("1d", "7d"):
+        _sh.rmtree(store.tier_path(tier))
+        _sh.rmtree(store.base / "_manifests" / tier)
+    assert {t for t, _ in rollup(spark.read.parquet(str(raw_path)))} == {"1d", "7d"}
+    assert stamp() == hit
+    assert_tiers_match(raw, (("1d", "D"), ("7d", "7D")))
+
+
 def test_text_invariant_through_pipeline(spark, web, tmp_path):
     """sha256(text) per url is unchanged by rollup reads/writes (FIXTURES §1)."""
     before = (

@@ -13,11 +13,13 @@ import os
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 
 SPARK_SUBMIT = shutil.which("spark-submit")
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _run_job(zip_path, src, store, extra=()):
@@ -33,7 +35,7 @@ def _run_job(zip_path, src, store, extra=()):
         *extra,
     ]
     out = subprocess.run(
-        cmd, capture_output=True, text=True, timeout=420, cwd="/root/repo",
+        cmd, capture_output=True, text=True, timeout=420, cwd=REPO,
         env=env,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -65,8 +67,14 @@ def test_rollup_job_via_spark_submit(spark, tmp_path):
     h1 = spark.read.parquet(f"{store}/tier=1h")
     assert h1.count() == sum(l["rows"] for l in per_part if l["tier"] == "1h")
 
-    # second submission: checkpoint resume — nothing re-written
+    # second submission: checkpoint resume — nothing re-written, and the
+    # new JVM reads the per-day fingerprints from the file-set memo (a miss
+    # would replace the memo file)
+    memo = os.path.join(store, "_manifests", "_source_days.json")
+    before = os.stat(memo)
     lines2 = _run_job(zip_path, src, store)
     summary2 = [l for l in lines2 if "written_partitions" in l][-1]
     assert summary2["written_partitions"] == 0
     assert summary2["resumed_skipped"] is True
+    after = os.stat(memo)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
