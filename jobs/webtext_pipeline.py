@@ -135,41 +135,22 @@ def run_pipeline(
         # Backoff n-gram model of the reference corpus and keep the
         # head/middle buckets. ppl_reference="self" fits on the surviving
         # corpus itself (drop-the-tail heuristic).
-        from pytimetk_spark.webtext.lm import (
-            fit_ngram_lm,
-            perplexity_buckets,
-            score_perplexity,
-        )
+        from pytimetk_spark.webtext.lm import fit_ngram_lm, lm_filter
 
         ref = deduped if isinstance(ppl_reference, str) else ppl_reference
         model = fit_ngram_lm(ref, n=ppl_n, min_count=2)
-        scored = perplexity_buckets(
-            score_perplexity(deduped, model, n=ppl_n)
-        )
-        deduped = deduped.join(
-            scored.filter(F.col("ppl_bucket").isin(*ppl_keep))
-            .select("doc_id", "ppl", "ppl_bucket"),
-            "doc_id",
-        )
+        deduped = lm_filter(deduped, model, keep=ppl_keep, n=ppl_n)
         stats["n_after_ppl_gate"] = deduped.count()
 
     if quality_target is not None:
         # GPT-3-style trained gate: target-vs-surviving-corpus LR,
         # Pareto(alpha) stochastic keep (deterministic md5 draws)
         from pytimetk_spark.webtext.quality_model import (
-            fit_quality_classifier,
-            pareto_filter,
-            score_quality,
+            quality_classifier_filter,
         )
 
-        qmodel = fit_quality_classifier(quality_target, deduped)
-        qkept = pareto_filter(
-            score_quality(deduped, qmodel),
-            alpha=quality_alpha, seed=quality_seed,
-        )
-        deduped = deduped.join(
-            qkept.select("doc_id", "quality_prob", "pareto_draw"),
-            "doc_id",
+        deduped = quality_classifier_filter(
+            deduped, quality_target, alpha=quality_alpha, seed=quality_seed
         )
         stats["n_after_quality_classifier"] = deduped.count()
 

@@ -13,7 +13,6 @@ from pytimetk_spark.rollup.tiers import (
     rollup_raw_to_tier,
     rollup_tier_to_tier,
 )
-from pytimetk_spark.rollup.bucketed import read_table, save_bucketed
 from pytimetk_spark.rollup.store import TierStore, run_rollup
 from pytimetk_spark.rollup.retention import apply_retention
 from pytimetk_spark.rollup.sketch import (

@@ -2,7 +2,6 @@ from pytimetk_spark.webtext.dedup import (
     connected_components,
     dedup_exact,
     dedup_paragraphs,
-    duplicate_passages,
     embedding_near_dup_pairs,
     exact_duplicate_groups,
     minhash_dedup,
@@ -11,11 +10,9 @@ from pytimetk_spark.webtext.dedup import (
     ngram_jaccard_pairs,
     shingle_tokens,
     simhash,
-    simhash_near_dup_pairs,
 )
 from pytimetk_spark.webtext.similarity import (
     cosine_topk_bruteforce,
-    hash_embed,
     ivf_ann,
     lsh_bucket_ann,
     normalize_embeddings,
@@ -26,11 +23,9 @@ from pytimetk_spark.webtext.textstats import (
     language_id,
     quality_score,
     repetition_signals,
-    script_profile,
     token_stats,
     url_features,
 )
-from pytimetk_spark.webtext.multimodal import decode_image_batch
 from pytimetk_spark.webtext.cleaning import (
     c4_line_filter,
     decontaminate,
@@ -44,7 +39,6 @@ from pytimetk_spark.webtext.lm import (
     fit_ngram_lm,
     lm_filter,
     perplexity_buckets,
-    prune_ngram_lm,
     score_perplexity,
 )
 from pytimetk_spark.webtext.quality_model import (
@@ -60,4 +54,3 @@ from pytimetk_spark.webtext.sampling import (
     temperature_mixture_weights,
     temperature_sample,
 )
-from pytimetk_spark.webtext.pq import pq_encode, pq_search, pq_train

@@ -2,12 +2,12 @@
 
 Real byte-pair encoding (Sennrich et al. 2016) learned FROM the corpus
 itself — no external vocab file needed, which keeps the engine
-self-contained in this environment. Same split as the other fitted
-operators (PQ codebooks, IVF centroids): ``bpe_train`` fits the merge
-table on a bounded driver-side sample (merge statistics need a sketch,
-not a pass over 100 TB), ``bpe_encode`` applies it to the full corpus
-in one Arrow pass with per-batch word caching (natural text repeats
-words heavily, so the amortized cost per token is a dict hit).
+self-contained in this environment. Same split as the IVF centroid
+fit: ``bpe_train`` fits the merge table on a bounded driver-side sample
+(merge statistics need a sketch, not a pass over 100 TB), ``bpe_encode``
+applies it to the full corpus in one Arrow pass with per-batch word
+caching (natural text repeats words heavily, so the amortized cost per
+token is a dict hit).
 
 Token COUNTS from this path upgrade token_stats' regex approximation
 to a real subword count for compute/billing estimates; the tokens

@@ -559,49 +559,6 @@ def simhash(
     return bit_sums.select(F.col(id_col), fp.alias("simhash"))
 
 
-def simhash_near_dup_pairs(
-    sim_df: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    chunk_bits: int = 16,
-) -> DataFrame:
-    """Pairs with hamming(simhash) ≤ max_hamming. Candidates via the
-    pigeonhole trick: any pair within hamming 3 shares at least one of four
-    16-bit chunks exactly → join per chunk, verify with bit_count(xor)."""
-    chunks = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("chunk"),
-                    F.shiftright(F.col("simhash"), c * chunk_bits)
-                    .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                    .alias("key"),
-                )
-                for c in range(64 // chunk_bits)
-            ]
-        )
-    ).alias("ck")
-    ex = sim_df.select(id_col, "simhash", chunks).select(
-        id_col, "simhash", "ck.chunk", "ck.key"
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
-
-
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
 
@@ -794,110 +751,6 @@ def connected_components(
             stacklevel=2,
         )
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-
-
-def duplicate_passages(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 100,
-    stride: int = 20,
-    anchor_gram: int = 8,
-    min_docs: int = 2,
-    chunk_chars: int = 65536,
-) -> DataFrame:
-    """Cross-document repeated-passage detection — the content-defined-
-    window approximation of exact substring dedup (Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better": the
-    suffix-array ExactSubstr tier; the distributed stand-in is CDC-style
-    anchoring as in rsync/winnowing, Schleimer et al. 2003).
-
-    Window starts are CONTENT-DEFINED: position i anchors a window when
-    ``hash(text[i:i+anchor_gram]) % stride == 0`` — identical spans in
-    different documents therefore anchor at identical in-span offsets
-    regardless of their alignment in the document (the flaw of
-    fixed-stride sampling), and a shared span of length L >= window
-    anchors somewhere with probability ~1-(1-1/stride)^(L-window)
-    (>=99.4% at L = window + 100 for stride 20). Position 1 is always
-    anchored so whole-document duplicates are never missed.
-
-    Returns one row per (document, offending window): ``(id, pos,
-    passage_hash, n_docs)`` — the byte ranges a removal pass cuts.
-
-    Scale shape: documents first explode into overlapping spans of
-    ``chunk_chars`` candidate positions (+ ``window-1`` chars of overlap,
-    so no cross-boundary window is missed) — a single multi-MB crawl
-    document therefore never materializes more than a ``chunk_chars``-
-    element array or span string in any one row, bounding executor
-    memory per row regardless of document size. Within each span, ONE
-    projection builds anchor positions + window hashes (per-candidate
-    O(anchor_gram) + per-anchor O(window) char work, the inherent cost),
-    one explode, one count shuffle on the 8-byte hash, one semi-join
-    back. No Python in the row path. Reported ``pos`` stays global
-    (1-based offset in the full document), and anchor decisions are
-    content-defined on the same characters, so chunking does not change
-    which windows are detected.
-    """
-    t = F.col(text_col)
-    staged = df.select(
-        F.col(id_col).alias("__id__"), t.alias("__t__"),
-        F.length(t).alias("__n__"),
-    )
-    n = F.col("__n__")
-    # span starts over the candidate range [1, n-window+1], stepped by
-    # chunk_chars; each span row carries only its own slice of text
-    span_starts = F.when(
-        n >= window, F.sequence(F.lit(1), n - window + 1, F.lit(chunk_chars))
-    ).otherwise(F.array().cast("array<int>"))
-    spans = staged.select(
-        "__id__",
-        F.explode(span_starts).alias("__s__"),
-        "__t__",
-        n,
-    ).select(
-        "__id__",
-        "__s__",
-        F.substring(
-            F.col("__t__"), F.col("__s__"),
-            chunk_chars + max(window, anchor_gram) - 1,
-        ).alias("__sp__"),
-        F.least(
-            F.lit(chunk_chars), n - window + 2 - F.col("__s__")
-        ).alias("__cnt__"),
-    )
-    sp = F.col("__sp__")
-    s0 = F.col("__s__")
-    candidates = F.sequence(F.lit(1), F.col("__cnt__"))
-    anchors = F.filter(
-        candidates,
-        lambda i: ((s0 + i) == 2)  # global position 1: always anchored
-        | (F.pmod(F.xxhash64(F.substring(sp, i, anchor_gram)),
-                  F.lit(stride)) == 0),
-    )
-    wins = F.transform(
-        anchors,
-        lambda i: F.struct(
-            (s0 + i - 1).cast("int").alias("pos"),
-            F.xxhash64(F.substring(sp, i, window)).alias("h"),
-        ),
-    )
-    exploded = spans.select(
-        "__id__", F.explode(wins).alias("w")
-    ).select("__id__", "w.pos", "w.h")
-    repeated = (
-        exploded.groupBy("h")
-        .agg(F.count_distinct("__id__").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
-    return (
-        exploded.join(repeated, "h")
-        .select(
-            F.col("__id__").alias(id_col),
-            F.col("pos"),
-            F.col("h").alias("passage_hash"),
-            "n_docs",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

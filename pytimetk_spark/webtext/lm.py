@@ -485,43 +485,3 @@ def lm_filter(
         id_col, "ppl", "ppl_bucket"
     )
     return df.join(kept, id_col, "inner")
-
-
-def prune_ngram_lm(
-    model: DataFrame, n: int, top_k: int
-) -> DataFrame:
-    """Bound model size by keeping only the ``top_k`` most frequent
-    continuation words per context at the HIGHEST order (ties broken by
-    gram text for determinism). Lower orders are untouched: a pruned
-    leaf g_n simply backs off to its (n-1)-gram score.
-
-    Only the leaf order may be pruned this way — denominator contexts
-    are (n-1)-grams, so dropping lower-order rows could leave a
-    surviving numerator without its denominator (the min_count filter
-    in ``fit_ngram_lm`` preserves that invariant; per-context top-k
-    does not). The leaf level dominates model cardinality, so this is
-    where the broadcast-size win lives (the same shape as KenLM-style
-    count pruning of the highest order).
-
-    One window over (context) partitions of the order-n slice — the
-    model is bucket/context-sized, far smaller than the corpus."""
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1, got {top_k}")
-    from pyspark.sql import Window
-
-    leaf = model.filter(F.col("order") == n)
-    rest = model.filter(F.col("order") != n)
-    ctx = F.when(
-        F.size(F.split(F.col("gram"), " ")) > 1,
-        F.expr("substring_index(gram, ' ', size(split(gram, ' ')) - 1)"),
-    ).otherwise(F.lit(""))
-    w = Window.partitionBy("__ctx__").orderBy(
-        F.col("cnt").desc(), F.col("gram")
-    )
-    kept = (
-        leaf.withColumn("__ctx__", ctx)
-        .withColumn("__rk__", F.row_number().over(w))
-        .filter(F.col("__rk__") <= top_k)
-        .drop("__ctx__", "__rk__")
-    )
-    return rest.unionByName(kept)

@@ -28,7 +28,7 @@ of ml-object closures entirely. The Pareto draw uses the
 deterministic md5 uniform shared with ``sampling.py``: keep decisions
 reproduce across runs and cluster sizes. The iterative fit makes this
 pytest-pinned rather than SQL-oracle-checked (same boundary as
-BPE/PQ/IVF).
+BPE/IVF).
 """
 
 from __future__ import annotations

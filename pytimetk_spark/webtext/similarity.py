@@ -260,85 +260,3 @@ def lsh_bucket_ann(
         .filter(F.col("rank") <= k)
         .orderBy(query_id_col, "rank")
     )
-
-
-def hash_embed(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 64,
-    ngram: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """Feature-hashing text embeddings (the hashing trick, Weinberger
-    et al. 2009): each token (or word n-gram) hashes to a bucket with a
-    ±1 sign hash; the L2-normalized bucket-count vector is a real,
-    deterministic, model-free embedding baseline that plugs straight
-    into the ANN/near-dup stack (cosine_topk/ivf_ann/pq/
-    embedding_near_dup_pairs) — closing the text -> vector -> search
-    loop without any external model, and the standard fallback tier
-    when a learned encoder isn't available.
-
-    One Arrow pass; per batch the work is two numpy bincounts over the
-    concatenated token hashes (no per-doc python loops)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("__hid__", df.schema[id_col].dataType),
-        T.StructField("embedding", T.ArrayType(T.DoubleType())),
-    ])
-
-    def embed(batches):
-        from hashlib import blake2b
-
-        import numpy as np
-        import pandas as pd
-
-        salt = seed.to_bytes(8, "little", signed=True)
-        hcache: dict[str, int] = {}
-
-        def stable_h(g: str) -> int:
-            # blake2b, NOT python hash(): the builtin is process-salted,
-            # which would silently break cross-run determinism
-            v = hcache.get(g)
-            if v is None:
-                v = int.from_bytes(
-                    blake2b(g.encode(), digest_size=8, key=salt).digest(),
-                    "little",
-                )
-                hcache[g] = v
-            return v
-
-        for pdf in batches:
-            if len(hcache) > 2_000_000:  # bound the per-task memo
-                hcache.clear()
-            ids = pdf["__hid__"]
-            vecs = np.zeros((len(ids), dim))
-            tok_hashes = []
-            rows = []
-            for r, t in enumerate(pdf["__t__"]):
-                toks = (t or "").lower().split()
-                grams = (toks if ngram == 1 else
-                         [" ".join(toks[i:i + ngram])
-                          for i in range(len(toks) - ngram + 1)])
-                for g in grams:
-                    tok_hashes.append(stable_h(g))
-                    rows.append(r)
-            if tok_hashes:
-                h = np.asarray(tok_hashes, np.uint64)
-                bucket = (h % np.uint64(dim)).astype(np.int64)
-                sign = np.where((h >> np.uint64(32)) & np.uint64(1), 1.0,
-                                -1.0)
-                rr = np.asarray(rows, np.int64)
-                np.add.at(vecs, (rr, bucket), sign)
-            norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-            vecs = vecs / np.maximum(norms, 1e-12)
-            yield pd.DataFrame({"__hid__": ids,
-                                "embedding": list(vecs.tolist())})
-
-    # id passes through UNCAST — string/uuid ids survive verbatim
-    src = df.select(F.col(id_col).alias("__hid__"),
-                    F.col(text_col).alias("__t__"))
-    return src.mapInPandas(embed, schema=schema).withColumnRenamed(
-        "__hid__", id_col
-    )

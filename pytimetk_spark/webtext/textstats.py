@@ -370,62 +370,6 @@ def repetition_signals(
     return rolled.selectExpr(*sel)
 
 
-_SCRIPTS = [
-    # (name, Java regex class for Spark; oracle uses RE2 \p{Name})
-    ("latin", r"\p{IsLatin}"),
-    ("cyrillic", r"\p{IsCyrillic}"),
-    ("cjk", r"\p{IsHan}"),
-    ("hiragana_katakana", r"[\p{IsHiragana}\p{IsKatakana}]"),
-    ("hangul", r"\p{IsHangul}"),
-    ("arabic", r"\p{IsArabic}"),
-    ("devanagari", r"\p{IsDevanagari}"),
-    ("greek", r"\p{IsGreek}"),
-    ("hebrew", r"\p{IsHebrew}"),
-    ("thai", r"\p{IsThai}"),
-]
-
-
-def script_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Unicode-script character profile: per document, the fraction of
-    LETTER characters belonging to each major script plus the dominant
-    script label — the script-level complement to the stopword-based
-    ``language_id`` (which only separates Latin-alphabet languages).
-    Pure Catalyst: one regexp count per script over a staged
-    letters-only column, fused into a single projection."""
-    t = F.col(text_col)
-    staged = df.withColumn(
-        "__letters__", F.regexp_replace(t, r"[^\p{L}]", "")
-    )
-    n_letters = F.greatest(F.length("__letters__"), F.lit(1))
-    out = staged
-    frac_cols = []
-    for name, cls in _SCRIPTS:
-        col = f"script_{name}_frac"
-        out = out.withColumn(
-            col,
-            F.regexp_count(F.col("__letters__"), F.lit(cls)).cast("double")
-            / n_letters,
-        )
-        frac_cols.append((name, col))
-    dominant = F.greatest(
-        *[F.struct(F.col(c).alias("f"), F.lit(n).alias("s"))
-          for n, c in frac_cols]
-    )
-    return (
-        out.withColumn("n_letters", F.length("__letters__"))
-        .withColumn(
-            "dominant_script",
-            # all-zero fractions (letters entirely in unlisted scripts)
-            # must yield NULL, not the alphabetical tie-winner
-            F.when(
-                (F.length("__letters__") > 0) & (dominant["f"] > 0),
-                dominant["s"],
-            ),
-        )
-        .drop("__letters__")
-    )
-
-
 def url_features(
     df: DataFrame, url_col: str = "url", psl_rules: DataFrame | None = None
 ) -> DataFrame:

@@ -1,6 +1,7 @@
-"""Every ``pytimetk_spark`` import in the shipped code resolves, including
-the lazy ones inside function bodies, which otherwise fail only when the
-function is first called."""
+"""Every ``pytimetk_spark`` import in the shipped code and the tests
+resolves, including the lazy ones inside function bodies, which otherwise
+fail only when the function is first called (or never, in a skipped
+test)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 SOURCES = [
-    *(p for d in ("pytimetk_spark", "jobs", "tools", "rollbench")
+    *(p for d in ("pytimetk_spark", "jobs", "tools", "rollbench", "tests")
       for p in sorted((REPO / d).rglob("*.py"))),
     REPO / "__spark_entry__.py",
     REPO / "bench.py",

@@ -231,32 +231,3 @@ def test_scale_smoke_on_documents(spark):
     assert all(r.ppl > 0 for r in out)
     buckets = {r.ppl_bucket for r in out}
     assert buckets <= {"head", "middle", "tail"}
-
-
-def test_prune_ngram_lm_leaf_topk(spark, docs):
-    from pytimetk_spark.webtext.lm import prune_ngram_lm
-
-    model = fit_ngram_lm(docs.filter("doc_id < 3"), n=3)
-    pruned = prune_ngram_lm(model, n=3, top_k=1)
-    full = {(r.order, r.gram): r.cnt for r in model.collect()}
-    kept = {(r.order, r.gram): r.cnt for r in pruned.collect()}
-    # lower orders untouched
-    assert {k: v for k, v in kept.items() if k[0] < 3} == {
-        k: v for k, v in full.items() if k[0] < 3}
-    # exactly one leaf survivor per context, and it's the argmax
-    # (ties by gram text)
-    leafs = {g: c for (o, g), c in kept.items() if o == 3}
-    by_ctx = {}
-    for (o, g), c in full.items():
-        if o == 3:
-            ctx = g.rsplit(" ", 1)[0]
-            by_ctx.setdefault(ctx, []).append((-c, g))
-    for ctx, cands in by_ctx.items():
-        best = sorted(cands)[0][1]
-        survivors = [g for g in leafs if g.rsplit(" ", 1)[0] == ctx]
-        assert survivors == [best], ctx
-    # scoring stays finite: pruned leaves back off to order 2
-    scored = score_perplexity(docs, pruned, n=3).collect()
-    assert all(math.isfinite(r.log10_score_sum) for r in scored)
-    with pytest.raises(ValueError, match="top_k"):
-        prune_ngram_lm(model, n=3, top_k=0)

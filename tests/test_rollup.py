@@ -953,65 +953,3 @@ def test_streaming_sketch_tier_lateness_closes_buckets(spark, tmp_path):
     assert list(got["url"]) == ["a", "b"]
     assert (got["cnt"].to_numpy() == want["cnt"].to_numpy()).all()
     assert np.allclose(got["p50"], want["p50"], rtol=0.05)
-
-
-def test_bucketed_tier_tables_join_without_exchange(spark, tmp_path):
-    """Cross-job co-location: tier tables saved with bucketBy(url) join
-    on url and aggregate by url with NO Exchange in the plan — the
-    persisted analogue of the in-job single-repartition rule (and of
-    Iceberg's bucket(N, url) transform from the north star)."""
-    from pytimetk_spark.rollup.bucketed import read_table, save_bucketed
-    from pytimetk_spark.rollup.tiers import rollup_raw_to_tier, rollup_tier_to_tier
-    from pytimetk_spark.sources.webpages import generate_webpages
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bktest LOCATION '{tmp_path}/wh'"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        web = generate_webpages(
-            spark, n_urls=50, crawls_per_url=4, days=3, n_domains=5, seed=3
-        ).select("url", "warc_ts", F.length("text").alias("plen"))
-        h1 = rollup_raw_to_tier(web, "url", "warc_ts", "plen", "h")
-        d1 = rollup_tier_to_tier(h1, "D")
-        save_bucketed(h1, "bktest.tier_1h", 8, "url",
-                      sort_cols=("url", "bucket_ts"))
-        save_bucketed(d1, "bktest.tier_1d", 8, "url",
-                      sort_cols=("url", "bucket_ts"))
-
-        t1h = read_table(spark, "bktest.tier_1h")
-        t1d = read_table(spark, "bktest.tier_1d")
-
-        # disable broadcast so the join exercises the co-location path
-        # (at 100-TB tier sizes neither side broadcasts anyway)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-        # url-keyed join between tiers: bucket layout co-locates both
-        # sides — no Exchange anywhere in the join plan
-        joined = t1h.join(t1d.select("url", F.col("cnt").alias("cnt_d")),
-                          "url")
-        jplan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in jplan, jplan
-        assert joined.count() > 0
-
-        # url groupBy over one bucketed table: shuffle-free aggregation
-        agg = t1h.groupBy("url").agg(F.sum("cnt").alias("c"))
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in aplan, aplan
-        got = {r.url: r.c for r in agg.collect()}
-        want = {r.url: r.c for r in
-                h1.groupBy("url").agg(F.sum("cnt").alias("c")).collect()}
-        assert got == want
-
-        # a plain parquet read of the SAME files loses the bucket spec
-        # (documented footgun: always read via the table)
-        loc = spark.sql(
-            "DESCRIBE TABLE EXTENDED bktest.tier_1h"
-        ).filter("col_name = 'Location'").collect()[0].data_type
-        raw = spark.read.parquet(loc.replace("file:", ""))
-        rplan = (raw.groupBy("url").count()
-                 ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" in rplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP DATABASE IF EXISTS bktest CASCADE")

@@ -1,6 +1,6 @@
-"""Tests for dedup / similarity / text analysis / byte features / image
-decode over the driver testdata (documents.parquet, embeddings.parquet)
-plus planted synthetic duplicates."""
+"""Tests for dedup / similarity / text analysis / byte features over the
+testdata parquet (documents.parquet, embeddings.parquet) plus planted
+synthetic duplicates."""
 
 from __future__ import annotations
 
@@ -18,9 +18,7 @@ from pytimetk_spark.webtext.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_dup_pairs,
 )
-from pytimetk_spark.webtext.multimodal import decode_image_batch
 from pytimetk_spark.webtext.similarity import cosine_topk_bruteforce, lsh_bucket_ann
 from pytimetk_spark.webtext.textstats import (
     byte_stats_features,
@@ -196,12 +194,9 @@ def test_minhash_batch_degenerate_rows_vectorized():
 
 
 def test_simhash_near_dup(spark, planted):
-    sh = simhash(planted)
-    pairs = simhash_near_dup_pairs(sh, max_hamming=6).toPandas()
-    got = set(map(tuple, pairs[["id_a", "id_b"]].values.tolist()))
-    assert (0, 10_000) in got  # identical text → hamming 0
-    ham = pairs.set_index(["id_a", "id_b"])["hamming"]
-    assert ham.loc[(0, 10_000)] == 0
+    sh = simhash(planted).filter(F.col("doc_id").isin(0, 10_000)).toPandas()
+    fp = sh.set_index("doc_id")["simhash"]
+    assert fp.loc[0] == fp.loc[10_000]  # identical text → equal fingerprint
 
 
 def test_embedding_near_dup(spark):
@@ -360,100 +355,6 @@ def test_multimodal_byte_features(spark, docs):
     assert (out["hist16"].apply(len) == 16).all()
 
 
-def test_multimodal_decode_stub(spark, docs):
-    src = docs.withColumn("blob", F.to_binary(F.col("text"), F.lit("utf-8"))).limit(20)
-    fake = decode_image_batch(src, "blob", fake=True).toPandas()
-    assert list(fake.columns) == ["doc_id", "n_bytes", "width", "height", "features"]
-    assert (fake["width"] == 224).all()
-    assert (fake["features"].apply(len) == 8).all()
-    with pytest.raises(Exception, match="NotImplementedError|decode requires"):
-        decode_image_batch(src, "blob", fake=False).collect()
-    # JPEG, GIF and WebP have no decoder: each is refused, never
-    # mis-decoded, and fake=True still gives each its stand-in row
-    blobs = [b"\xff\xd8\xff\xe0" + bytes(60), b"GIF89a" + bytes(60),
-             b"RIFF\x44\x00\x00\x00WEBPVP8 " + bytes(56)]
-    refused = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3], "blob": blobs})
-    )
-    for i in (1, 2, 3):
-        with pytest.raises(Exception, match="NotImplementedError"):
-            decode_image_batch(
-                refused.filter(F.col("doc_id") == i), "blob", fake=False
-            ).collect()
-    stand_in = (
-        decode_image_batch(refused, "blob", fake=True)
-        .toPandas().sort_values("doc_id")
-    )
-    assert stand_in["doc_id"].tolist() == [1, 2, 3]
-    assert stand_in["n_bytes"].tolist() == [len(b) for b in blobs]
-    assert (stand_in["features"].apply(len) == 8).all()
-
-
-def _make_bmp(pix: np.ndarray) -> bytes:
-    """Minimal 24-bpp bottom-up BMP from an HxWx3 uint8 RGB array."""
-    import struct
-
-    h, w = pix.shape[:2]
-    stride = (w * 3 + 3) & ~3
-    body = bytearray()
-    for row in pix[::-1]:  # bottom-up
-        line = bytearray()
-        for r, g, b in row:
-            line += bytes((b, g, r))
-        line += b"\x00" * (stride - len(line))
-        body += line
-    header = struct.pack(
-        "<2sIHHI", b"BM", 54 + len(body), 0, 0, 54
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                    2835, 2835, 0, 0)
-    return bytes(header) + bytes(body)
-
-
-def _make_ppm(pix: np.ndarray) -> bytes:
-    h, w = pix.shape[:2]
-    return f"P6\n# test\n{w} {h}\n255\n".encode() + pix.tobytes()
-
-
-def test_real_image_decode_bmp_ppm(spark):
-    from pytimetk_spark.webtext.multimodal import (
-        _decode_uncompressed_image,
-        decode_image_batch,
-    )
-
-    rng = np.random.RandomState(9)
-    pix = rng.randint(0, 256, (10, 7, 3)).astype(np.uint8)
-    # kernel-level: both containers round-trip to the exact pixels
-    np.testing.assert_array_equal(_decode_uncompressed_image(_make_bmp(pix)), pix)
-    np.testing.assert_array_equal(_decode_uncompressed_image(_make_ppm(pix)), pix)
-    assert _decode_uncompressed_image(b"\x89PNG\r\n") is None  # compressed
-
-    pdf = pd.DataFrame(
-        {"doc_id": [1, 2], "img": [_make_bmp(pix), _make_ppm(pix)]}
-    )
-    out = (
-        decode_image_batch(
-            spark.createDataFrame(pdf), "img", target_size=(4, 4)
-        )
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert (out["width"] == 4).all() and (out["height"] == 4).all()
-    # identical pixels through either container -> identical features
-    np.testing.assert_allclose(
-        np.array(out.loc[0, "features"]), np.array(out.loc[1, "features"])
-    )
-    np.testing.assert_allclose(np.array(out.loc[0, "features"]).sum(), 1.0,
-                               rtol=1e-6)
-    # compressed bytes still raise (stub tier), fake=True still works
-    bad = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [3], "img": [b"\x89PNG\r\n\x1a\n"]})
-    )
-    with pytest.raises(Exception, match="NotImplementedError|PIL"):
-        decode_image_batch(bad, "img").collect()
-    assert decode_image_batch(bad, "img", fake=True).count() == 1
-
-
 def test_shed_observation_and_minhash_cache_release(spark):
     """The r5 'no silent caps' plumbing: (a) the shed Observation reports
     how many buckets/rows the max_bucket cap dropped, collected during the
@@ -499,253 +400,6 @@ def test_shed_observation_and_minhash_cache_release(spark):
     assert release_minhash_cache(deduped) is True
     assert not sigs.storageLevel.useMemory and not sigs.storageLevel.useDisk
     assert release_minhash_cache(deduped) is False
-
-
-def _make_png(pix: np.ndarray, color: int, filters=None, palette=None,
-              interlace: int = 0) -> bytes:
-    """Minimal PNG encoder (test fixture): forward-filters each row with
-    the given filter type (cycling), so every unfilter path is exercised.
-    ``pix``: HxW (gray/palette-index), HxWx2 (gray+alpha), HxWx3 (RGB),
-    HxWx4 (RGBA) uint8."""
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        c = ctype + data
-        return struct.pack(">I", len(data)) + c + struct.pack(
-            ">I", zlib.crc32(c) & 0xFFFFFFFF
-        )
-
-    h, w = pix.shape[:2]
-    ch = 1 if pix.ndim == 2 else pix.shape[2]
-    bpp = ch
-    filters = filters or [0]
-
-    def filter_rows(flat):
-        enc_rows = bytearray()
-        prev = np.zeros(flat.shape[1], np.int32)
-        for y in range(flat.shape[0]):
-            f = filters[y % len(filters)]
-            r = flat[y]
-            if f == 0:
-                enc = r.copy()
-            elif f == 1:  # Sub
-                left = np.concatenate([np.zeros(bpp, np.int32), r[:-bpp]])
-                enc = (r - left) & 0xFF
-            elif f == 2:  # Up
-                enc = (r - prev) & 0xFF
-            elif f == 3:  # Average
-                left = np.concatenate([np.zeros(bpp, np.int32), r[:-bpp]])
-                enc = (r - ((left + prev) >> 1)) & 0xFF
-            else:  # Paeth
-                left = np.concatenate([np.zeros(bpp, np.int32), r[:-bpp]])
-                upleft = np.concatenate(
-                    [np.zeros(bpp, np.int32), prev[:-bpp]]
-                )
-                p = left + prev - upleft
-                pa, pb, pc = (np.abs(p - left), np.abs(p - prev),
-                              np.abs(p - upleft))
-                pred = np.where((pa <= pb) & (pa <= pc), left,
-                                np.where(pb <= pc, prev, upleft))
-                enc = (r - pred) & 0xFF
-            enc_rows.append(f)
-            enc_rows += enc.astype(np.uint8).tobytes()
-            prev = r
-        return enc_rows
-
-    grid = pix.reshape(h, w, ch).astype(np.int32)
-    raw = bytearray()
-    if interlace:
-        from pytimetk_spark.webtext.png import ADAM7_PASSES
-
-        for x0, y0, dx, dy in ADAM7_PASSES:
-            sub = grid[y0::dy, x0::dx]
-            if sub.shape[0] and sub.shape[1]:
-                raw += filter_rows(sub.reshape(sub.shape[0], -1))
-    else:
-        raw = filter_rows(grid.reshape(h, w * ch))
-    out = bytearray(b"\x89PNG\r\n\x1a\n")
-    out += chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0,
-                                      interlace))
-    if palette is not None:
-        out += chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-    out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    out += chunk(b"IEND", b"")
-    return bytes(out)
-
-
-def test_png_decode_exact_roundtrip_all_filters():
-    """PNG is lossless: decode must reproduce EXACT pixels for every
-    color type, with rows cycling through all five filter types so each
-    unfilter recurrence (None/Sub/Up/Average/Paeth) is hit."""
-    from pytimetk_spark.webtext.png import decode_png
-
-    rng = np.random.RandomState(4)
-    filters = [0, 1, 2, 3, 4, 4, 3, 2, 1]
-    rgb = rng.randint(0, 256, (23, 17, 3)).astype(np.uint8)
-    np.testing.assert_array_equal(
-        decode_png(_make_png(rgb, color=2, filters=filters)), rgb
-    )
-    gray = rng.randint(0, 256, (23, 17)).astype(np.uint8)
-    out = decode_png(_make_png(gray, color=0, filters=filters))
-    np.testing.assert_array_equal(out[..., 0], gray)
-    np.testing.assert_array_equal(out[..., 1], gray)
-    # palette
-    palette = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.randint(0, 16, (23, 17)).astype(np.uint8)
-    np.testing.assert_array_equal(
-        decode_png(_make_png(idx, color=3, filters=filters, palette=palette)),
-        palette[idx],
-    )
-    # RGBA: fully-opaque alpha must reproduce RGB exactly; transparent
-    # composites to white
-    rgba = np.dstack([rgb, np.full((23, 17), 255, np.uint8)])
-    np.testing.assert_array_equal(
-        decode_png(_make_png(rgba, color=6, filters=filters)), rgb
-    )
-    rgba[..., 3] = 0
-    np.testing.assert_array_equal(
-        decode_png(_make_png(rgba, color=6, filters=filters)),
-        np.full((23, 17, 3), 255, np.uint8),
-    )
-    # gray+alpha opaque
-    ga = np.dstack([gray, np.full((23, 17), 255, np.uint8)])
-    np.testing.assert_array_equal(
-        decode_png(_make_png(ga, color=4, filters=filters))[..., 0], gray
-    )
-
-
-def test_png_adam7_interlace_roundtrip():
-    """Adam7 rows live in 7 independently-filtered sub-images; decode
-    must reassemble the exact pixel grid for every color type, for
-    sizes that exercise empty passes (tiny images) and ragged pass
-    edges (dims not multiples of 8)."""
-    from pytimetk_spark.webtext.png import decode_png
-
-    rng = np.random.RandomState(11)
-    filters = [0, 1, 2, 3, 4]
-    for h, w in [(23, 17), (8, 8), (1, 1), (2, 3), (5, 40), (9, 1)]:
-        rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-        np.testing.assert_array_equal(
-            decode_png(_make_png(rgb, color=2, filters=filters,
-                                 interlace=1)),
-            rgb, err_msg=f"{h}x{w}",
-        )
-    gray = rng.randint(0, 256, (19, 21)).astype(np.uint8)
-    out = decode_png(_make_png(gray, color=0, filters=filters, interlace=1))
-    np.testing.assert_array_equal(out[..., 0], gray)
-    rgba = rng.randint(0, 256, (13, 10, 4)).astype(np.uint8)
-    dec = decode_png(_make_png(rgba, color=6, filters=filters, interlace=1))
-    af = rgba[..., 3:4].astype(float) / 255.0
-    expect = np.clip(rgba[..., :3] * af + 255.0 * (1 - af), 0, 255)
-    np.testing.assert_array_equal(dec, expect.astype(np.uint8))
-
-
-def test_png_decoder_rejects_out_of_scope(spark):
-    from pytimetk_spark.webtext.multimodal import decode_image_batch
-    from pytimetk_spark.webtext.png import decode_png
-
-    rng = np.random.RandomState(5)
-    rgb = rng.randint(0, 256, (9, 9, 3)).astype(np.uint8)
-    assert decode_png(b"\xff\xd8\xff") is None  # not PNG
-    bad = bytearray(_make_png(rgb, color=2))
-    bad[28] = 2  # unknown interlace method
-    assert decode_png(bytes(bad)) is None
-    # end-to-end through decode_image_batch: PNG exact == BMP features
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2],
-        "img": [_make_bmp(rgb), _make_png(rgb, color=2, filters=[0, 4])],
-    })
-    out = (
-        decode_image_batch(spark.createDataFrame(pdf), "img",
-                           target_size=(8, 8))
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    np.testing.assert_allclose(np.array(out.loc[0, "features"]),
-                               np.array(out.loc[1, "features"]))
-
-
-def test_png_decoder_rejects_bombs():
-    """Attacker-controlled crawl blobs: a tiny IDAT declaring a 2^31-pixel
-    IHDR (allocation bomb) and an IDAT inflating far past the declared
-    geometry (decompression bomb) must both return None WITHOUT
-    allocating header-declared buffers (ADVICE r5 png.py:72)."""
-    import struct
-    import zlib
-
-    from pytimetk_spark.webtext.png import decode_png
-
-    def chunk(ctype, data):
-        c = ctype + data
-        return struct.pack(">I", len(data)) + c + struct.pack(
-            ">I", zlib.crc32(c) & 0xFFFFFFFF
-        )
-
-    # 1) allocation bomb: 65500 x 65500 RGB header (4.3 G pixels), tiny body
-    bomb = bytearray(b"\x89PNG\r\n\x1a\n")
-    bomb += chunk(b"IHDR", struct.pack(">IIBBBBB", 65500, 65500, 8, 2, 0, 0, 0))
-    bomb += chunk(b"IDAT", zlib.compress(b"\x00" * 64))
-    bomb += chunk(b"IEND", b"")
-    assert decode_png(bytes(bomb)) is None
-
-    # 2) decompression bomb: sane 4x4 geometry, IDAT inflating to 100 MB
-    bomb2 = bytearray(b"\x89PNG\r\n\x1a\n")
-    bomb2 += chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0))
-    bomb2 += chunk(b"IDAT", zlib.compress(b"\x00" * (100 * 1024 * 1024)))
-    bomb2 += chunk(b"IEND", b"")
-    assert decode_png(bytes(bomb2)) is None
-
-    # 3) zero-dimension header
-    z = bytearray(b"\x89PNG\r\n\x1a\n")
-    z += chunk(b"IHDR", struct.pack(">IIBBBBB", 0, 4, 8, 2, 0, 0, 0))
-    z += chunk(b"IDAT", zlib.compress(b""))
-    z += chunk(b"IEND", b"")
-    assert decode_png(bytes(z)) is None
-
-    # 4) a well-formed image still decodes exactly (guards didn't tighten
-    #    the happy path)
-    rng = np.random.RandomState(7)
-    rgb = rng.randint(0, 256, (6, 5, 3)).astype(np.uint8)
-    np.testing.assert_array_equal(decode_png(_make_png(rgb, color=2)), rgb)
-
-
-def test_codec_roundtrips_hypothesis():
-    """Property test over random image shapes/content for the PNG
-    decoder: lossless (bit-exact) under a random per-row filter mix,
-    plain or Adam7. Kernel-level (no Spark job per example), so examples
-    are cheap."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from pytimetk_spark.webtext.png import decode_png
-
-    @settings(
-        max_examples=25, deadline=None, derandomize=True,
-        suppress_health_check=list(HealthCheck),
-    )
-    @given(st.data())
-    def run(data):
-        rng = np.random.RandomState(data.draw(st.integers(0, 10_000)))
-        h = data.draw(st.integers(1, 40))
-        w = data.draw(st.integers(1, 40))
-        smooth = data.draw(st.booleans())
-        if smooth:
-            yy, xx = np.mgrid[0:h, 0:w]
-            base = (xx * rng.randint(1, 5) + yy * rng.randint(1, 5)) % 256
-            rgb = np.stack([base, 255 - base, (base * 2) % 256],
-                           axis=-1).astype(np.uint8)
-        else:
-            rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-
-        # PNG: bit-exact under a random filter mix, plain or Adam7
-        filters = [data.draw(st.integers(0, 4)) for _ in range(5)]
-        np.testing.assert_array_equal(
-            decode_png(_make_png(rgb, color=2, filters=filters,
-                                 interlace=data.draw(st.integers(0, 1)))),
-            rgb,
-        )
-
-    run()
 
 
 def _repetition_reference(text, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):
@@ -968,80 +622,6 @@ def test_connected_components_string_ids_and_null_guard(spark):
         connected_components(bad)
 
 
-def test_duplicate_passages_chunking_bounds_rows(spark):
-    """duplicate_passages explodes documents into bounded spans (ADVICE
-    r5 dedup.py:630): a document much longer than chunk_chars must find
-    the same cross-document passages as the unchunked path — including
-    a shared span that straddles a chunk boundary — while never
-    building a per-row array longer than chunk_chars."""
-    from pytimetk_spark.webtext.dedup import duplicate_passages
-
-    rng = np.random.RandomState(3)
-    alph = np.array(list("abcdefgh "))
-    shared = "".join(rng.choice(alph, 300))
-    # place the shared passage straddling the 1000-char chunk boundary
-    long_doc = ("".join(rng.choice(alph, 900)) + shared
-                + "".join(rng.choice(alph, 2200)))
-    other = "".join(rng.choice(alph, 150)) + shared + "".join(
-        rng.choice(alph, 100))
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2], "text": [long_doc, other]}))
-    kw = dict(window=100, stride=20, anchor_gram=8, min_docs=2)
-    chunked = duplicate_passages(df, chunk_chars=1000, **kw).toPandas()
-    whole = duplicate_passages(df, chunk_chars=1 << 20, **kw).toPandas()
-    key = ["doc_id", "pos", "passage_hash", "n_docs"]
-    pd.testing.assert_frame_equal(
-        chunked.sort_values(key).reset_index(drop=True)[key],
-        whole.sort_values(key).reset_index(drop=True)[key],
-    )
-    # the planted shared span was actually detected in both docs
-    assert set(chunked["doc_id"]) == {1, 2}
-
-
-def test_product_quantization_adc(spark):
-    """PQ exactness + approximation properties: (1) when corpus vectors
-    ARE centroid combinations the ADC distance to a self-query is ~0 and
-    top-1 is the query itself; (2) on clustered data every ADC top-10
-    neighbor comes from the query's true cluster (point-level order
-    inside a cluster is quantized away by design); (3) codes are m
-    integers in [0, 2^nbits)."""
-    from pytimetk_spark.webtext.pq import pq_encode, pq_search, pq_train
-
-    rng = np.random.RandomState(0)
-    m, nbits, ds = 4, 4, 4
-    books = [rng.randn(16, ds) for _ in range(m)]
-    codes_true = rng.randint(0, 16, (400, m))
-    X = np.concatenate([books[j][codes_true[:, j]] for j in range(m)],
-                       axis=1)
-    corpus = spark.createDataFrame(pd.DataFrame({
-        "vec_id": range(len(X)), "embedding": list(X.tolist())}))
-    queries = spark.createDataFrame(pd.DataFrame({
-        "query_id": [0, 1], "embedding": list(X[:2].tolist())}))
-    trained = pq_train(corpus, m=m, nbits=nbits, fit_sample=400, seed=1)
-    enc = pq_encode(corpus, trained).toPandas()
-    codes = np.asarray(list(enc.sort_values("vec_id")["pq_code"]))
-    assert codes.shape == (400, m)
-    assert codes.min() >= 0 and codes.max() < 16
-    encdf = spark.createDataFrame(enc)
-    res = pq_search(encdf, queries, trained, k=5).toPandas()
-    top = res[res["rank"] == 1]
-    assert (top["adc_dist2"] < 1e-9).all()
-    assert set(top["vec_id"]) == {0, 1}
-
-    centers = rng.randn(10, 16) * 5
-    Xc = np.vstack([c + 0.1 * rng.randn(40, 16) for c in centers])
-    corpus2 = spark.createDataFrame(pd.DataFrame({
-        "vec_id": range(len(Xc)), "embedding": list(Xc.tolist())}))
-    qsrc = [0, 150, 300]
-    q2 = spark.createDataFrame(pd.DataFrame({
-        "query_id": [0, 1, 2], "embedding": list(Xc[qsrc].tolist())}))
-    tr2 = pq_train(corpus2, m=4, nbits=4, fit_sample=400, seed=3)
-    got = pq_search(pq_encode(corpus2, tr2), q2, tr2, k=10).toPandas()
-    for qi, src in enumerate(qsrc):
-        ids = got[got.query_id == qi]["vec_id"].to_numpy()
-        assert (ids // 40 == src // 40).all(), qi
-
-
 def test_webtext_pipeline_end_to_end(spark):
     """The spark-submit curation pipeline chains clean -> mask ->
     quality/repetition filter -> exact + near dedup -> decontaminate
@@ -1166,49 +746,6 @@ def test_extract_html_text(spark):
     assert bad == 0
 
 
-def test_duplicate_passages_content_defined(spark):
-    """Cross-doc repeated-passage detection with CONTENT-DEFINED window
-    anchors: a 260-char span shared at different alignments must yield
-    identical window-hash sets in both documents (fixed-stride sampling
-    would miss misaligned spans), the in-span offsets of matches must
-    agree, and a no-overlap doc contributes nothing. Whole-document
-    duplicates are caught via the always-anchored position 1."""
-    from pytimetk_spark.webtext.dedup import duplicate_passages
-
-    rng = np.random.RandomState(5)
-    letters = np.array(list("abcdefghijklmnopqrstuvwxyz "))
-
-    def mk(n):
-        return "".join(rng.choice(letters, n))
-
-    shared = mk(260)
-    offs = {1: 37, 2: 211}
-    docs = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": [mk(offs[1]) + shared + mk(80),
-                 mk(offs[2]) + shared + mk(15),
-                 mk(400)],
-    })
-    out = duplicate_passages(spark.createDataFrame(docs),
-                             window=100, stride=20).toPandas()
-    assert set(out["doc_id"]) == {1, 2}
-    assert (out["n_docs"] == 2).all()
-    g1 = out[out.doc_id == 1].set_index("passage_hash")["pos"]
-    g2 = out[out.doc_id == 2].set_index("passage_hash")["pos"]
-    assert set(g1.index) == set(g2.index) and len(g1) >= 3
-    for h in g1.index:  # same offset inside the shared span
-        assert g1[h] - offs[1] == g2[h] - offs[2]
-
-    # exact whole-doc duplicate shorter than window+stride still caught
-    short = mk(120)
-    docs2 = pd.DataFrame({"doc_id": [7, 8],
-                          "text": [short, short]})
-    out2 = duplicate_passages(spark.createDataFrame(docs2),
-                              window=100, stride=20).toPandas()
-    assert set(out2["doc_id"]) == {7, 8}
-    assert (out2["pos"] == 1).any()
-
-
 def test_bpe_train_encode(spark):
     """Corpus-fit BPE: deterministic merge learning, classic subword
     behavior on the Sennrich low/lower/newest corpus (shared stems and
@@ -1329,102 +866,6 @@ def test_repetition_signals_hypothesis(spark):
             assert abs(row[k] - v) < 1e-9, (row["doc_id"], k, row[k], v)
 
 
-def test_duplicate_passages_hypothesis(spark):
-    """Property sweep: a shared span injected at RANDOM alignments into
-    two documents is always detected when long enough for an anchor
-    (span >> window), and the matched windows' in-span offsets agree."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from pytimetk_spark.webtext.dedup import duplicate_passages
-
-    cases = []
-
-    @settings(max_examples=15, deadline=None, derandomize=True,
-              suppress_health_check=list(HealthCheck))
-    @given(st.data())
-    def gen(data):
-        rng = np.random.RandomState(data.draw(st.integers(0, 10_000)))
-        letters = np.array(list("abcdefghijklmnopqrstuvwxyz "))
-        mk = lambda n: "".join(rng.choice(letters, n))
-        shared = mk(300)  # window 100 + ~200 anchor chances
-        o1 = data.draw(st.integers(0, 150))
-        o2 = data.draw(st.integers(0, 150))
-        cases.append((mk(o1) + shared + mk(30), mk(o2) + shared + mk(30),
-                      o1, o2))
-
-    gen()
-    rows = []
-    for i, (t1, t2, _o1, _o2) in enumerate(cases):
-        rows.append((2 * i, t1))
-        rows.append((2 * i + 1, t2))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    out = duplicate_passages(spark.createDataFrame(pdf),
-                             window=100, stride=20).toPandas()
-    for i, (_t1, _t2, o1, o2) in enumerate(cases):
-        a = out[out.doc_id == 2 * i].set_index("passage_hash")["pos"]
-        b = out[out.doc_id == 2 * i + 1].set_index("passage_hash")["pos"]
-        common = set(a.index) & set(b.index)
-        assert common, f"case {i}: shared span not detected"
-        for h in common:
-            assert a[h] - o1 == b[h] - o2, f"case {i}: offsets disagree"
-
-
-def test_parsers_total_over_fuzzed_bytes():
-    """Every public decoder/parser must be TOTAL: random bytes and
-    truncated prefixes of every valid fixture return None (or a valid
-    result) — never an exception that would kill a Spark task on one
-    corrupt blob in a crawl shard."""
-    from pytimetk_spark.webtext.png import decode_png
-
-    rng = np.random.RandomState(99)
-    rgb = rng.randint(0, 256, (9, 9, 3)).astype(np.uint8)
-    fixtures = [_make_png(rgb, color=2), _make_bmp(rgb)]
-    parsers = [decode_png]
-    blobs = []
-    for f in fixtures:
-        for cut in (3, 7, len(f) // 3, len(f) // 2, len(f) - 1):
-            blobs.append(f[:cut])
-        # bit-flipped mid-stream corruption
-        ba = bytearray(f)
-        for _ in range(4):
-            ba[rng.randint(len(ba))] ^= 0xFF
-        blobs.append(bytes(ba))
-    for _ in range(30):
-        blobs.append(bytes(rng.randint(0, 256, rng.randint(0, 120),
-                                       dtype=np.uint8).tobytes()))
-    for blob in blobs:
-        for p in parsers:
-            p(blob)  # must not raise; value unchecked
-
-
-def test_script_profile(spark):
-    """Unicode-script fractions + dominant script for Latin, Cyrillic,
-    Han, kana, Hangul, Arabic mixes; letterless docs get NULL dominant;
-    a mixed doc reports proportional fractions."""
-    from pytimetk_spark.webtext.textstats import script_profile
-
-    docs = pd.DataFrame({"doc_id": [1, 2, 3, 4, 5, 6, 7],
-                         "text": ["hello latin world",
-                                  "привет мир",
-                                  "这是中文文本",
-                                  "こんにちはカタカナ",
-                                  "안녕하세요",
-                                  "1234 !!!",
-                                  "half latin половина русских"]})
-    out = (script_profile(spark.createDataFrame(docs)).toPandas()
-           .sort_values("doc_id").reset_index(drop=True))
-    assert list(out["dominant_script"][:5]) == [
-        "latin", "cyrillic", "cjk", "hiragana_katakana", "hangul"]
-    assert pd.isna(out.loc[5, "dominant_script"])
-    mixed = out.iloc[6]
-    assert 0 < mixed["script_latin_frac"] < 1
-    assert abs(mixed["script_latin_frac"] + mixed["script_cyrillic_frac"]
-               - 1.0) < 1e-9
-    # fractions are over LETTERS only: digits/punct don't dilute
-    assert out.loc[0, "script_latin_frac"] == 1.0
-
-
 def test_hash_split_and_pack_sequences(spark):
     """hash_split: proportions within tolerance, deterministic and
     partition-layout independent (no val/train leakage across re-runs);
@@ -1462,57 +903,16 @@ def test_hash_split_and_pack_sequences(spark):
     assert fills.mean() > 1200  # greedy packing actually packs
 
 
-def test_hash_embed_feature_hashing(spark):
-    """Model-free feature-hashing embeddings: unit-norm, deterministic
-    (blake2b keyed by seed — NOT process-salted builtin hash), near-dup
-    texts land closer than unrelated texts, different seeds decorrelate,
-    and the vectors plug straight into the exact ANN searcher."""
-    from pytimetk_spark.webtext.similarity import (
-        cosine_topk_bruteforce,
-        hash_embed,
-    )
-
-    docs = pd.DataFrame({"doc_id": [1, 2, 3],
-                         "text": ["spark query engine rollup tier data",
-                                  "spark query engine rollup tier value",
-                                  "completely different words entirely "
-                                  "here now"]})
-    df = spark.createDataFrame(docs)
-    v = np.array(hash_embed(df, dim=64).toPandas()
-                 .sort_values("doc_id")["embedding"].tolist())
-    np.testing.assert_allclose(np.linalg.norm(v, axis=1), 1.0)
-    assert v[0] @ v[1] > 0.6 > v[0] @ v[2]
-    v2 = np.array(hash_embed(df, dim=64).toPandas()
-                  .sort_values("doc_id")["embedding"].tolist())
-    np.testing.assert_allclose(v, v2)  # cross-job determinism
-    v_seed = np.array(hash_embed(df, dim=64, seed=7).toPandas()
-                      .sort_values("doc_id")["embedding"].tolist())
-    assert not np.allclose(v, v_seed)
-
-    emb = hash_embed(df, dim=64)
-    q = emb.filter("doc_id = 1").selectExpr("doc_id as query_id",
-                                            "embedding")
-    top = cosine_topk_bruteforce(
-        emb.withColumnRenamed("doc_id", "vec_id"), q, k=2).toPandas()
-    assert list(top["vec_id"]) == [1, 2]
-
-
 def test_review_hardening_regressions(spark):
     """Pinned fixes from the round-5 self-review: string doc ids pass
-    through hash_embed/bpe_encode/pack_sequences verbatim (a long cast
-    silently corrupted them to garbage), NULL token counts pack as 0,
-    and all-unlisted-script docs get NULL dominance (not the alphabetical
-    tie-winner)."""
+    through bpe_encode/pack_sequences verbatim (a long cast silently
+    corrupted them to garbage) and NULL token counts pack as 0."""
     from pytimetk_spark.webtext.bpe import bpe_encode, bpe_train
     from pytimetk_spark.webtext.cleaning import pack_sequences
-    from pytimetk_spark.webtext.similarity import hash_embed
-    from pytimetk_spark.webtext.textstats import script_profile
 
     sdocs = pd.DataFrame({"doc_id": ["url-a", "url-b"],
                           "text": ["hello world", "hello there"]})
     sdf = spark.createDataFrame(sdocs)
-    got = hash_embed(sdf, dim=16).toPandas()
-    assert set(got["doc_id"]) == {"url-a", "url-b"}
     merges = bpe_train(sdf, n_merges=10, fit_sample=10)
     enc = bpe_encode(sdf, merges).toPandas()
     assert set(enc["doc_id"]) == {"url-a", "url-b"}
@@ -1520,11 +920,6 @@ def test_review_hardening_regressions(spark):
         {"doc_id": ["x", "y", "z"], "bpe_n_tokens": [100, None, 50]}))
     packed = pack_sequences(toks, max_tokens=256).toPandas()
     assert set(packed["doc_id"]) == {"x", "y", "z"}  # NULL packs as 0
-
-    sp = script_profile(spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "text": ["ქართული ტექსტი"]}))
-    ).toPandas()  # Georgian: in no listed script
-    assert pd.isna(sp.loc[0, "dominant_script"])
 
 
 def test_url_features(spark):
