@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import pytimetk_spark as tk
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.rollup.tiers import (
     derived_stats,
     gap_fill_tier,
@@ -923,6 +924,7 @@ def q_ts_features_ets(spark, sf_dir):
     )
 
     def fit(pdf):
+        drop_spark_zip_finders()
         import pandas as pd
 
         pdf = pdf.sort_values("ts")

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the Python-worker hook
+every UDF body of the package calls (``drop_spark_zip_finders``).
 
 All engine semantics assume ``spark.sql.session.timeZone=UTC`` (timestamp ↔
 epoch arithmetic in the tier-bucketing expressions is tz-naive-UTC, matching
@@ -8,6 +9,8 @@ the reference's tz-naive pandas kernels).
 from __future__ import annotations
 
 import os
+import re
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -19,6 +22,36 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 1000
 
 _GIB = 1 << 30
+
+# Spark's own archives on a Python worker's path (PythonUtils.sparkPythonPath):
+# $SPARK_HOME/python/lib/pyspark.zip, py4j-<version>-src.zip and the
+# jars/spark-core_<version>.jar that holds the JVM side
+_SPARK_ZIP = re.compile(
+    r"[/\\](?:python[/\\]lib[/\\](?:pyspark|py4j-[^/\\]*-src)\.zip"
+    r"|jars[/\\]spark-core_[^/\\]*\.jar)$"
+)
+
+
+def drop_spark_zip_finders() -> None:
+    """Drop the cached import finders over Spark's own archives. Call it
+    first in every Python UDF body (``mapInArrow``, ``mapInPandas``,
+    ``applyInPandas``, ``applyInPandasWithState``).
+
+    Before every task a Python worker calls ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``). On CPython 3.10-3.11 that
+    re-reads an archive's whole directory once per cached finder over it. A
+    reused worker holds about 12 finders over pyspark.zip (1,328 entries)
+    and 2 over the spark-core jar: 0.19-0.23 s per task on a 4-core host.
+    These archives do not change while a worker lives, and
+    ``zipimport._zip_directory_cache`` keeps the parsed directory, so a later
+    import builds a new finder without a re-read. Finders over any other zip
+    (``--py-files``, ``addPyFile``) keep their per-task refresh. Only the
+    first task of a fresh worker pays."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        archive = getattr(finder, "archive", None)
+        if archive and _SPARK_ZIP.search(archive):
+            cache.pop(path, None)
 
 
 def default_driver_memory(total_bytes: int | None = None) -> str:

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.windows import warn_single_partition
 from pyspark.sql import types as T
 
@@ -244,6 +245,7 @@ def anomalize(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column).reset_index(drop=True)
         dates = pd.to_datetime(pdf[date_column])

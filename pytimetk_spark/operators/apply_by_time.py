@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.datetime import parse_freq, period_end_label, floor_date
 
 
@@ -57,6 +58,7 @@ def apply_by_time(
     keys = [*group_cols, "__bucket_start__"]
 
     def apply_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         row = {k: [v] for k, v in zip(keys, key)}
         for name in names:
             row[name] = [float(funcs[name](pdf))]

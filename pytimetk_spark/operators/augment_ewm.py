@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.windows import warn_single_partition
 from pyspark.sql import types as T
 
@@ -65,6 +66,7 @@ def augment_ewm(
         raise ValueError(f"unsupported ewm funcs: {bad}")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column).reset_index(drop=True)
         for c in cols:

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.windows import warn_single_partition
 
 from pytimetk_spark.functions.windows import ordered_window
@@ -238,6 +239,7 @@ def _grouped_apply(
     names = dict(new_cols or {})
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column).reset_index(drop=True)
         if multi_kernel is not None:

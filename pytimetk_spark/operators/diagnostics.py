@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.windows import warn_single_partition
 from pyspark.sql import types as T
 
@@ -98,6 +99,7 @@ def acf_diagnostics(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column)
         x = pdf[value_column].to_numpy(dtype=float)
@@ -148,6 +150,7 @@ def stl_diagnostics(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column).reset_index(drop=True)
         p = period or _numeric_period(pd.to_datetime(pdf[date_column]), 0)
@@ -444,6 +447,7 @@ def ts_features(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_zip_finders()
         pdf = pdf.drop(columns=["__gg__"], errors="ignore")
         pdf = pdf.sort_values(date_column)
         x = pdf[value_column].to_numpy(dtype=float)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.datetime import floor_date
 
 
@@ -131,6 +132,7 @@ def rollup_sketch_tier(
     )
 
     def build(pdf):
+        drop_spark_zip_finders()
         import pandas as pd
 
         # NULL metric rows arrive as NaN — drop them like every Spark
@@ -163,6 +165,7 @@ def rollup_sketch_tier_to_tier(
     )
 
     def merge(pdf):
+        drop_spark_zip_finders()
         import pandas as pd
 
         parts = [(np.asarray(m, float), np.asarray(w, float))
@@ -197,6 +200,7 @@ def sketch_quantiles(
     in_cols = [f.name for f in tier_df.schema.fields]
 
     def extract(batches):
+        drop_spark_zip_finders()
         for pdf in batches:
             for c, q in zip(qcols, quantiles):
                 pdf[c] = [

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.datetime import floor_date
 from pytimetk_spark.operators.pad_by_time import pad_by_time
 from pytimetk_spark.rollup.compression import (
@@ -216,6 +217,7 @@ def _encode_block_batches(batches, stats):
     """mapInArrow body of ``encode_tier_blocks``: batches arrive sorted by
     (url, bucket_ts) and a url may continue into the next batch, so the
     last url of each batch is carried into the next one."""
+    drop_spark_zip_finders()
     carry = None
     for rb in batches:
         if carry is not None:
@@ -240,10 +242,12 @@ def encode_tier_blocks(
     stream → one row (url, n_points, ts_block, blk_<stat> binaries).
 
     Shape: repartition by url with no fixed count, so AQE sizes the Python
-    stage by data (every Python task costs a fixed worker setup, ~0.25 s on
-    a 4-core host — a sub-MB tier runs as one task), sortWithinPartitions,
-    then ONE mapInArrow pass that encodes every whole url of an Arrow
-    batch with one batched codec call per stream (``encode_*_array``)."""
+    stage by data (a fresh Python worker's first task pays a fixed ~0.2 s
+    re-read of Spark's zips on a 4-core host, a later task on it under
+    1 ms, see ``drop_spark_zip_finders`` — a sub-MB tier runs as one
+    task), sortWithinPartitions, then ONE mapInArrow pass that encodes
+    every whole url of an Arrow batch with one batched codec call per
+    stream (``encode_*_array``)."""
     stats = list(stats)
     url_field = next(f for f in tier_df.schema.fields if f.name == "url")
     schema = T.StructType(
@@ -267,6 +271,7 @@ def encode_tier_blocks(
 def _decode_block_batches(batches, stats):
     """mapInArrow body of ``decode_tier_blocks``: one output batch per
     input batch, every stream of the batch decoded in one call."""
+    drop_spark_zip_finders()
     for rb in batches:
         if not rb.num_rows:
             continue

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
+
 _DUR_UNITS_MS = {
     "ms": 1, "millisecond": 1, "milliseconds": 1,
     "s": 1000, "sec": 1000, "second": 1000, "seconds": 1000,
@@ -114,6 +116,7 @@ def streaming_running_ewm(
     keep = 1.0 - alpha
 
     def fn(key, pdfs, state):
+        drop_spark_zip_finders()
         if state.hasTimedOut:
             # url idle past the watermark horizon: drop its accumulators
             # (nothing to emit — the EWM row for each event already went
@@ -278,6 +281,7 @@ def streaming_sketch_tier(
         return pd.DataFrame([row])
 
     def fn(key, pdfs, state):
+        drop_spark_zip_finders()
         if state.hasTimedOut:
             # watermark passed bucket end + lateness: flush the final
             # digest (batch-tier shape) and drop the group's state

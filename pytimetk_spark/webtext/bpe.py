@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
+
 _EOW = "</w>"
 
 
@@ -121,6 +123,7 @@ def bpe_encode(
     schema = T.StructType(fields)
 
     def encode(batches):
+        drop_spark_zip_finders()
         import pandas as pd
 
         cache: dict[str, list[str]] = {}

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
+
 # -- PII -----------------------------------------------------------------
 
 _PII_PATTERNS = {
@@ -223,6 +225,7 @@ def pack_sequences(
     ])
 
     def pack(batches):
+        drop_spark_zip_finders()
         import pandas as pd
 
         # one greedy bin state across the whole partition's batches

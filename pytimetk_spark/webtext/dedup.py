@@ -36,6 +36,8 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pytimetk_spark.config import drop_spark_zip_finders
+
 
 class BucketShedWarning(UserWarning):
     """An LSH bucket cap is active: oversized buckets (and every candidate
@@ -70,7 +72,6 @@ def _observe_shed(sizes: DataFrame, n_col: str, max_bucket: int, op: str):
     )
     return sizes, obs
 
-_MERSENNE = (1 << 61) - 1
 _MOD31 = 2147483647  # 2^31 - 1
 
 
@@ -320,6 +321,7 @@ def minhash_signatures(
     b_vec = np.array([b for _, b in params], dtype=np.int64)
 
     def sig_batches(batches):
+        drop_spark_zip_finders()
         for batch in batches:
             lst = batch.column(1)
             yield pa.RecordBatch.from_arrays(

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.webtext.dedup import _h64_sql, _q, _shingles_sql, _token_sql
 
 # compact public stopword lists (top function words per language)
@@ -520,6 +521,7 @@ def byte_stats_features(
     )
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_zip_finders()
         for pdf in batches:
             # whole-batch vectorization: ONE concatenated uint8 view + ONE
             # bincount over (row*16 + bin) — no per-blob numpy calls

@@ -2,7 +2,7 @@
 
 Session-scoped local[4] SparkSession with UTC session timezone and Arrow
 enabled — small core count keeps test latency low; scale behavior is
-exercised by bench.py at local[8] vs local[32].
+exercised by tools/scaling_bench.py at local[N] vs local[4N].
 """
 
 from __future__ import annotations

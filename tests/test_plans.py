@@ -139,10 +139,11 @@ def test_run_rollup_two_executions_one_raw_scan(spark, tmp_path):
 
 
 def test_gorilla_block_stages_sized_by_data(spark, tmp_path):
-    """Every Python task pays a fixed worker setup, so the block codecs'
-    Python stages are sized by data: encode repartitions by url with no
-    fixed count (AQE coalesces a sub-MB tier into ONE task on local[4]),
-    and decode is a single MapInArrow over the scan, with no Exchange."""
+    """A fresh Python worker's first task pays a fixed ~0.2 s setup, so
+    the block codecs' Python stages are sized by data: encode repartitions
+    by url with no fixed count (AQE coalesces a sub-MB tier into ONE task
+    on local[4]), and decode is a single MapInArrow over the scan, with no
+    Exchange."""
     from pytimetk_spark.rollup.tiers import (
         decode_tier_blocks,
         encode_tier_blocks,
