@@ -954,8 +954,9 @@ def q_ts_features_ets(spark, sf_dir):
 
 
 def q_hll_distinct_tier(spark, sf_dir):
-    """HLL distinct-count rollup tiers (rollup/sketch.py:214,241,259 —
-    native Spark Datasketches, pure Catalyst): hourly sketches of
+    """HLL distinct-count rollup tiers (rollup/sketch.py:
+    rollup_distinct_tier, rollup_distinct_tier_to_tier,
+    distinct_estimates — native Spark Datasketches, pure Catalyst): hourly sketches of
     distinct user_ids per event_type MERGE into daily sketches with
     union semantics. The sketch estimate is probabilistic but its
     DETERMINISTIC contract is the error bound: per (event_type, day),
@@ -996,15 +997,17 @@ def q_hll_distinct_tier(spark, sf_dir):
 
 
 def q_tdigest_tier(spark, sf_dir):
-    """t-digest percentile rollup tiers (rollup/sketch.py:110,152,186):
-    hourly digests of event values per event_type MERGE into monthly
-    digests without touching raw rows, then p50/p90/p99 are read off
-    each digest. t-digest guarantees RANK accuracy, so the pinned
-    invariant is the rank error of each estimate against the group's
-    raw values: |frac(value <= p_q) - q| <= max(0.05, 2/n) — a bound a
-    correct k1-scale digest at delta=100 satisfies deterministically
-    (inputs are pre-sorted, merging is order-stable). The per-bucket
-    row count rides along hash-checked as real data."""
+    """KLL percentile rollup tiers (rollup/sketch.py: rollup_sketch_tier,
+    rollup_sketch_tier_to_tier, sketch_quantiles — native Spark
+    Datasketches, pure Catalyst): hourly sketches of event values per
+    event_type MERGE into monthly sketches without touching raw rows,
+    then p50/p90/p99 are read off each sketch. KLL guarantees RANK
+    accuracy, so the pinned invariant is the rank error of each estimate
+    against the group's raw values: |frac(value <= p_q) - q| <=
+    max(0.05, 2/n) — 25x the ~0.002 worst rank error measured at k=400,
+    so the sketch's randomized compaction does not flip the 0/1 flags. The
+    contract key keeps its historical name. The per-bucket row count
+    rides along hash-checked as real data."""
     from pytimetk_spark.rollup.sketch import (
         rollup_sketch_tier,
         rollup_sketch_tier_to_tier,

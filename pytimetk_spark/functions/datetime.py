@@ -308,18 +308,6 @@ def resample_label(ts: Column, freq: str | Freq) -> Column:
     return period_end_label(start, f)
 
 
-def label_to_start(label: Column, freq: str | Freq) -> Column:
-    """Inverse of resample_label → period start (used by calendar joins)."""
-    f = parse_freq(freq)
-    if not f.label_end:
-        return label
-    if f.is_week:
-        return label - F.expr(f"interval {7 * f.n - 1} day")
-    return F.to_timestamp(
-        F.date_trunc("month", label - F.expr(f"interval {f.months - 1} month"))
-    )
-
-
 def week_of_month(ts: Column) -> Column:
     """(day - 1) // 7 + 1 — reference datetime_helpers.py:721-733."""
     return ((F.dayofmonth(ts) - F.lit(1)) / F.lit(7)).cast("int") + F.lit(1)

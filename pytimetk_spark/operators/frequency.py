@@ -70,12 +70,6 @@ def unit_and_scale_from_seconds(sec: float) -> tuple[float, str]:
     return round(sec / 31622400, 1), "Y"
 
 
-def median_diff_seconds_col(date_column: str, group_cols: Sequence[str]) -> Column:
-    """Aggregate expression: exact median of consecutive-diff seconds.
-    Requires a ``__diff_sec__`` column (see _with_diffs)."""
-    return F.expr("percentile(__diff_sec__, 0.5)")
-
-
 def _with_diffs(df: DataFrame, date_column: str, group_cols: Sequence[str]) -> DataFrame:
     w = ordered_window(group_cols, date_column, "frequency")
     ts_sec = F.col(date_column).cast("timestamp").cast("double")

@@ -6,7 +6,7 @@ bounds are the GLOBAL min/max of the date column, so every group spans the
 same range; group-constant columns are forward-filled; new rows get NaN or
 the ``fillna`` scalar).
 
-Spark plan: one tiny aggregate computes the global (or per-group) bounds,
+Spark plan: one tiny aggregate computes the global bounds,
 a ``sequence()``+``explode`` builds the calendar (|groups| × |buckets| rows —
 orders of magnitude smaller than the fact table), then ONE left join
 calendar←data on (group, ts). The calendar side is generated, never
@@ -42,23 +42,16 @@ def pad_by_time(
     start_date=None,
     end_date=None,
     fillna: float | None = None,
-    per_group_bounds: bool = False,
     sort: bool = False,
-    fill_group_constants: bool = True,
 ) -> DataFrame:
     """Insert missing timestamps at ``freq`` so every (group,) series is
     regular.
 
     * Default bounds: global min/max of ``date_column`` (reference golden:
       tests/core/test_pad_by_time.py:53-84 pads group B to the global range).
-    * ``per_group_bounds=True``: each group padded only over its own span
-      (cheaper at scale; reference pandas kernel behavior when bounds are
-      omitted and groups don't overlap).
     * value columns in inserted rows are NULL, or ``fillna``; columns
       CONSTANT within their group are filled with the group constant
-      (reference pad.py:431-438) unless ``fill_group_constants=False``
-      (gap_fill_tier disables it: a gap bucket's stats must stay
-      NULL/zero, not inherit a coincidentally-constant neighbor).
+      (reference pad.py:431-438).
     """
     group_cols = list(group_cols or [])
     f = parse_freq(freq)
@@ -74,51 +67,31 @@ def pad_by_time(
     # default-bounds path costs no extra shuffle. (The reference's
     # UNgrouped variant checks constancy on the already-padded frame —
     # inserted NaNs always break it, a provable no-op — so grouped only.)
-    need_const_fill = (
-        fill_group_constants
-        and fillna is None
-        and bool(group_cols)
-        and bool(value_cols)
-    )
+    need_const_fill = fillna is None and bool(group_cols) and bool(value_cols)
     # constancy via (min == max AND no nulls) — plain hash aggregates in
-    # the SAME pass as the bounds (round-2 used countDistinct, which adds
+    # the distinct-groups pass (round-2 used countDistinct, which adds
     # an Expand pass, plus a second join of the constants — the constants
     # now ride along the calendar rows instead, so the ffill costs zero
     # extra joins and zero extra source scans). nunique(dropna=False)==1
     # (reference pad.py:431-438) = all-equal-non-null, or all-null (which
     # fills null — a no-op — so only the first case needs a value).
     const_cols = [f"__cv_{c}__" for c in value_cols] if need_const_fill else []
-    group_stats = None
+    gmin, gmax = F.min(ts).alias("__lo__"), F.max(ts).alias("__hi__")
     if group_cols:
-        stat_aggs = []
         if need_const_fill:
-            for c in value_cols:
-                stat_aggs.append(
-                    F.when(
-                        (F.min(c) == F.max(c))
-                        & (F.max(F.col(c).isNull().cast("int")) == 0),
-                        F.min(c),
-                    ).alias(f"__cv_{c}__")
-                )
-        group_stats = df.groupBy(*group_cols).agg(
-            F.min(ts).alias("__glo__"), F.max(ts).alias("__ghi__"), *stat_aggs
-        )
-
-    if per_group_bounds and group_cols:
-        bounds = group_stats.select(
-            *group_cols,
-            *const_cols,
-            F.col("__glo__").alias("__lo__"),
-            F.col("__ghi__").alias("__hi__"),
-        )
-    else:
-        gmin, gmax = F.min(ts).alias("__lo__"), F.max(ts).alias("__hi__")
-        if group_cols:
-            distinct_groups = group_stats.select(*group_cols, *const_cols)
-            glob = df.agg(gmin, gmax)
-            bounds = distinct_groups.crossJoin(F.broadcast(glob))
+            groups = df.groupBy(*group_cols).agg(*[
+                F.when(
+                    (F.min(c) == F.max(c))
+                    & (F.max(F.col(c).isNull().cast("int")) == 0),
+                    F.min(c),
+                ).alias(f"__cv_{c}__")
+                for c in value_cols
+            ])
         else:
-            bounds = df.agg(gmin, gmax)
+            groups = df.select(*group_cols).distinct()
+        bounds = groups.crossJoin(F.broadcast(df.agg(gmin, gmax)))
+    else:
+        bounds = df.agg(gmin, gmax)
 
     lo = _to_ts_lit(start_date) if start_date is not None else F.col("__lo__")
     hi = _to_ts_lit(end_date) if end_date is not None else F.col("__hi__")

@@ -92,6 +92,51 @@ def _bucket_calendar(df: DataFrame, group_cols: list[str], f: Freq) -> DataFrame
     return agg.select(*group_cols, seq)
 
 
+def _pivot_wide(
+    result: DataFrame,
+    date_column: str,
+    group_cols: list[str],
+    value_cols: list[str],
+    fillna: float | None,
+) -> DataFrame:
+    """Pivot the long ``(groups, date, values)`` frame on the group values
+    into ``{value}_{groupval}`` columns."""
+    pivot_col = (
+        F.col(group_cols[0])
+        if len(group_cols) == 1
+        else F.concat_ws("_", *group_cols)
+    )
+    work = result.withColumn("__pivot__", pivot_col)
+    # explicit pivot values (one bounded distinct — Spark's auto-pivot
+    # collects the same set internally), so the output column ORDER is
+    # known ([date] + pivot_vals × values) and renaming is positional —
+    # no suffix parsing, which mislabeled group values that themselves
+    # end in "_{value}_{agg}"
+    pivot_vals = sorted(
+        r["__pivot__"]
+        for r in work.select("__pivot__").distinct().collect()
+        if r["__pivot__"] is not None
+    )
+    pivoted = (
+        work.groupBy(date_column)
+        .pivot("__pivot__", pivot_vals)
+        .agg(*[F.first(c).alias(f"__v{i}__") for i, c in enumerate(value_cols)])
+    )
+    new_names = [f"{ov}_{v}" for v in pivot_vals for ov in value_cols]
+    pivoted = pivoted.select(
+        date_column,
+        *[
+            F.col(f"`{c}`").alias(n)
+            for c, n in zip(pivoted.columns[1:], new_names)
+        ],
+    )
+    # pivot gaps (group absent in a bucket) honor fillna like the
+    # reference's post-unstack fillna (summarize_by_time.py:418)
+    if fillna is not None:
+        pivoted = pivoted.fillna(fillna, subset=new_names)
+    return pivoted
+
+
 def summarize_by_time(
     df: DataFrame,
     date_column: str,
@@ -147,34 +192,12 @@ def summarize_by_time(
                 custom_df, on=[*group_cols, date_column], how="full"
             )
         if wide_format and group_cols:
-            # re-enter the pivot path with the combined long frame
             out_cols = [
                 c for c in result.columns
                 if c not in (*group_cols, date_column)
             ]
-            pivot_col = (
-                F.col(group_cols[0]) if len(group_cols) == 1
-                else F.concat_ws("_", *group_cols)
-            )
-            pivoted = (
-                result.withColumn("__pivot__", pivot_col)
-                .groupBy(date_column)
-                .pivot("__pivot__")
-                .agg(*[F.first(c).alias(c) for c in out_cols])
-            )
-            renames = {}
-            for c in pivoted.columns:
-                if c == date_column:
-                    continue
-                for ov in sorted(out_cols, key=len, reverse=True):
-                    if c.endswith("_" + ov):
-                        renames[c] = f"{ov}_{c[: -(len(ov) + 1)]}"
-                        break
-                else:
-                    renames[c] = f"{out_cols[0]}_{c}"
-            result = pivoted.select(
-                date_column, *[F.col(f"`{c}`").alias(n) for c, n in renames.items()]
-            )
+            result = _pivot_wide(result, date_column, group_cols, out_cols,
+                                 fillna)
         order = [date_column] if wide_format else [*group_cols, date_column]
         return result.orderBy(*order) if sort else result
 
@@ -211,45 +234,8 @@ def summarize_by_time(
     result = result.withColumn(date_column, label).drop("__bucket_start__")
 
     if wide_format and group_cols:
-        pivot_col = (
-            F.col(group_cols[0])
-            if len(group_cols) == 1
-            else F.concat_ws("_", *group_cols)
-        )
-        work2 = result.withColumn("__pivot__", pivot_col)
-        # explicit pivot values (one bounded distinct — Spark's auto-pivot
-        # collects the same set internally), so the output column ORDER is
-        # known ([date] + pivot_vals × aggs) and renaming is positional —
-        # no suffix parsing, which mislabeled group values that themselves
-        # end in "_{value}_{agg}"
-        pivot_vals = sorted(
-            r["__pivot__"]
-            for r in work2.select("__pivot__").distinct().collect()
-            if r["__pivot__"] is not None
-        )
-        pivoted = (
-            work2.groupBy(date_column)
-            .pivot("__pivot__", pivot_vals)
-            .agg(
-                *[
-                    F.first(c).alias(f"__v{i}__")
-                    for i, c in enumerate(out_value_cols)
-                ]
-            )
-        )
-        new_names = [f"{ov}_{v}" for v in pivot_vals for ov in out_value_cols]
-        pivoted = pivoted.select(
-            date_column,
-            *[
-                F.col(f"`{c}`").alias(n)
-                for c, n in zip(pivoted.columns[1:], new_names)
-            ],
-        )
-        # pivot gaps (group absent in a bucket) honor fillna like the
-        # reference's post-unstack fillna (summarize_by_time.py:418)
-        if fillna is not None:
-            pivoted = pivoted.fillna(fillna, subset=new_names)
-        result = pivoted
+        result = _pivot_wide(result, date_column, group_cols, out_value_cols,
+                             fillna)
 
     if sort:
         order = [date_column] if wide_format else [*group_cols, date_column]

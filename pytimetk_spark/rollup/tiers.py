@@ -45,7 +45,6 @@ from pyspark.sql import types as T
 
 from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.datetime import floor_date
-from pytimetk_spark.operators.pad_by_time import pad_by_time
 from pytimetk_spark.rollup.compression import (
     decode_gorilla_many,
     decode_timestamps_many,
@@ -144,16 +143,16 @@ def derived_stats(tier_df: DataFrame) -> DataFrame:
     )
 
 
-def gap_fill_tier(tier_df: DataFrame, freq: str, fill_zero: bool = False) -> DataFrame:
+def gap_fill_tier(tier_df: DataFrame, freq: str) -> DataFrame:
     """Make each url's bucket series regular (missing intervals explicit):
     count gaps become 0, values NULL.
 
     r7 shape: one lag window over (url, bucket) emits each gap's missing
     buckets directly (``sequence(prev+1, cur-1)`` exploded), unioned with
-    the original rows — same row set as the old per-group-bounds
-    ``pad_by_time``, but with NO join: the r6 shape generated the full
-    |urls| × |buckets| calendar (≈ 11× the tier at sf1.0) and sort-merge-
-    joined the tier back into it, sorting the calendar side for nothing.
+    the original rows — each url is filled over its own span, with NO
+    join: the r6 shape generated the full |urls| × |buckets| calendar
+    (≈ 11× the tier at sf1.0) and sort-merge-joined the tier back into
+    it, sorting the calendar side for nothing.
     One exchange + a tier-sized sort replaces two exchanges and a
     calendar-sized sort (guide §2.4/§3.3). ``pad_by_time`` remains the
     general operator (global bounds, constant fill, arbitrary groups)."""
@@ -185,10 +184,7 @@ def gap_fill_tier(tier_df: DataFrame, freq: str, fill_zero: bool = False) -> Dat
     filled = tier_df.select("url", "bucket_ts", *stat_cols).unionByName(
         gap_rows
     )
-    filled = filled.fillna(0, subset=["cnt"])
-    if fill_zero:
-        filled = filled.fillna(0.0, subset=["vsum", "vsumsq"])
-    return filled
+    return filled.fillna(0, subset=["cnt"])
 
 
 # ---------------------------------------------------------------------------

@@ -11,17 +11,18 @@
   across micro-batches. Semantics match pandas ``ewm(alpha).mean()``
   (adjust=True) over the url's full history; verified against the batch
   ``augment_ewm`` under an availableNow trigger.
+* ``streaming_sketch_tier`` — the streaming percentile tier: a native
+  watermarked tumbling-window aggregate of KLL sketches, in the batch
+  sketch tier's shape.
 
 State-boundedness contract (every operator here): ``streaming_dedup_exact``
 is bounded by construction (``dropDuplicatesWithinWatermark`` drops a seen
 hash once the watermark passes it); ``streaming_running_ewm`` takes
-``idle_timeout`` and ``streaming_sketch_tier`` takes ``lateness`` — both
-arm event-time timeouts (``GroupStateTimeout.EventTimeTimeout``) that DROP
-a group's state once the watermark moves past it, so state row count
-tracks ACTIVE groups, not all groups ever seen. A closing sketch bucket is
-flushed as a final ``closed=True`` row carrying its digest, in exactly the
-batch tier shape (``closed_tier_frame``), so a ``foreachBatch`` sink can
-append it to the tier store and the digest stays mergeable downstream.
+``idle_timeout``, which arms an event-time timeout
+(``GroupStateTimeout.EventTimeTimeout``) that DROPS a url's state once the
+watermark moves past it; ``streaming_sketch_tier`` takes ``lateness``, the
+watermark delay after which Spark drops a closed bucket's window state.
+Either way state row count tracks ACTIVE groups, not all groups ever seen.
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pytimetk_spark.config import drop_spark_zip_finders
+from pytimetk_spark.functions.datetime import parse_freq
+from pytimetk_spark.rollup.sketch import KLL_K
 
 _DUR_UNITS_MS = {
     "ms": 1, "millisecond": 1, "milliseconds": 1,
@@ -216,139 +219,39 @@ def streaming_sketch_tier(
     ts_col: str = "warc_ts",
     value_col: str = "plen",
     freq: str = "h",
-    delta: float = 100.0,
-    quantiles: tuple[float, ...] = (0.5, 0.99),
     lateness: str | None = None,
 ) -> DataFrame:
-    """Streaming twin of ``rollup.sketch.rollup_sketch_tier``: per
-    (url, bucket) t-digest maintained in group state across
-    micro-batches, current percentile estimates emitted each update.
+    """Streaming twin of ``rollup.sketch.rollup_sketch_tier``: a native
+    watermarked tumbling-window aggregate emitting ``(url, bucket_ts,
+    cnt, kll)`` — the batch tier shape, so the KLL sketch stays
+    mergeable into coarser tiers via ``rollup_sketch_tier_to_tier``.
 
-    State per group = the digest's (means, weights) arrays — bounded at
-    ~delta*2 centroids regardless of how many rows the bucket has seen
-    (the whole point of the sketch: streaming percentiles with O(delta)
-    state where exact would need every value).
-
-    ``lateness`` (e.g. ``"10 minutes"``) bounds the GROUP COUNT, the
-    other axis of state growth: a watermark with that delay is applied
-    to ``ts_col``, and once the watermark passes a bucket's end +
-    ``lateness`` the bucket CLOSES — its final row is emitted with
-    ``closed = true`` and the digest arrays populated (exactly the
-    batch-tier shape; ``closed_tier_frame`` projects it), then the
-    group's state is dropped. Route closed rows to the batch tier store
-    in a ``foreachBatch`` sink and the digest stays mergeable into
-    coarser tiers. Fixed-width freqs only with ``lateness`` (bucket end
-    must be computable); with ``None``, buckets stay open until the
-    query ends (group count unbounded — dev/ad-hoc only)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from pytimetk_spark.functions.datetime import floor_date
-    from pytimetk_spark.rollup.sketch import (
-        compress,
-        digest_quantile,
-        merge_digests,
-    )
-
-    late_ms = _duration_ms(lateness) if lateness else None
-    if late_ms is not None:
-        f = freq if re.match(r"^\d", freq) else "1" + freq
-        span_ms = _duration_ms(f)  # raises on calendar freqs (MS, ...)
-
-    qcols = [f"p{round(q * 1000) / 10:g}".replace(".", "_")
-             for q in quantiles]
-    out_schema = T.StructType(
-        [T.StructField("url", T.StringType()),
-         T.StructField("bucket_ts", T.TimestampType()),
-         T.StructField("cnt", T.LongType())]
-        + [T.StructField(c, T.DoubleType()) for c in qcols]
-        + [T.StructField("closed", T.BooleanType()),
-           T.StructField("qs_means", T.ArrayType(T.DoubleType())),
-           T.StructField("qs_weights", T.ArrayType(T.DoubleType()))]
-    )
-    state_schema = T.StructType([
-        T.StructField("cnt", T.LongType()),
-        T.StructField("means", T.ArrayType(T.DoubleType())),
-        T.StructField("weights", T.ArrayType(T.DoubleType())),
-    ])
-
-    def emit(key, cnt, means, weights, closed):
-        row = {"url": key[0], "bucket_ts": key[1], "cnt": int(cnt),
-               "closed": closed,
-               "qs_means": means.tolist() if closed else None,
-               "qs_weights": weights.tolist() if closed else None}
-        for c, q in zip(qcols, quantiles):
-            row[c] = digest_quantile(means, weights, q)
-        return pd.DataFrame([row])
-
-    def fn(key, pdfs, state):
-        drop_spark_zip_finders()
-        if state.hasTimedOut:
-            # watermark passed bucket end + lateness: flush the final
-            # digest (batch-tier shape) and drop the group's state
-            cnt, means, weights = state.get
-            yield emit(key, cnt, np.asarray(means, float),
-                       np.asarray(weights, float), True)
-            state.remove()
-            return
-        if state.exists:
-            cnt, means, weights = state.get
-            means = np.asarray(means, float)
-            weights = np.asarray(weights, float)
-        else:
-            cnt, means, weights = 0, np.zeros(0), np.zeros(0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((int(cnt), means.tolist(), weights.tolist()))
-            return
-        vals = pd.concat(chunks, ignore_index=True)["__v__"].to_numpy(
-            dtype=np.float64)
-        vals = vals[~np.isnan(vals)]
-        batch_m, batch_w = compress(vals, np.ones(len(vals)), delta)
-        if len(means):
-            means, weights = merge_digests(
-                [(means, weights), (batch_m, batch_w)], delta)
-        else:
-            means, weights = batch_m, batch_w
-        cnt = int(cnt) + len(vals)
-        state.update((cnt, means.tolist(), weights.tolist()))
-        if late_ms is not None:
-            bucket_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
-            # close at bucket end + lateness; clamp above the current
-            # watermark (Spark rejects timeouts at/behind it) so a
-            # bucket fed by late-but-admitted data still closes next batch
-            state.setTimeoutTimestamp(
-                max(bucket_ms + span_ms + late_ms,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        yield emit(key, cnt, means, weights, False)
-
-    # the watermarked event-time column must SURVIVE the projection —
-    # the analyzer requires it in the stateful operator's child plan
+    State per (url, bucket) is the sketch itself, bounded by its ``k``
+    however many rows the bucket has seen. ``lateness`` (e.g.
+    ``"10 minutes"``) is the watermark delay: once the watermark passes
+    a bucket's end the bucket closes and its state is dropped, so state
+    row count tracks OPEN buckets. In ``append`` output mode (which
+    needs ``lateness``) each closed bucket is emitted once and can go
+    straight to the tier store; in ``update`` mode apply
+    ``sketch_quantiles`` to the output for running estimates. Fixed-width
+    ``freq`` only (a tumbling window needs an exact span)."""
+    f = parse_freq(freq)
+    if not f.is_fixed:
+        raise ValueError(f"streaming_sketch_tier needs a fixed-width freq: {freq!r}")
+    v = F.col(value_col).cast("double")
     src = stream_df.select(
         F.col(url_col).alias("url"),
         F.col(ts_col).alias("__ts__"),
-        floor_date(F.col(ts_col), freq).alias("bucket_ts"),
-        F.col(value_col).cast("double").alias("__v__"),
+        F.nanvl(v, F.lit(None).cast("double")).alias("__v__"),
     )
-    if late_ms is not None:
+    if lateness is not None:
         src = src.withWatermark("__ts__", lateness)
-    return src.groupBy("url", "bucket_ts").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if late_ms is not None else GroupStateTimeout.NoTimeout),
+    agg = src.groupBy(
+        "url", F.window("__ts__", f"{f.seconds} seconds").alias("w")
+    ).agg(
+        F.count("__v__").alias("cnt"),
+        F.kll_sketch_agg_double("__v__", KLL_K).alias("kll"),
     )
-
-
-def closed_tier_frame(df: DataFrame) -> DataFrame:
-    """Project a ``streaming_sketch_tier(lateness=...)`` output (or one
-    ``foreachBatch`` micro-batch of it) onto the CLOSED buckets in the
-    batch sketch-tier schema ``(url, bucket_ts, cnt, qs_means,
-    qs_weights)`` — directly unionable with ``rollup_sketch_tier``
-    output and mergeable into coarser tiers via
-    ``rollup_sketch_tier_to_tier`` (no raw re-scan)."""
-    return df.filter(F.col("closed")).select(
-        "url", "bucket_ts", "cnt", "qs_means", "qs_weights"
+    return agg.select(
+        "url", F.col("w.start").alias("bucket_ts"), "cnt", "kll"
     )

@@ -138,7 +138,7 @@ def test_future_frame_monthly(spark):
 def test_pad_by_time_group_constant_ffill(spark):
     """Reference pad.py:431-438: columns constant WITHIN a group (by
     nunique(dropna=False)==1) are filled into inserted rows; varying
-    columns stay NULL; fill_group_constants=False disables it."""
+    columns stay NULL."""
     pdf = pd.DataFrame(
         {
             "date": pd.to_datetime(
@@ -161,12 +161,3 @@ def test_pad_by_time_group_constant_ffill(spark):
     a = out[out["group"] == "A"]
     assert a["label"].tolist() == ["x"] * 4          # constant filled
     assert a["value"].isna().sum() == 2              # varying stays NULL
-
-    off = (
-        pad_by_time(
-            sdf, "date", freq="D", group_cols=["group"],
-            fill_group_constants=False,
-        )
-        .toPandas()
-    )
-    assert off[off["group"] == "A"]["label"].isna().sum() == 2

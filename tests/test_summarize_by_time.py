@@ -101,6 +101,31 @@ def test_grouped_wide_lambda_agg(sbt_data):
     assert_pdf_equal(pdf[cols], expected[cols])
 
 
+def test_grouped_wide_lambda_agg_names_like_sql_path(spark):
+    """A group value that itself ends in ``_{value}_{agg}`` keeps its
+    full name in the wide columns, on the callable path as on the SQL
+    path: positional renaming, no suffix matching."""
+    pdf = pd.DataFrame(
+        {
+            "date": pd.to_datetime(["2020-01-01", "2020-01-02"] * 2),
+            "g": ["east_v_q25", "east_v_q25", "west", "west"],
+            "v": [1.0, 3.0, 5.0, 9.0],
+        }
+    )
+    sdf = spark.createDataFrame(pdf)
+
+    def wide(agg):
+        return summarize_by_time(
+            sdf, "date", "v", group_cols=["g"], freq="MS",
+            agg_func=[agg], wide_format=True,
+        ).toPandas()
+
+    got = wide(("q25", lambda s: s.quantile(0.25)))
+    want = wide(("q25", 0.25))
+    assert list(got.columns) == ["date", "v_q25_east_v_q25", "v_q25_west"]
+    assert_pdf_equal(got, want)
+
+
 def test_grouped_long(sbt_data):
     result = summarize_by_time(
         sbt_data, "date", "value", group_cols=["groups"], freq="MS", agg_func="sum"
