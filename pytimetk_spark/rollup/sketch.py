@@ -25,7 +25,7 @@ What a KLL quantile is:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pytimetk_spark.functions.datetime import floor_date
@@ -33,6 +33,15 @@ from pytimetk_spark.functions.datetime import floor_date
 # k=400 keeps the worst rank error near 0.002 for one sketch and for a
 # merge of 24 (7.9 KB each); Spark's default k=200 reaches 0.004.
 KLL_K = 400
+
+
+def kll_aggs(value_col: str) -> list[Column]:
+    """``cnt`` and ``kll`` aggregates over a double column. NaN counts as
+    missing like NULL: the sketch skips NaN while ``count`` would not,
+    and an empty sketch must keep ``cnt`` 0 (see ``sketch_quantiles``)."""
+    v = F.nanvl(F.col(value_col), F.lit(None).cast("double"))
+    return [F.count(v).alias("cnt"),
+            F.kll_sketch_agg_double(v, KLL_K).alias("kll")]
 
 
 def rollup_sketch_tier(
@@ -46,18 +55,14 @@ def rollup_sketch_tier(
     value per tier bucket. NULL and NaN values are skipped; ``cnt``
     counts the rest."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
-    v = value.cast("double")
     return (
         df.select(
             F.col(url_col).alias("url"),
             floor_date(F.col(ts_col), freq).alias("bucket_ts"),
-            F.nanvl(v, F.lit(None).cast("double")).alias("__v__"),
+            value.cast("double").alias("__v__"),
         )
         .groupBy("url", "bucket_ts")
-        .agg(
-            F.count("__v__").alias("cnt"),
-            F.kll_sketch_agg_double("__v__", KLL_K).alias("kll"),
-        )
+        .agg(*kll_aggs("__v__"))
     )
 
 

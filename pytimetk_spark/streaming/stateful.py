@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 
 from pytimetk_spark.config import drop_spark_zip_finders
 from pytimetk_spark.functions.datetime import parse_freq
-from pytimetk_spark.rollup.sketch import KLL_K
+from pytimetk_spark.rollup.sketch import kll_aggs
 
 _DUR_UNITS_MS = {
     "ms": 1, "millisecond": 1, "milliseconds": 1,
@@ -238,20 +238,16 @@ def streaming_sketch_tier(
     f = parse_freq(freq)
     if not f.is_fixed:
         raise ValueError(f"streaming_sketch_tier needs a fixed-width freq: {freq!r}")
-    v = F.col(value_col).cast("double")
     src = stream_df.select(
         F.col(url_col).alias("url"),
         F.col(ts_col).alias("__ts__"),
-        F.nanvl(v, F.lit(None).cast("double")).alias("__v__"),
+        F.col(value_col).cast("double").alias("__v__"),
     )
     if lateness is not None:
         src = src.withWatermark("__ts__", lateness)
     agg = src.groupBy(
         "url", F.window("__ts__", f"{f.seconds} seconds").alias("w")
-    ).agg(
-        F.count("__v__").alias("cnt"),
-        F.kll_sketch_agg_double("__v__", KLL_K).alias("kll"),
-    )
+    ).agg(*kll_aggs("__v__"))
     return agg.select(
         "url", F.col("w.start").alias("bucket_ts"), "cnt", "kll"
     )
